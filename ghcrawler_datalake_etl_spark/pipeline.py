@@ -10,9 +10,10 @@ Scale/plan notes:
 - The day's staging partition is scanned once and cached (the reference
   re-scans it per section - quirk Q6, SURVEY.md 2.11); each entity filter
   then prunes from memory.
-- Missing JSON paths project as typed NULLs (the reference's ``Get*``
-  helpers are total - SURVEY.md 1.3), so schema drift across crawl days
-  cannot fail the pipeline.
+- Each entity family parses with the schema the catalog fixes for it
+  (``plans.catalog.ENTITY_SCHEMAS``, SURVEY.md 1.3), so every path a spec
+  reads exists; absent and malformed values project as typed NULLs (the
+  reference's ``Get*`` are total), whatever the day holds.
 - Writes go through the atomic-swap catalog (fixes Q8) with file counts
   scaled by the reference's relative-size hints.
 """
@@ -35,7 +36,16 @@ from ghcrawler_datalake_etl_spark.operators.patterns import (
     traffic_series,
     version_log,
 )
-from ghcrawler_datalake_etl_spark.plans.catalog import CATALOG, EntitySpec, Field
+from ghcrawler_datalake_etl_spark.plans.catalog import (
+    CATALOG,
+    ENTITY_SCHEMAS,
+    ORIGIN_PATH,
+    RESOURCES_PATH,
+    UNIQUE_PATH,
+    EntitySpec,
+    Field,
+    entity_schemas,
+)
 from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
 from ghcrawler_datalake_etl_spark.sources.staging import parse_entity, read_staging
 
@@ -44,7 +54,6 @@ _TYPE = {
     "long": T.LongType(),
     "boolean": T.BooleanType(),
     "timestamp": T.TimestampType(),
-    "pii": T.StringType(),
 }
 
 # Envelope columns every curated table carries, from staging metadata
@@ -53,34 +62,13 @@ _TYPE = {
 _ENVELOPE = ("EtlSourceId", "EtlIngestDate", "FetchedAt", "ProcessedAt", "DeletedAt")
 
 
-def _has_path(dtype: T.DataType, path: list[str]) -> bool:
-    for part in path:
-        if not isinstance(dtype, T.StructType) or part not in dtype.fieldNames():
-            return False
-        dtype = dtype[part].dataType
-    return True
-
-
-def safe_field(df: DataFrame, root: str, fld: Field, scrub_pii: bool = True) -> Column:
-    """Typed path extraction, total like the reference's Utility.Get*:
-    absent path -> typed NULL, malformed value -> typed NULL (SURVEY.md
-    2.6 F1-F6). try_cast, not cast: under ANSI mode (Spark 4 default) a
-    plain cast would abort the whole daily run on one bad document."""
-    root_type = df.schema[root].dataType
-    parts = fld.path.split(".")
-    if not _has_path(root_type, parts):
-        return F.lit(None).cast(_TYPE[fld.type]).alias(fld.name)
+def typed_field(root: str, fld: Field, scrub_pii: bool = True) -> Column:
+    """Typed path extraction, total like the reference's Utility.Get*: a
+    path a document lacks parses to NULL under the declared schema, and a
+    malformed value casts to a typed NULL (SURVEY.md 2.6 F1-F6). try_cast,
+    not cast: under ANSI mode (Spark 4 default) a plain cast would abort
+    the whole daily run on one bad document."""
     col = F.col(f"{root}.{fld.path}")
-    if fld.type == "pii":
-        return get_pii(col, scrub=scrub_pii).alias(fld.name)
-    return col.try_cast(_TYPE[fld.type]).alias(fld.name)
-
-
-def _element_field(elem_type: T.DataType, fld: Field, scrub_pii: bool) -> Column:
-    parts = fld.path.split(".")
-    if not _has_path(elem_type, parts):
-        return F.lit(None).cast(_TYPE[fld.type]).alias(fld.name)
-    col = F.col(f"element.{fld.path}")
     if fld.type == "pii":
         return get_pii(col, scrub=scrub_pii).alias(fld.name)
     return col.try_cast(_TYPE[fld.type]).alias(fld.name)
@@ -129,7 +117,7 @@ def project_entity(
 ) -> DataFrame:
     """Wide typed projection over the parsed entity rows (P7)."""
     cols = _envelope_cols(with_urn=True) + [
-        safe_field(entity_day, "data", f, scrub_pii) for f in spec.fields
+        typed_field("data", f, scrub_pii) for f in spec.fields
     ]
     return entity_day.select(*cols)
 
@@ -154,20 +142,12 @@ def build_table(
         )
 
     if spec.pattern == "B":
-        filtered = entity_day
         # Dedup parents BEFORE exploding (ref keeps RowNumber==1 inside the
         # explode filter, /root/reference/USQL/ProcessDaily.usql:292).
-        parent_keys = [
-            f.name for f in spec.fields if f.name in spec.key
-        ] or list(spec.key)
-        parents = filtered.select(
+        parents = entity_day.select(
             *_envelope_cols(),
-            *[safe_field(filtered, "data", f, scrub_pii) for f in spec.fields],
-            F.col(f"data.{spec.array_path}").alias("_array")
-            if _has_path(filtered.schema["data"].dataType, spec.array_path.split("."))
-            else F.lit(None)
-            .cast(T.ArrayType(T.StringType()))
-            .alias("_array"),
+            *[typed_field("data", f, scrub_pii) for f in spec.fields],
+            F.col(f"data.{spec.array_path}").alias("_array"),
         )
         dedup_keys = [k for k in spec.key if k in parents.columns] or ["EtlSourceId"]
         parents = latest_by(parents, dedup_keys, [_touched(), F.col("FetchedAt")])
@@ -177,10 +157,9 @@ def build_table(
             [c for c in parents.columns if c != "_array"],
             spec.child_id,
         )
-        elem_type = exploded.schema["element"].dataType
         new_df = exploded.select(
             *[c for c in exploded.columns if c != "element"],
-            *[_element_field(elem_type, f, scrub_pii) for f in spec.element_fields],
+            *[typed_field("element", f, scrub_pii) for f in spec.element_fields],
         )
         if spec.extra.get("ordinal_internal"):
             # the reference's final projection overwrites the explode
@@ -204,21 +183,13 @@ def build_table(
         return new_df.unionByName(carryover, allowMissingColumns=True)
 
     if spec.pattern == "C":
-        filtered = entity_day
         origin_like = spec.extra.get("origin_like")
         # Collection pages carry origin (owner) + resources (member hrefs)
         # links (/root/reference/USQL/ProcessDaily.usql:39-61).
-        data_type = filtered.schema["data"].dataType
-        res_path = "_metadata.links.resources.hrefs"
-        resources = (
-            F.col(f"data.{res_path}")
-            if _has_path(data_type, res_path.split("."))
-            else F.lit(None).cast(T.ArrayType(T.StringType()))
-        )
-        pages = filtered.select(
-            safe_field(filtered, "data", Field(spec.origin_col, "_metadata.links.origin.href")),
-            safe_field(filtered, "data", Field("UniqueUrn", "_metadata.links.unique.href")),
-            resources.alias("resources"),
+        pages = entity_day.select(
+            typed_field("data", Field(spec.origin_col, ORIGIN_PATH)),
+            typed_field("data", Field("UniqueUrn", UNIQUE_PATH)),
+            F.col(f"data.{RESOURCES_PATH}").alias("resources"),
             F.col("processed_at").alias("ProcessedAt"),
             F.col("fetched_at").alias("FetchedAt"),
             F.col("ingest_date").try_cast("timestamp").alias("EtlIngestDate"),
@@ -241,18 +212,16 @@ def build_table(
         return members
 
     if spec.pattern == "D":
-        filtered = entity_day
-        base = filtered.select(
+        base = entity_day.select(
             *_envelope_cols(with_urn=True),
-            *[safe_field(filtered, "data", f, scrub_pii) for f in spec.fields],
+            *[typed_field("data", f, scrub_pii) for f in spec.fields],
             F.posexplode_outer(F.col(f"data.{spec.array_path}")).alias(
                 "_pos", "element"
             ),
         ).filter(F.col("element").isNotNull())
-        elem_type = base.schema["element"].dataType
         new_df = base.select(
             *[c for c in base.columns if c not in ("element", "_pos")],
-            *[_element_field(elem_type, f, scrub_pii) for f in spec.element_fields],
+            *[typed_field("element", f, scrub_pii) for f in spec.element_fields],
         )
         unordered = bool(spec.extra.get("unordered_dedup"))
         return traffic_series(
@@ -320,15 +289,16 @@ def run_daily(
     specs: tuple[EntitySpec, ...] = CATALOG,
     scrub_pii: bool = True,
     init_mode: bool = False,
-    entity_schemas: dict | None = None,
     incremental: bool = False,
 ) -> list[str]:
     """Run every spec for one day (ProcessDaily); ``init_mode`` ignores
     previous snapshots (CreateAndInitialize* backfill path).
 
-    ``entity_schemas`` maps ``spec.entity_filter`` -> DDL schema string
-    for the production no-inference path (SURVEY.md 1.3); unregistered
-    entities fall back to per-day inference (sources.staging.parse_entity).
+    Each entity family is parsed once, with the schema its specs declare
+    (``plans.catalog.ENTITY_SCHEMAS``, built at import; specs outside the
+    catalog get theirs built here). A family absent from the day parses
+    to no rows, so its tables are rebuilt from the previous snapshot
+    alone.
 
     ``incremental=True`` routes the keyed snapshot patterns (A/E)
     through ``build_delta`` + ``merge_upsert``: only the hash buckets
@@ -339,7 +309,9 @@ def run_daily(
     parent document / collection page, not a row key).
     """
     staging_day = read_staging(spark, staging_path, ingest_date).cache()  # Q6
-    entity_schemas = entity_schemas or {}
+    schemas = (
+        ENTITY_SCHEMAS if all(s in CATALOG for s in specs) else entity_schemas(specs)
+    )
     parsed: dict = {}  # one parse per entity family, shared across specs (Q6)
     built = []
     try:
@@ -347,9 +319,7 @@ def run_daily(
             fkey = spec.entity_filter
             if fkey not in parsed:
                 filtered = staging_day.filter(_entity_filter(spec))
-                parsed[fkey] = parse_entity(
-                    spark, filtered, schema=entity_schemas.get(fkey)
-                ).cache()
+                parsed[fkey] = parse_entity(spark, filtered, schemas[fkey]).cache()
             previous = None if init_mode else catalog.read_or_none(spec.table)
             if incremental and spec.pattern in ("A", "E"):
                 # first run bootstraps the bucketed layout through the

@@ -23,6 +23,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_driver_memory() -> str:
+    """Half the host's RAM, at most 48g: in local mode the executors run
+    inside the driver JVM, and the Python workers need the other half."""
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(48, ram_gib // 2))}g"
+
+
 def get_spark(
     app_name: str = "ghcrawler-datalake-etl-spark",
     master: str | None = None,
@@ -31,13 +38,15 @@ def get_spark(
 ) -> SparkSession:
     """Create (or reuse) the engine's SparkSession.
 
-    Local-mode defaults suit the test harness; on a real cluster the
-    master/memory settings come from spark-submit and only the SQL confs
-    below matter. Every conf here is also safe to set on an existing
-    session via ``spark.conf`` except the memory ones, which are ignored
-    after JVM start.
+    Local-mode defaults come from the host: ``local[<cpu count>]`` and
+    ``default_driver_memory()``, unless ``SPARK_GRAFT_CPUS`` /
+    ``SPARK_GRAFT_DRIVER_MEM`` (or ``master`` / ``extra_conf``) say
+    otherwise. On a real cluster the master/memory settings come from
+    spark-submit and only the SQL confs below matter. Every conf here is
+    also safe to set on an existing session via ``spark.conf`` except the
+    memory ones, which are ignored after JVM start.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
@@ -69,7 +78,10 @@ def get_spark(
         # is reference-style single-zone UTC (CreateGitHubDataTable
         # .usql:18-20): read every naive timestamp as UTC TIMESTAMP.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # Whole-stage codegen emits one large class per stage; a workload
         # with many wide queries overflows the JVM's default 240m JIT
         # code cache, silently disabling compilation for everything after

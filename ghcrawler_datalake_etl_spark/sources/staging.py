@@ -23,6 +23,11 @@ table the first time two days disagree on a field's type).
 - Path-pattern virtual columns ``{IngestDate:yyyy}/{MM}/{dd}/{FileName}``
   (:17-21) become the partition directory + ``input_file_name()``.
 
+Typed extraction (``parse_entity``) parses an entity family with the
+schema the catalog declares for it (``plans.catalog.ENTITY_SCHEMAS``),
+never one inferred from the day, so no day - even one lacking the
+family - pays an extra pass or parses to a different schema.
+
 Scale: the daily curation reads exactly one ``ingest_date`` partition
 (partition pruning); within a partition, work parallelizes by file split
 (``spark.sql.files.maxPartitionBytes``) with no repartition. Raw-string
@@ -34,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Fixed staging schema (SURVEY.md 1.1 / FIXTURES.md section 1), mirroring
 # Staging.GHCrawler.GitHubData (/root/reference/USQL/CreateGitHubDataTable.usql:15-27).
@@ -124,25 +130,17 @@ def read_staging(
 def parse_entity(
     spark: SparkSession,
     filtered: DataFrame,
-    schema: str | None = None,
+    schema: StructType,
 ) -> DataFrame:
-    """Typed parse of one entity's raw documents: adds a ``data`` struct.
+    """Typed parse of one entity family's raw documents: replaces
+    ``data_raw`` with a ``data`` struct.
 
-    With a registered ``schema`` (production path - SURVEY.md 1.3: one
-    explicit StructType per entity, never inference in production), this
-    is a single JVM-side ``from_json``. Without one, the schema is
-    inferred from the day's documents of this entity (an extra pass over
-    just those rows - acceptable for fixtures/backfills, avoidable at
-    scale by registering schemas).
+    ``schema`` is the family's catalog schema
+    (``plans.catalog.ENTITY_SCHEMAS``) - SURVEY.md 1.3: one explicit
+    StructType per entity, never inference in production - so this is a
+    single lazy JVM-side ``from_json`` whatever the day holds. ``spark``
+    is unused; it keeps the signature of the other staging entry points.
     """
-    if schema is None:
-        docs = filtered.select("data_raw")
-        inferred = spark.read.json(docs.rdd.map(lambda r: r[0]))
-        if not inferred.schema.fields:  # no rows today
-            inferred_schema = "struct<_absent: string>"
-        else:
-            inferred_schema = inferred.schema.simpleString()
-        schema = inferred_schema
     return filtered.withColumn("data", F.from_json(F.col("data_raw"), schema)).drop(
         "data_raw"
     )
