@@ -139,7 +139,7 @@ def parse_entity(
     (``plans.catalog.ENTITY_SCHEMAS``) - SURVEY.md 1.3: one explicit
     StructType per entity, never inference in production - so this is a
     single lazy JVM-side ``from_json`` whatever the day holds. ``spark``
-    is unused; it keeps the signature of the other staging entry points.
+    is unused, kept so existing callers of this signature still work.
     """
     return filtered.withColumn("data", F.from_json(F.col("data_raw"), schema)).drop(
         "data_raw"
