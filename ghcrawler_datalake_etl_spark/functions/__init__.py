@@ -1,7 +1,6 @@
 from ghcrawler_datalake_etl_spark.functions.core import (
     get_bool,
     get_long,
-    get_pii,
     get_string,
     get_timestamp,
     greatest_touched,
@@ -13,7 +12,6 @@ from ghcrawler_datalake_etl_spark.functions.core import (
 __all__ = [
     "get_bool",
     "get_long",
-    "get_pii",
     "get_string",
     "get_timestamp",
     "greatest_touched",

@@ -134,11 +134,6 @@ def pii_hash(col: ColumnOrName) -> Column:
     return F.when(c.isNull(), F.lit(None).cast("string")).otherwise(F.sha2(c, 256))
 
 
-def get_pii(col: ColumnOrName, scrub: bool = True) -> Column:
-    """GetPiiString: pass-through when ``scrub`` is off (compat mode)."""
-    return pii_hash(col) if scrub else get_string(col)
-
-
 def greatest_touched(deleted_at: ColumnOrName, processed_at: ColumnOrName) -> Column:
     """The reference's "last touched" ordering timestamp.
 

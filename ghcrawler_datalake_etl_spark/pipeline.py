@@ -25,9 +25,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ghcrawler_datalake_etl_spark.functions.core import (
-    get_pii,
     greatest_touched,
     latest_by,
+    pii_hash,
 )
 from ghcrawler_datalake_etl_spark.operators.patterns import (
     array_child,
@@ -62,15 +62,16 @@ _TYPE = {
 _ENVELOPE = ("EtlSourceId", "EtlIngestDate", "FetchedAt", "ProcessedAt", "DeletedAt")
 
 
-def typed_field(root: str, fld: Field, scrub_pii: bool = True) -> Column:
+def typed_field(root: str, fld: Field) -> Column:
     """Typed path extraction, total like the reference's Utility.Get*: a
     path a document lacks parses to NULL under the declared schema, and a
     malformed value casts to a typed NULL (SURVEY.md 2.6 F1-F6). try_cast,
     not cast: under ANSI mode (Spark 4 default) a plain cast would abort
-    the whole daily run on one bad document."""
+    the whole daily run on one bad document. ``pii`` fields are always
+    pseudonymized (``pii_hash``, the reference's GetPiiString)."""
     col = F.col(f"{root}.{fld.path}")
     if fld.type == "pii":
-        return get_pii(col, scrub=scrub_pii).alias(fld.name)
+        return pii_hash(col).alias(fld.name)
     return col.try_cast(_TYPE[fld.type]).alias(fld.name)
 
 
@@ -112,12 +113,10 @@ def _touched() -> Column:
     return greatest_touched("DeletedAt", "ProcessedAt")
 
 
-def project_entity(
-    entity_day: DataFrame, spec: EntitySpec, scrub_pii: bool = True
-) -> DataFrame:
+def project_entity(entity_day: DataFrame, spec: EntitySpec) -> DataFrame:
     """Wide typed projection over the parsed entity rows (P7)."""
     cols = _envelope_cols(with_urn=True) + [
-        typed_field("data", f, scrub_pii) for f in spec.fields
+        typed_field("data", f) for f in spec.fields
     ]
     return entity_day.select(*cols)
 
@@ -126,13 +125,12 @@ def build_table(
     spec: EntitySpec,
     entity_day: DataFrame,
     previous: DataFrame | None,
-    scrub_pii: bool = True,
 ) -> DataFrame:
     """Compute the new full snapshot for one spec (one ProcessDaily
     section). ``entity_day`` is the day's staging rows already filtered
     to the spec's entity family and parsed (``data`` struct present)."""
     if spec.pattern == "A":
-        new_df = project_entity(entity_day, spec, scrub_pii)
+        new_df = project_entity(entity_day, spec)
         return snapshot_upsert(
             new_df,
             previous,
@@ -146,7 +144,7 @@ def build_table(
         # explode filter, /root/reference/USQL/ProcessDaily.usql:292).
         parents = entity_day.select(
             *_envelope_cols(),
-            *[typed_field("data", f, scrub_pii) for f in spec.fields],
+            *[typed_field("data", f) for f in spec.fields],
             F.col(f"data.{spec.array_path}").alias("_array"),
         )
         dedup_keys = [k for k in spec.key if k in parents.columns] or ["EtlSourceId"]
@@ -159,7 +157,7 @@ def build_table(
         )
         new_df = exploded.select(
             *[c for c in exploded.columns if c != "element"],
-            *[typed_field("element", f, scrub_pii) for f in spec.element_fields],
+            *[typed_field("element", f) for f in spec.element_fields],
         )
         if spec.extra.get("ordinal_internal"):
             # the reference's final projection overwrites the explode
@@ -214,14 +212,14 @@ def build_table(
     if spec.pattern == "D":
         base = entity_day.select(
             *_envelope_cols(with_urn=True),
-            *[typed_field("data", f, scrub_pii) for f in spec.fields],
+            *[typed_field("data", f) for f in spec.fields],
             F.posexplode_outer(F.col(f"data.{spec.array_path}")).alias(
                 "_pos", "element"
             ),
         ).filter(F.col("element").isNotNull())
         new_df = base.select(
             *[c for c in base.columns if c not in ("element", "_pos")],
-            *[typed_field("element", f, scrub_pii) for f in spec.element_fields],
+            *[typed_field("element", f) for f in spec.element_fields],
         )
         unordered = bool(spec.extra.get("unordered_dedup"))
         return traffic_series(
@@ -232,7 +230,7 @@ def build_table(
         )
 
     if spec.pattern == "E":
-        new_df = project_entity(entity_day, spec, scrub_pii)
+        new_df = project_entity(entity_day, spec)
         return version_log(
             new_df,
             previous,
@@ -248,7 +246,6 @@ def build_delta(
     spec: EntitySpec,
     entity_day: DataFrame,
     previous: DataFrame,
-    scrub_pii: bool = True,
 ) -> DataFrame:
     """Incremental form of build_table for the keyed snapshot patterns
     (A/E): the merged result restricted to the keys the day TOUCHES.
@@ -266,7 +263,7 @@ def build_delta(
     """
     if spec.pattern not in ("A", "E"):
         raise ValueError(f"build_delta supports patterns A/E, not {spec.pattern}")
-    new_df = project_entity(entity_day, spec, scrub_pii)
+    new_df = project_entity(entity_day, spec)
     keys = list(spec.key)
     prev_subset = previous.join(
         F.broadcast(new_df.select(*keys).distinct()), keys, "left_semi"
@@ -287,7 +284,6 @@ def run_daily(
     ingest_date: str,
     catalog: ParquetCatalog,
     specs: tuple[EntitySpec, ...] = CATALOG,
-    scrub_pii: bool = True,
     init_mode: bool = False,
     incremental: bool = False,
 ) -> list[str]:
@@ -319,19 +315,19 @@ def run_daily(
             fkey = spec.entity_filter
             if fkey not in parsed:
                 filtered = staging_day.filter(_entity_filter(spec))
-                parsed[fkey] = parse_entity(spark, filtered, schemas[fkey]).cache()
+                parsed[fkey] = parse_entity(filtered, schemas[fkey]).cache()
             previous = None if init_mode else catalog.read_or_none(spec.table)
             if incremental and spec.pattern in ("A", "E"):
                 # first run bootstraps the bucketed layout through the
                 # same sink, so day 2 is already link-incremental
                 delta = (
-                    build_table(spec, parsed[fkey], None, scrub_pii)
+                    build_table(spec, parsed[fkey], None)
                     if previous is None
-                    else build_delta(spec, parsed[fkey], previous, scrub_pii)
+                    else build_delta(spec, parsed[fkey], previous)
                 )
                 catalog.merge_upsert(delta, spec.table, list(spec.key))
             else:
-                snapshot = build_table(spec, parsed[fkey], previous, scrub_pii)
+                snapshot = build_table(spec, parsed[fkey], previous)
                 catalog.overwrite(
                     snapshot,
                     spec.table,

@@ -9,8 +9,21 @@ Spark's read-then-overwrite hazard (pattern A unions the very table it
 replaces - SURVEY.md 7.4.6): the read plan streams from v<n> while the
 write lands in v<n+1>, no checkpoint/materialization needed.
 
-This is a deliberately minimal stand-in for Delta/Iceberg (whose jars are
-not in this environment); on a real deployment the catalog maps 1:1 onto
+On-disk contract of one table directory:
+
+- ``_CURRENT`` - the committed version number, replaced atomically;
+- ``v<n>/`` - one snapshot version: the data files (bucketed tables
+  under ``_kb=<bucket>/`` partition directories) plus ``_SCHEMA.json``,
+  the schema of the frame written, recorded at commit. Every read loads
+  with that schema - no footer inference (Delta Lake records the table
+  schema in the commit, not the data files, VLDB'20);
+- ``_MERGE_META.json`` - present only while the current version is a
+  ``merge_upsert`` bucket layout: ``key_cols``, ``num_buckets``,
+  ``bucket_cols``.
+
+``_``-prefixed files are invisible to Spark's file readers. This is a
+deliberately minimal stand-in for Delta/Iceberg (whose jars are not in
+this environment); on a real deployment the catalog maps 1:1 onto
 ``MERGE INTO`` / ``replaceWhere``.
 """
 
@@ -21,9 +34,9 @@ import os
 import shutil
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType
+from pyspark.sql.types import ArrayType, StructType
 
 from ghcrawler_datalake_etl_spark.functions.concurrency import (
     run_concurrently,
@@ -31,11 +44,34 @@ from ghcrawler_datalake_etl_spark.functions.concurrency import (
 
 _POINTER = "_CURRENT"
 _MERGE_META = "_MERGE_META.json"
+_SCHEMA = "_SCHEMA.json"
 _BUCKET_COL = "_kb"
+
+
+def _bucket(cols: Sequence[str], num_buckets: int) -> Column:
+    """The ``_kb`` hash bucket a row lands in under a merge layout."""
+    return F.pmod(
+        F.xxhash64(*[F.col(c) for c in cols]), F.lit(num_buckets)
+    ).cast("int")
+
+
+def _write_atomic(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` through a temp file and a rename."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 class ParquetCatalog:
     """Warehouse of versioned parquet tables with atomic snapshot swap.
+
+    Every write (``overwrite``, ``merge_upsert`` and what builds on
+    them) lands a new ``v<n>/`` directory and publishes it through one
+    commit: record the version's schema in ``v<n>/_SCHEMA.json``, write
+    (merge) or drop (overwrite) the layout in ``_MERGE_META.json``, flip
+    ``_CURRENT``, vacuum. Every read resolves one version directory and
+    loads it with its recorded schema.
 
     ``retain`` keeps that many trailing snapshots per table (>=1): the
     previous version staying on disk is what makes the swap safe for a
@@ -73,9 +109,6 @@ class ParquetCatalog:
         self.data_format = data_format
         os.makedirs(warehouse, exist_ok=True)
 
-    def _read_files(self, path: str) -> DataFrame:
-        return self.spark.read.format(self.data_format).load(path)
-
     def _table_dir(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
 
@@ -86,14 +119,28 @@ class ParquetCatalog:
         with open(ptr) as f:
             return int(f.read().strip())
 
+    def _version_dir(self, name: str, version: int | None = None) -> str:
+        """Directory of the current version, or of retained ``version``;
+        FileNotFoundError when it is not on disk."""
+        if version is None:
+            version = self._current_version(name)
+            if version is None:
+                raise FileNotFoundError(
+                    f"table {name} not in catalog {self.warehouse}"
+                )
+        path = os.path.join(self._table_dir(name), f"v{version}")
+        if not os.path.isdir(path):
+            raise FileNotFoundError(
+                f"table {name} version {version} not retained "
+                f"(have {self.versions(name)})"
+            )
+        return path
+
     def current_path(self, name: str) -> str | None:
-        v = self._current_version(name)
-        if v is None:
-            return None
-        return os.path.join(self._table_dir(name), f"v{v}")
+        return self._version_dir(name) if self.exists(name) else None
 
     def exists(self, name: str) -> bool:
-        return self.current_path(name) is not None
+        return self._current_version(name) is not None
 
     def versions(self, name: str) -> list[int]:
         """Snapshot versions still on disk, oldest first."""
@@ -106,32 +153,31 @@ class ParquetCatalog:
             if d.startswith("v") and d[1:].isdigit()
         )
 
+    @staticmethod
+    def _schema(path: str) -> StructType:
+        """The schema recorded when version directory ``path`` was
+        committed (bucketed versions include ``_kb``)."""
+        with open(os.path.join(path, _SCHEMA)) as f:
+            return StructType.fromJson(json.load(f))
+
+    def _load(self, path: str) -> DataFrame:
+        """One version directory, loaded with its recorded schema: no
+        footer read on the driver, and an all-empty version reads as an
+        empty frame."""
+        return (
+            self.spark.read.format(self.data_format)
+            .schema(self._schema(path))
+            .load(path)
+        )
+
     def read(self, name: str, version: int | None = None) -> DataFrame:
         """Read the current snapshot, or time-travel to ``version``
         (must still be retained - see ``retain`` / ``vacuum``)."""
-        if version is None:
-            path = self.current_path(name)
-            if path is None:
-                raise FileNotFoundError(
-                    f"table {name} not in catalog {self.warehouse}"
-                )
-        else:
-            path = os.path.join(self._table_dir(name), f"v{version}")
-            if not os.path.isdir(path):
-                raise FileNotFoundError(
-                    f"table {name} version {version} not retained "
-                    f"(have {self.versions(name)})"
-                )
-        df = self._read_snapshot(name, path)
         # merged tables carry the internal hash-bucket partition column
-        return df.drop(_BUCKET_COL) if _BUCKET_COL in df.columns else df
+        return self._load(self._version_dir(name, version)).drop(_BUCKET_COL)
 
     def read_or_none(self, name: str) -> DataFrame | None:
-        path = self.current_path(name)
-        if path is None:
-            return None
-        df = self._read_snapshot(name, path)
-        return df.drop(_BUCKET_COL) if _BUCKET_COL in df.columns else df
+        return self.read(name) if self.exists(name) else None
 
     def _bucket_ids_multi(
         self,
@@ -145,14 +191,11 @@ class ParquetCatalog:
         VERDICT r14 #1: the folds' cost is action count x fixed
         per-job latency). Output size is bounded by
         ``sum(num_buckets)`` ints, never by ``df``."""
-        parts = []
-        for i, (cols, n) in enumerate(specs):
-            b = F.pmod(
-                F.xxhash64(*[F.col(c) for c in cols]), F.lit(n)
-            ).cast("int")
-            parts.append(
-                df.select(F.lit(i).alias("_s"), b.alias("_b")).distinct()
-            )
+        parts = [
+            df.select(F.lit(i).alias("_s"), _bucket(cols, n).alias("_b"))
+            .distinct()
+            for i, (cols, n) in enumerate(specs)
+        ]
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)
@@ -175,9 +218,8 @@ class ParquetCatalog:
         meta = self._merge_meta(name)
         return (
             meta is not None
-            and meta.get("num_buckets") == num_buckets
-            and (meta.get("bucket_cols") or meta["key_cols"])
-            == list(bucket_cols)
+            and meta["num_buckets"] == num_buckets
+            and meta["bucket_cols"] == list(bucket_cols)
         )
 
     def read_pruned(
@@ -190,12 +232,13 @@ class ParquetCatalog:
         """Read ONLY the hash buckets the probe's bucket-column values
         land in - the partition-pruned point-lookup over a merged table
         (primary-key layout, or a ``bucket_cols`` secondary-index
-        layout). The probe must carry the table's bucket columns; its
-        distinct BUCKET IDS are collected driver-side (<= num_buckets
-        ints - bounded by construction, not by feed size), the snapshot
-        scan filters ``_kb IN (...)`` so parquet partition pruning
-        skips every other bucket directory, and survivors LEFT SEMI
-        join (broadcast - probes are delta/feed-sized) the probe's
+        layout, both taken from ``_MERGE_META.json``). The probe must
+        carry the table's bucket columns; its distinct BUCKET IDS are
+        collected driver-side (<= num_buckets ints - bounded by
+        construction, not by feed size), the version is loaded with its
+        recorded schema and filtered ``_kb IN (...)`` so partition
+        pruning skips every other bucket directory, and survivors LEFT
+        SEMI join (broadcast - probes are delta/feed-sized) the probe's
         distinct bucket-col values so only matching rows return. At
         100 TB this is the point of the layout: a fold's standing-side
         read costs O(touched buckets), never a table scan. Returns
@@ -224,98 +267,49 @@ class ParquetCatalog:
                 f"read_pruned needs a merged table; {name!r} has no "
                 "merge metadata"
             )
-        bucket_cols = meta.get("bucket_cols") or meta["key_cols"]
-        bucket = F.pmod(
-            F.xxhash64(*[F.col(c) for c in bucket_cols]),
-            F.lit(meta["num_buckets"]),
-        ).cast("int")
-        if version is None:
-            path = self.current_path(name)
-            if path is None:
-                return None
-        else:
-            path = os.path.join(self._table_dir(name), f"v{version}")
-            if not os.path.isdir(path):
-                raise FileNotFoundError(
-                    f"table {name} version {version} not retained "
-                    f"(have {self.versions(name)})"
-                )
-        vals = probe.select(*bucket_cols).distinct()
-        if bucket_ids is not None:
-            ids = sorted(set(bucket_ids))
-        else:
-            ids = [
-                r[0]
-                for r in vals.select(bucket.alias("_b")).distinct().collect()
-            ]
-        df = self._read_snapshot(name, path)
-        if _BUCKET_COL in df.columns:
-            df = df.filter(F.col(_BUCKET_COL).isin(ids)).drop(_BUCKET_COL)
-        return df.join(F.broadcast(vals), bucket_cols, "semi")
-
-    def _read_snapshot(self, name: str, path: str) -> DataFrame:
-        """Read one snapshot dir; an all-empty snapshot (no data files
-        to infer a schema from) degrades to an empty frame with the
-        schema persisted in the merge metadata instead of throwing.
-
-        The fallback is gated on a directory listing CONFIRMING zero
-        data files: a transiently-unreadable but non-empty snapshot
-        must re-raise, never silently read as an empty table (a merge
-        bootstrapping off that empty read would persist the emptiness
-        as the next version - silent data loss).
-
-        Merged tables supply the EXPLICIT schema from the merge
-        metadata (logical columns + the ``_kb`` partition column):
-        schema inference reads a parquet footer on the driver per
-        ``spark.read.load`` (~60 ms each, measured), and the catalog
-        pipelines open snapshots dozens of times per run - the
-        persisted schema makes every one of those opens metadata-only.
-        An all-empty snapshot then simply reads as an empty frame, the
-        same answer the inference-failure fallback produced."""
-        from pyspark.errors import AnalysisException
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        meta = self._merge_meta(name)
-        # the explicit-schema path applies exactly to snapshots
-        # merge_upsert wrote (the _kb= layout on disk is the
-        # signature): their metadata schema is rewritten by every
-        # merge, so it cannot be stale. A plain-overwrite snapshot
-        # (no _kb dirs - e.g. an external bootstrap being re-bucketed)
-        # keeps the inference path, where the file footers are the
-        # only truth.
-        bucketed_on_disk = os.path.isdir(path) and any(
-            d.startswith(f"{_BUCKET_COL}=") for d in os.listdir(path)
+        if version is None and not self.exists(name):
+            return None
+        path = self._version_dir(name, version)
+        bucket_cols = meta["bucket_cols"]
+        if bucket_ids is None:
+            [bucket_ids] = self._bucket_ids_multi(
+                probe, [(bucket_cols, meta["num_buckets"])]
+            )
+        df = self._load(path).filter(
+            F.col(_BUCKET_COL).isin(sorted(set(bucket_ids)))
         )
-        if meta and meta.get("schema") and bucketed_on_disk:
-            logical = StructType.fromJson(json.loads(meta["schema"]))
-            physical = StructType(
-                [f for f in logical.fields if f.name != _BUCKET_COL]
-                + [StructField(_BUCKET_COL, IntegerType())]
-            )
-            return (
-                self.spark.read.format(self.data_format)
-                .schema(physical)
-                .load(path)
-            )
-        try:
-            return self._read_files(path)
-        except AnalysisException:
-            if meta and meta.get("schema") and not self._has_data_files(path):
-                return self.spark.createDataFrame(
-                    [], StructType.fromJson(json.loads(meta["schema"]))
-                )
-            raise
+        vals = probe.select(*bucket_cols).distinct()
+        return df.drop(_BUCKET_COL).join(F.broadcast(vals), bucket_cols, "semi")
 
-    @staticmethod
-    def _has_data_files(path: str) -> bool:
-        """True if the snapshot dir holds at least one non-hidden data
-        file (recursing through partition dirs). Hidden/marker entries
-        (_SUCCESS, .crc, ...) are not data."""
-        for root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            if any(not f.startswith((".", "_")) for f in files):
-                return True
-        return False
+    def _next_version(self, name: str) -> tuple[int, str]:
+        """The version number the next commit of ``name`` lands, and the
+        directory to write it to."""
+        cur = self._current_version(name)
+        new = 0 if cur is None else cur + 1
+        return new, os.path.join(self._table_dir(name), f"v{new}")
+
+    def _commit(
+        self,
+        name: str,
+        version: int,
+        schema: StructType,
+        layout: dict | None = None,
+    ) -> None:
+        """Publish the written ``v<version>`` directory: record its
+        schema, write the merge layout (``layout``) or drop a stale one
+        (an overwrite's version is not bucketed), flip the pointer
+        atomically, vacuum."""
+        tdir = self._table_dir(name)
+        _write_atomic(
+            os.path.join(tdir, f"v{version}", _SCHEMA), schema.json()
+        )
+        meta = os.path.join(tdir, _MERGE_META)
+        if layout is not None:
+            _write_atomic(meta, json.dumps(layout))
+        elif os.path.exists(meta):
+            os.remove(meta)
+        _write_atomic(os.path.join(tdir, _POINTER), str(version))
+        self.vacuum(name, keep_last=self.retain)
 
     def overwrite(
         self,
@@ -331,22 +325,14 @@ class ParquetCatalog:
         is the clustered-index analog (sortWithinPartitions -> parquet
         row-group locality for the dedup keys).
         """
-        old = self._current_version(name)
-        new = 0 if old is None else old + 1
-        tdir = self._table_dir(name)
-        os.makedirs(tdir, exist_ok=True)
-        out = os.path.join(tdir, f"v{new}")
+        version, out = self._next_version(name)
         writer = df
         if num_files is not None:
             writer = writer.coalesce(num_files)
         if sort_by:
             writer = writer.sortWithinPartitions(*sort_by)
         writer.write.mode("overwrite").format(self.data_format).save(out)
-        tmp_ptr = os.path.join(tdir, _POINTER + ".tmp")
-        with open(tmp_ptr, "w") as f:
-            f.write(str(new))
-        os.replace(tmp_ptr, os.path.join(tdir, _POINTER))  # atomic flip
-        self.vacuum(name, keep_last=self.retain)
+        self._commit(name, version, df.schema)
 
     # -- incremental (partition-level) merge ---------------------------
 
@@ -373,11 +359,13 @@ class ParquetCatalog:
         snapshot tables (pattern A/E): a daily run over a 100 TB Commit
         table must not rewrite a year of untouched data to land one day.
 
-        Layout: snapshots are partitioned by ``_kb =
-        pmod(xxhash64(keys), num_buckets)``. A merge:
+        Layout: versions are partitioned by ``_kb =
+        pmod(xxhash64(bucket_cols), num_buckets)``; the layout lives in
+        ``_MERGE_META.json`` and each version's schema (``_kb``
+        included) in its ``_SCHEMA.json``. A merge:
 
         1. computes the delta's affected bucket set (<= num_buckets ids);
-        2. reads ONLY those buckets from the current snapshot (partition
+        2. reads ONLY those buckets from the current version (partition
            pruning does this from the directory layout), anti-joins the
            delta's keys (delta row wins - TRUNCATE+INSERT semantics per
            key) and writes delta union survivors as the new version's
@@ -386,23 +374,20 @@ class ParquetCatalog:
            version file-by-file (hardlink, copy fallback) - file REUSE,
            the local-fs analog of a Delta/Iceberg manifest pointing at
            unchanged data files;
-        4. flips the version pointer atomically, exactly like
-           ``overwrite``.
+        4. commits like ``overwrite``: schema, layout, pointer flip.
 
-        The bucket count is fixed at table creation (persisted in
-        ``_MERGE_META.json``) - changing it, or merging into a table
-        written by plain ``overwrite``, rebuckets everything once (a
-        full rewrite) and is incremental from then on.
-
-        A DENSE delta auto-falls-back: when the delta touches more than
-        ``dense_rewrite_fraction`` of the buckets, the per-bucket merge
-        would rewrite most of the table anyway and pay the pruning +
-        re-link bookkeeping on top of it (measured: dense merge 3.04s
-        vs 2.87s full rewrite, round-3 bench sidecar), so the merge
-        degenerates to the bucketed full rewrite - same semantics, same
-        layout, every non-empty bucket reported rewritten, nothing
-        linked. The affected-bucket pull needed for the decision is the
-        one the pruned path does anyway.
+        Everything else is one FULL bucketed rewrite of the standing
+        table's surviving rows plus the delta: a fresh table, a table
+        whose current version has a different layout (a plain
+        ``overwrite``, another bucket count or columns - re-bucketed
+        once, incremental from then on), and a DENSE delta touching
+        more than ``dense_rewrite_fraction`` of the buckets, where the
+        per-bucket merge would rewrite most of the table anyway and pay
+        the pruning + re-link bookkeeping on top of it (measured: dense
+        merge 3.04s vs 2.87s full rewrite, round-3 bench sidecar). A
+        full rewrite reports every non-empty bucket rewritten, nothing
+        linked. Against a standing table the delta is projected to the
+        table's columns (a wider feed's extra columns are dropped).
 
         ``delete_keys`` (a frame of just ``key_cols``) removes those
         keys in the SAME merge: deleted keys join the anti-join set and
@@ -434,11 +419,10 @@ class ParquetCatalog:
         (:meth:`_pruned_ids_ok`); a SUPERSET is safe - the extra
         buckets are rewritten with unchanged content instead of
         hard-linked (correct, marginally more write I/O). Ignored on
-        the bootstrap/re-bucket path, which derives nothing from the
+        a fresh or re-bucketing rewrite, which derives nothing from the
         affected set.
 
-        Returns {"rewritten": n, "linked": m} bucket counts (a full
-        rewrite reports every non-empty bucket as rewritten).
+        Returns {"rewritten": n, "linked": m} bucket counts.
         """
         key_cols = list(key_cols)
         if not key_cols:
@@ -453,24 +437,12 @@ class ParquetCatalog:
                     "merge_upsert(bucket_cols=...) needs delete_keys to "
                     f"carry the bucket columns too; missing {missing}"
                 )
-        bucket = F.pmod(
-            F.xxhash64(*[F.col(k) for k in bucket_cols]), F.lit(num_buckets)
-        ).cast("int")
-
-        tdir = self._table_dir(name)
-        os.makedirs(tdir, exist_ok=True)
-        meta = self._merge_meta(name)
-        old_version = self._current_version(name)
-        compatible = (
-            meta is not None
-            and meta.get("key_cols") == key_cols
-            and meta.get("num_buckets") == num_buckets
-            # tables written before bucket_cols existed bucketed by key
-            and meta.get("bucket_cols", meta.get("key_cols")) == bucket_cols
+        bucket = _bucket(bucket_cols, num_buckets)
+        layout = dict(
+            key_cols=key_cols, num_buckets=num_buckets, bucket_cols=bucket_cols
         )
-
-        new = 0 if old_version is None else old_version + 1
-        out = os.path.join(tdir, f"v{new}")
+        fresh = not self.exists(name)
+        version, out = self._next_version(name)
 
         stats = {"rewritten": 0, "linked": 0}
         # the delta subtree (staging parse + snapshot semi-join +
@@ -480,22 +452,18 @@ class ParquetCatalog:
         # definition; persist it once instead of recomputing the parse
         # per reference (measured 11.6s -> ~3s on the 6-key bench case).
         # Round-14 job-count trim: the cache materializes on the FIRST
-        # action - the affected-bucket collect on the pruned path (it
-        # scans the whole delta), an explicit count on the bootstrap
-        # path - instead of always paying a separate eager-count job;
-        # the anti-key set stays unpersisted (two references, both
-        # over the cached delta plus a feed-sized delete frame).
-        # Opt-round trim: a FRESH-table bootstrap (no current version)
-        # references the delta exactly once - the write's union side
-        # (anti_keys/bucket_probe stay unexecuted, the schema access is
-        # driver-side) - so persist + eager count there bought nothing
-        # and cost one extra full pass of the delta subtree per
-        # bootstrap; skip both (guide section 5: cache only reused
-        # frames).
-        fresh = old_version is None
+        # action - the affected-bucket collect on the incremental path
+        # (it scans the whole delta), an explicit count before a
+        # re-bucketing rewrite - instead of always paying a separate
+        # eager-count job; the anti-key set stays unpersisted (two
+        # references, both over the cached delta plus a feed-sized
+        # delete frame). Opt-round trim: a FRESH table references the
+        # delta exactly once - the write's union side - so persist +
+        # eager count there bought nothing and cost one extra full pass
+        # of the delta subtree per bootstrap; skip both (guide section
+        # 5: cache only reused frames).
         if not fresh:
             delta = delta.persist()
-        delta_b = delta.withColumn(_BUCKET_COL, bucket)
         # the anti-join key set: upserted keys, plus deleted keys when
         # a CDC feed rides along (deletes never reach the union side)
         anti_keys = delta.select(*key_cols).distinct()
@@ -517,86 +485,61 @@ class ParquetCatalog:
                 )
 
         try:
-            if old_version is None or not compatible:
-                # bootstrap (or re-bucket): full write, partitioned layout
+            incremental = not fresh and self._merge_meta(name) == layout
+            affected = None
+            if incremental and affected_buckets is not None:
+                affected = sorted(set(affected_buckets))
+            elif incremental:
+                [affected] = self._bucket_ids_multi(
+                    bucket_probe, [(bucket_cols, num_buckets)]
+                )
+            elif not fresh:
+                delta.count()  # eager: the rewrite references the cache 2x
+            if affected is not None and (
+                len(affected) > dense_rewrite_fraction * num_buckets
+            ):
+                affected = None  # dense delta: full rewrite (docstring)
+            if affected is None:
+                merged = delta
                 if not fresh:
-                    delta.count()  # eager: the write references the cache 2x
-                current = self.read_or_none(name)
-                if current is not None:
-                    merged = current.join(
+                    standing = self.read(name)
+                    merged = standing.join(
                         anti_keys, key_cols, "left_anti"
-                    ).unionByName(delta)
-                else:
-                    merged = delta
-                # repartition by bucket before the partitioned write: without
-                # it every task writes a file into every bucket dir (tasks x
-                # buckets small files), and the NEXT day's snapshot read pays
-                # for the listing+scan of all of them
-                merged.withColumn(_BUCKET_COL, bucket).repartition(
-                    num_buckets, F.col(_BUCKET_COL)
-                ).write.mode("overwrite").partitionBy(_BUCKET_COL).format(
-                    self.data_format
-                ).save(out)
+                    ).unionByName(delta.select(*standing.columns))
+                merged = merged.withColumn(_BUCKET_COL, bucket)
+            else:
+                cur_path = self._version_dir(name)
+                survivors = (
+                    self._load(cur_path)
+                    .filter(F.col(_BUCKET_COL).isin(affected))
+                    .join(anti_keys, key_cols, "left_anti")
+                )
+                merged = survivors.unionByName(
+                    delta.withColumn(_BUCKET_COL, bucket).select(
+                        *survivors.columns
+                    )
+                )
+            # repartition by bucket before the partitioned write: one
+            # task per bucket -> one file per bucket dir (without it
+            # every task writes a file into every bucket dir, and the
+            # next read pays the listing+scan of all of them)
+            merged.repartition(
+                num_buckets if affected is None else max(len(affected), 1),
+                F.col(_BUCKET_COL),
+            ).write.mode("overwrite").partitionBy(_BUCKET_COL).format(
+                self.data_format
+            ).save(out)
+            if affected is None:
                 stats["rewritten"] = sum(
                     1 for d in os.listdir(out) if d.startswith(f"{_BUCKET_COL}=")
                 )
             else:
-                if affected_buckets is not None:
-                    affected = sorted(set(affected_buckets))
-                else:
-                    affected = sorted(
-                        r[0]
-                        for r in bucket_probe.withColumn(_BUCKET_COL, bucket)
-                        .select(_BUCKET_COL)
-                        .distinct()
-                        .collect()
-                    )
-                cur_path = self.current_path(name)
-                old_df = self._read_snapshot(name, cur_path)
-                if _BUCKET_COL not in old_df.columns:
-                    # the empty-snapshot fallback restores the logical
-                    # schema only; recompute the bucket col (deterministic
-                    # over the key cols) so the merge paths below see the
-                    # bucketed shape
-                    old_df = old_df.withColumn(_BUCKET_COL, bucket)
-                if len(affected) > dense_rewrite_fraction * num_buckets:
-                    # dense delta: merge machinery costs more than it saves
-                    # (docstring) - bucketed full rewrite, nothing linked
-                    merged = old_df.join(
-                        anti_keys, key_cols, "left_anti"
-                    ).unionByName(delta_b.select(*old_df.columns))
-                    merged.repartition(
-                        num_buckets, F.col(_BUCKET_COL)
-                    ).write.mode("overwrite").partitionBy(_BUCKET_COL).format(
-                        self.data_format
-                    ).save(out)
-                    stats["rewritten"] = sum(
-                        1
-                        for d in os.listdir(out)
-                        if d.startswith(f"{_BUCKET_COL}=")
-                    )
-                else:
-                    survivors = (
-                        old_df.filter(F.col(_BUCKET_COL).isin(affected))
-                        .join(anti_keys, key_cols, "left_anti")
-                    )
-                    merged = survivors.unionByName(
-                        delta_b.select(*survivors.columns)
-                    )
-                    # one task per affected bucket -> one file per bucket dir
-                    merged.repartition(
-                        max(len(affected), 1), F.col(_BUCKET_COL)
-                    ).write.mode("overwrite").partitionBy(_BUCKET_COL).format(
-                        self.data_format
-                    ).save(out)
-                    stats["rewritten"] = len(affected)
-                    # re-link untouched buckets into the new snapshot
-                    for d in os.listdir(cur_path):
-                        if not d.startswith(f"{_BUCKET_COL}="):
-                            continue
-                        b = int(d.split("=", 1)[1])
-                        if b in set(affected):
-                            continue
+                stats["rewritten"] = len(affected)
+                # re-link untouched buckets into the new version
+                for d in os.listdir(cur_path):
+                    if d.startswith(f"{_BUCKET_COL}=") and (
+                        int(d.split("=", 1)[1]) not in affected
+                    ):
                         _link_tree(
                             os.path.join(cur_path, d), os.path.join(out, d)
                         )
@@ -610,47 +553,10 @@ class ParquetCatalog:
             # versions). Remove it before re-raising - the current
             # snapshot is untouched either way.
             shutil.rmtree(out, ignore_errors=True)
-            delta.unpersist(blocking=False)
             raise
-
-        tmp_meta = os.path.join(tdir, _MERGE_META + ".tmp")
-        with open(tmp_meta, "w") as f:
-            # the logical (bucket-less) schema rides in the metadata so
-            # an all-empty snapshot stays readable (parquet carries no
-            # footer when zero part files land) and so snapshot opens
-            # can skip footer inference (_read_snapshot). It must be
-            # the schema of the frame actually WRITTEN - the merge's
-            # schema alignment projects a delta to the standing
-            # table's columns, so a delta carrying extra columns (e.g.
-            # an apply_changes feed whose seq column the table does
-            # not store) is WIDER than the table; recording the delta
-            # schema here would later surface phantom columns on read.
-            from pyspark.sql.types import StructType as _ST
-
-            written = _ST(
-                [
-                    fld
-                    for fld in merged.schema.fields
-                    if fld.name != _BUCKET_COL
-                ]
-            )
-            json.dump(
-                {
-                    "key_cols": key_cols,
-                    "num_buckets": num_buckets,
-                    "bucket_cols": bucket_cols,
-                    "schema": written.json(),
-                },
-                f,
-            )
-        os.replace(tmp_meta, os.path.join(tdir, _MERGE_META))
-
-        tmp_ptr = os.path.join(tdir, _POINTER + ".tmp")
-        with open(tmp_ptr, "w") as f:
-            f.write(str(new))
-        os.replace(tmp_ptr, os.path.join(tdir, _POINTER))  # atomic flip
-        self.vacuum(name, keep_last=self.retain)
-        delta.unpersist(blocking=False)
+        finally:
+            delta.unpersist(blocking=False)
+        self._commit(name, version, merged.schema, layout)
         return stats
 
     def apply_changes(
@@ -715,6 +621,10 @@ class ParquetCatalog:
         op = F.upper(F.col(op_col))
         key_cols = list(key_cols)
         fused_ids: list[int] | None = None
+        # the persisted reduced feed, bound apart from ``changes``: the
+        # stale filter below rebinds ``changes`` to a new frame, and
+        # unpersisting that one would leave this cache behind per trigger
+        persisted: DataFrame | None = None
         if seq_col is not None:
             # final-op-per-key by sequence; ties prefer the upsert so a
             # same-sequence delete+insert still collapses to the insert
@@ -741,7 +651,7 @@ class ParquetCatalog:
                 # racing to recompute it per reference (the r14
                 # cache-fill-on-first-action rule; skipping this
                 # ordering measured +18-34% on the streaming arms).
-                changes = changes.persist()
+                persisted = changes = changes.persist()
                 [fused_ids] = self._bucket_ids_multi(
                     changes.select(*key_cols), [(key_cols, num_buckets)]
                 )
@@ -761,31 +671,22 @@ class ParquetCatalog:
             # needs per-key-ordered feeds (the docstring contract).
             # A table NOT carrying the sequence column keeps the
             # legacy within-feed-only semantics.
-            meta = self._merge_meta(name)
-            if meta is not None and meta.get("schema"):
-                schema_cols = [
-                    f["name"] for f in json.loads(meta["schema"])["fields"]
-                ]
-                if seq_col in schema_cols:
-                    standing = self.read_pruned(
-                        name, changes.select(*list(key_cols)),
-                        bucket_ids=fused_ids,
+            if (
+                self._merge_meta(name) is not None
+                and self.exists(name)
+                and seq_col in self._schema(self._version_dir(name)).names
+            ):
+                prior = self.read_pruned(
+                    name, changes.select(*key_cols), bucket_ids=fused_ids
+                ).select(*key_cols, F.col(seq_col).alias("__prior_seq"))
+                changes = (
+                    changes.join(F.broadcast(prior), key_cols, "left")
+                    .where(
+                        F.col("__prior_seq").isNull()
+                        | (F.col(seq_col) > F.col("__prior_seq"))
                     )
-                    if standing is not None:
-                        prior = standing.select(
-                            *list(key_cols),
-                            F.col(seq_col).alias("__prior_seq"),
-                        )
-                        changes = (
-                            changes.join(
-                                F.broadcast(prior), list(key_cols), "left"
-                            )
-                            .where(
-                                F.col("__prior_seq").isNull()
-                                | (F.col(seq_col) > F.col("__prior_seq"))
-                            )
-                            .drop("__prior_seq")
-                        )
+                    .drop("__prior_seq")
+                )
         ups = changes.where(op != "D").drop(op_col)
         dels = changes.where(op == "D").select(*list(key_cols)).distinct()
         try:
@@ -799,8 +700,8 @@ class ParquetCatalog:
                 affected_buckets=fused_ids,
             )
         finally:
-            if fused_ids is not None:
-                changes.unpersist(blocking=False)
+            if persisted is not None:
+                persisted.unpersist(blocking=False)
 
     def table_changes(
         self,
@@ -835,21 +736,26 @@ class ParquetCatalog:
         cannot support retraction - the plain form stays the
         :meth:`apply_changes` replay format.
 
-        Bucket-pruned via the merge layout: snapshots share the
-        ``_kb`` hash-bucket partitioning, and :meth:`merge_upsert`
-        HARD-LINKS untouched buckets between versions - a bucket whose
-        files are inode-identical across the two versions cannot
-        differ and is skipped without reading a byte (the local-fs
-        analog of diffing Delta/Iceberg manifests). Only differing
-        buckets are scanned and full-outer diffed on the key columns,
-        so emission cost scales with the CHANGED fraction of the
-        table, not its size.
+        Bucket-pruned via the merge layout: versions share the
+        ``_kb`` hash-bucket partitioning of ``_MERGE_META.json``, and
+        :meth:`merge_upsert` HARD-LINKS untouched buckets between
+        versions - a bucket whose files are inode-identical across the
+        two versions cannot differ and is skipped without reading a
+        byte (the local-fs analog of diffing Delta/Iceberg manifests).
+        Only differing buckets are scanned, each side with its
+        version's recorded ``_SCHEMA.json``, and diffed on the key
+        columns, so emission cost scales with the CHANGED fraction of
+        the table, not its size.
 
         Requires the merged (bucketed) layout: both versions must be
         retained (``retain >= 2`` keeps the previous one by default)
-        and the table must carry merge metadata. Key uniqueness per
-        snapshot is the merge sink's invariant, so the key-based diff
-        is total."""
+        and the table must carry merge metadata. The diff pairs rows by
+        key and relies on keys being unique per version, the merge
+        sink's invariant. Duplicate keys within one side are not
+        detected and do not surface as separate changes: the
+        union-aggregate diff collapses them into one row holding the
+        column-wise max of the duplicates (the join form, used for
+        tables with map columns, pairs them as a cross product)."""
         meta = self._merge_meta(name)
         if meta is None:
             raise ValueError(
@@ -858,19 +764,8 @@ class ParquetCatalog:
                 "maintain"
             )
         key_cols = list(meta["key_cols"])
-        to_version = (
-            self._current_version(name) if to_version is None else to_version
-        )
-        tdir = self._table_dir(name)
-        paths = {}
-        for v in (from_version, to_version):
-            p = os.path.join(tdir, f"v{v}")
-            if not os.path.isdir(p):
-                raise FileNotFoundError(
-                    f"table {name} version {v} not retained "
-                    f"(have {self.versions(name)})"
-                )
-            paths[v] = p
+        old_path = self._version_dir(name, from_version)
+        new_path = self._version_dir(name, to_version)
 
         def _bucket_files(vpath: str) -> dict[int, list[tuple[str, int]]]:
             out: dict[int, list[tuple[str, int]]] = {}
@@ -886,35 +781,36 @@ class ParquetCatalog:
                 )
             return out
 
-        old_b = _bucket_files(paths[from_version])
-        new_b = _bucket_files(paths[to_version])
+        old_b = _bucket_files(old_path)
+        new_b = _bucket_files(new_path)
         changed = sorted(
             b
             for b in set(old_b) | set(new_b)
             if old_b.get(b) != new_b.get(b)
         )
 
-        from pyspark.sql.types import StructType
+        def _logical(vpath: str) -> StructType:
+            return StructType(
+                [f for f in self._schema(vpath) if f.name != _BUCKET_COL]
+            )
 
-        logical = StructType.fromJson(json.loads(meta["schema"]))
-        cols = [f.name for f in logical.fields if f.name != _BUCKET_COL]
+        logical = _logical(new_path)
+        cols = logical.names
         val_cols = [c for c in cols if c not in key_cols]
 
         def _side(vpath: str, src: dict) -> DataFrame:
+            # the bucket dirs are loaded directly, so the schema is the
+            # version's recorded one without the partition column
             dirs = [
                 os.path.join(vpath, f"{_BUCKET_COL}={b}")
                 for b in changed
                 if b in src
             ]
             if not dirs:
-                return self.spark.createDataFrame([], logical).select(*cols)
-            # explicit schema: the logical columns are the metadata's
-            # truth for every merged snapshot - skips the per-load
-            # driver footer read (schema inference), one per diff side
+                return self.spark.createDataFrame([], logical)
             return (
                 self.spark.read.format(self.data_format)
-                .schema(StructType([f for f in logical.fields
-                                    if f.name != _BUCKET_COL]))
+                .schema(_logical(vpath))
                 .load(dirs)
                 .select(*cols)
             )
@@ -951,16 +847,12 @@ class ParquetCatalog:
                 return all(_orderable(f.dataType) for f in dt.fields)
             return True
 
-        if all(
-            _orderable(f.dataType)
-            for f in logical.fields
-            if f.name != _BUCKET_COL
-        ):
+        if all(_orderable(f.dataType) for f in logical.fields):
             tag = F.col("_o_side")
-            o = _side(paths[from_version], old_b).select(
+            o = _side(old_path, old_b).select(
                 F.lit(True).alias("_o_side"), *cols
             )
-            n = _side(paths[to_version], new_b).select(
+            n = _side(new_path, new_b).select(
                 F.lit(False).alias("_o_side"), *cols
             )
             j = (
@@ -998,11 +890,11 @@ class ParquetCatalog:
                 )
             )
         else:
-            o = _side(paths[from_version], old_b).select(
+            o = _side(old_path, old_b).select(
                 F.lit(1).alias("_o_present"),
                 *[F.col(c).alias(f"_o_{c}") for c in cols],
             )
-            n = _side(paths[to_version], new_b).select(
+            n = _side(new_path, new_b).select(
                 F.lit(1).alias("_n_present"),
                 *[F.col(c).alias(f"_n_{c}") for c in cols],
             )
@@ -2055,39 +1947,35 @@ class ParquetCatalog:
         Already-compact tables are left untouched. Returns a stats dict:
         ``files_before / files_after / bytes / compacted``.
         """
-        path = self.current_path(name)
-        if path is None:
+        if not self.exists(name):
             raise ValueError(f"unknown table {name!r}")
-        parts = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.startswith("part-")
-        ]
-        total = sum(os.path.getsize(p) for p in parts)
+
+        def parts() -> list[str]:
+            path = self._version_dir(name)
+            return [
+                os.path.join(path, f)
+                for f in os.listdir(path)
+                if f.startswith("part-")
+            ]
+
+        before = parts()
+        total = sum(os.path.getsize(p) for p in before)
         target = max(1, -(-total // max(1, target_bytes)))
-        if len(parts) <= target:
-            return {
-                "files_before": len(parts),
-                "files_after": len(parts),
-                "bytes": total,
-                "compacted": False,
-            }
-        # repartition, not overwrite's num_files coalesce: the rewrite
-        # scan of many small files packs into FEWER partitions than
-        # the byte target implies (maxPartitionBytes), and coalesce
-        # can only shrink - the target would silently not be honored
-        self.overwrite(
-            self.read(name).repartition(target), name, sort_by=sort_by
-        )
-        new_path = self.current_path(name)
-        after = sum(
-            1 for f in os.listdir(new_path) if f.startswith("part-")
-        )
+        compacted = len(before) > target
+        if compacted:
+            # repartition, not overwrite's num_files coalesce: the
+            # rewrite scan of many small files packs into FEWER
+            # partitions than the byte target implies
+            # (maxPartitionBytes), and coalesce can only shrink - the
+            # target would silently not be honored
+            self.overwrite(
+                self.read(name).repartition(target), name, sort_by=sort_by
+            )
         return {
-            "files_before": len(parts),
-            "files_after": after,
+            "files_before": len(before),
+            "files_after": len(parts()),
             "bytes": total,
-            "compacted": True,
+            "compacted": compacted,
         }
 
     def vacuum(self, name: str, keep_last: int = 1) -> list[int]:

@@ -127,19 +127,14 @@ def read_staging(
     return df
 
 
-def parse_entity(
-    spark: SparkSession,
-    filtered: DataFrame,
-    schema: StructType,
-) -> DataFrame:
+def parse_entity(filtered: DataFrame, schema: StructType) -> DataFrame:
     """Typed parse of one entity family's raw documents: replaces
     ``data_raw`` with a ``data`` struct.
 
     ``schema`` is the family's catalog schema
     (``plans.catalog.ENTITY_SCHEMAS``) - SURVEY.md 1.3: one explicit
     StructType per entity, never inference in production - so this is a
-    single lazy JVM-side ``from_json`` whatever the day holds. ``spark``
-    is unused, kept so existing callers of this signature still work.
+    single lazy JVM-side ``from_json`` whatever the day holds.
     """
     return filtered.withColumn("data", F.from_json(F.col("data_raw"), schema)).drop(
         "data_raw"

@@ -144,7 +144,7 @@ def _merge_and_emit_changes(
     materialized rows every fold consumer must see - never the live
     diff lineage), with the diff's schema passed explicitly so the
     re-open skips the driver-side footer inference (guide 1.4 idiom,
-    the _read_snapshot rationale)."""
+    as the catalog's loads with each version's recorded schema do)."""
     import os
 
     man = _read_delta_manifest(feed_root, "feed")

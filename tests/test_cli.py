@@ -147,11 +147,13 @@ def test_catalog_orc_format_round_trip(spark, tmp_path):
     assert stats["rewritten"] >= 1
     got = sorted(map(tuple, cat.read("T").collect()))
     assert got == [(1, "a"), (2, "B"), (3, "c")]
-    # snapshot files really are ORC
+    # snapshot files really are ORC (next to the commit's schema file)
     import os
     files = [f for f in _walk_files(cat.current_path("T"))]
-    assert files and all(f.endswith((".orc", "_SUCCESS")) or "part-" in f
-                         for f in files)
+    assert files and all(
+        f.endswith((".orc", "_SUCCESS", "_SCHEMA.json")) or "part-" in f
+        for f in files
+    )
     with pytest.raises(ValueError):
         ParquetCatalog(spark, str(tmp_path / "wh2"), data_format="avro")
 

@@ -3194,11 +3194,10 @@ def test_merge_catalog_empty_bootstrap_roundtrip(spark, tmp_path):
 
 
 def test_read_snapshot_unreadable_nonempty_reraises(spark, tmp_path):
-    """Round-11 (ADVICE r10): the empty-frame fallback is gated on a
-    listing that CONFIRMS zero data files - a snapshot that holds data
-    but fails to read must re-raise, never silently read as an empty
-    table (a merge bootstrapping off that would persist the emptiness
-    as the new version: silent data loss)."""
+    """Round-11 (ADVICE r10): a snapshot that holds data but fails to
+    read must raise, never silently read as an empty table (a merge
+    bootstrapping off that would persist the emptiness as the new
+    version: silent data loss)."""
     import os
 
     import pytest as _pytest
@@ -3213,8 +3212,7 @@ def test_read_snapshot_unreadable_nonempty_reraises(spark, tmp_path):
     )
     path = cat.current_path("T")
     # corrupt the snapshot: replace every parquet data file with
-    # garbage bytes - the dir still HAS data files, so the schema
-    # fallback must not trigger
+    # garbage bytes
     n_corrupted = 0
     for root, dirs, files in os.walk(path):
         for f in files:
@@ -3226,14 +3224,6 @@ def test_read_snapshot_unreadable_nonempty_reraises(spark, tmp_path):
     with _pytest.raises(Exception) as ei:
         cat.read("T").collect()
     assert not isinstance(ei.value, IndexError)
-    # _has_data_files semantics: markers are not data
-    marker_only = tmp_path / "marker_only"
-    os.makedirs(str(marker_only / "sub"))
-    open(str(marker_only / "_SUCCESS"), "w").close()
-    open(str(marker_only / "sub" / ".hidden.crc"), "w").close()
-    assert not ParquetCatalog._has_data_files(str(marker_only))
-    open(str(marker_only / "sub" / "part-0000.parquet"), "w").close()
-    assert ParquetCatalog._has_data_files(str(marker_only))
 
 
 def test_fold_changes_into_stats_maintains_downstream(spark, tmp_path):

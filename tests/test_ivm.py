@@ -800,7 +800,6 @@ def _hll_want(df):
     }
 
 
-@pytest.mark.slow
 def test_hll_ivm_scenario_last_copy_tied_copy_moves_and_emptying(
     spark, tmp_path
 ):
@@ -1270,7 +1269,6 @@ def test_stream_distinct_ivm_replay_never_double_counts(spark, tmp_path):
 # ---------------------------------------------------------------------
 
 
-@pytest.mark.slow
 def test_topk_ivm_scenario_horizon_ties_short_arrays_and_emptying(
     spark, tmp_path
 ):

@@ -116,10 +116,10 @@ def test_fresh_bootstrap_merge_unchanged(spark, cat):
 
 
 def test_explicit_schema_read_matches_inference(spark, cat):
-    """Merged snapshots (explicit metadata schema) read back the same
-    rows/columns/types as the delta that produced them; a
-    plain-overwrite snapshot with a STALE merge metadata file (no _kb
-    layout on disk) keeps the inference path and its own schema."""
+    """Merged snapshots (loaded with their recorded schema) read back
+    the same rows/columns/types as the delta that produced them; a
+    later plain overwrite with a different schema records and reads
+    its own schema, not the merged version's."""
     delta = spark.createDataFrame(
         [(1, "x", 1.5), (2, None, 2.5)], "k long, s string, d double"
     )
@@ -127,8 +127,8 @@ def test_explicit_schema_read_matches_inference(spark, cat):
     got = cat.read("M")
     assert dict(got.dtypes) == dict(delta.dtypes)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, delta.collect()))
-    # overwrite with a DIFFERENT schema: meta is now stale - the read
-    # must surface the overwrite's actual columns, not the stale schema
+    # overwrite with a DIFFERENT schema: the read must surface the
+    # overwrite's actual columns, not the merged version's
     other = spark.createDataFrame([(7, True)], "k long, flag boolean")
     cat.overwrite(other, "M")
     got2 = cat.read("M")
@@ -139,7 +139,7 @@ def test_explicit_schema_read_matches_inference(spark, cat):
 def test_meta_schema_is_written_schema_not_delta(spark, cat):
     """A delta WIDER than the standing table (apply_changes feed whose
     seq column the table does not store) is projected to the table's
-    columns at write time; the metadata schema must record that
+    columns at write time; the version's recorded schema must hold that
     written shape, or later snapshot opens surface a phantom column
     and the next merge fails to align (regression: dim_apply_changes
     under the explicit-schema read)."""
