@@ -65,6 +65,7 @@ def bench_incremental_merge(spark, n_docs: int = 150_000):
 
     from ghcrawler_datalake_etl_spark.pipeline import run_daily
     from ghcrawler_datalake_etl_spark.plans.catalog import spec_for
+    from ghcrawler_datalake_etl_spark.sources import ivm
     from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
     from ghcrawler_datalake_etl_spark.sources.staging import stage_json
 
@@ -132,10 +133,12 @@ def bench_incremental_merge(spark, n_docs: int = 150_000):
         # inode-equal buckets unread, so emission scales with the
         # CHANGED fraction - the mechanism, measured, not just pinned.
         t0 = time.perf_counter()
-        out["tc_dense_rows"] = catalog.table_changes("Repo", 0, 1).count()
+        feed = ivm.table_changes(catalog, "Repo", 0, 1)
+        out["tc_dense_rows"] = feed.count()
         out["tc_dense_sec"] = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
-        out["tc_sparse_rows"] = catalog.table_changes("Repo", 1, 2).count()
+        feed = ivm.table_changes(catalog, "Repo", 1, 2)
+        out["tc_sparse_rows"] = feed.count()
         out["tc_sparse_sec"] = round(time.perf_counter() - t0, 3)
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -474,6 +477,7 @@ def bench_scaling(spark) -> dict:
         # regression adds a visible 150k-row scan per fold.
         import tempfile as _tf2
 
+        from ghcrawler_datalake_etl_spark.sources import ivm
         from ghcrawler_datalake_etl_spark.sources.sinks import (
             ParquetCatalog,
         )
@@ -498,8 +502,8 @@ def bench_scaling(spark) -> dict:
                 num_buckets=32, bucket_cols=["g"],
             )
             t0 = time.perf_counter()
-            cat.fold_changes_into_join(
-                fact.selectExpr("'I' AS op", "k", "fk", "cents"),
+            ivm.fold_changes_into_join(
+                cat, fact.selectExpr("'I' AS op", "k", "fk", "cents"),
                 dim.selectExpr("'I' AS op", "fk", "nat"),
                 "J", "AIdx", "B", ["k"], ["fk"], num_buckets=32,
             )
@@ -516,16 +520,16 @@ def bench_scaling(spark) -> dict:
                 )
             )
             t0 = time.perf_counter()
-            cat.fold_changes_into_join(
-                feed_a, None, "J", "AIdx", "B", ["k"], ["fk"],
+            ivm.fold_changes_into_join(
+                cat, feed_a, None, "J", "AIdx", "B", ["k"], ["fk"],
                 num_buckets=32,
             )
             out["ivm_join_fold_600_sec"] = round(
                 time.perf_counter() - t0, 3
             )
             t0 = time.perf_counter()
-            cat.fold_changes_into_extrema(
-                fact.selectExpr("'I' AS op", "k", "g", "cents"),
+            ivm.fold_changes_into_extrema(
+                cat, fact.selectExpr("'I' AS op", "k", "g", "cents"),
                 "U", "X", ["g"], "cents", num_buckets=32,
             )
             out["ivm_extrema_bootstrap_150k_sec"] = round(
@@ -552,8 +556,8 @@ def bench_scaling(spark) -> dict:
                 delete_keys=feed_x.selectExpr("k", "g"),
             )
             t0 = time.perf_counter()
-            cat.fold_changes_into_extrema(
-                feed_x, "U", "X", ["g"], "cents", num_buckets=32,
+            ivm.fold_changes_into_extrema(
+                cat, feed_x, "U", "X", ["g"], "cents", num_buckets=32,
             )
             out["ivm_extrema_fold_600_sec"] = round(
                 time.perf_counter() - t0, 3
@@ -569,16 +573,16 @@ def bench_scaling(spark) -> dict:
             # into both tables.
             u_now = cat.read("U").select("k", "g", "cents")
             t0 = time.perf_counter()
-            cat.fold_changes_into_hll(
-                u_now.selectExpr("'I' AS op", "k", "g", "cents"),
+            ivm.fold_changes_into_hll(
+                cat, u_now.selectExpr("'I' AS op", "k", "g", "cents"),
                 "U", "H", ["g"], "cents", num_buckets=32,
             )
             out["ivm_hll_bootstrap_150k_sec"] = round(
                 time.perf_counter() - t0, 3
             )
             t0 = time.perf_counter()
-            cat.fold_changes_into_topk(
-                u_now.selectExpr("'I' AS op", "k", "g", "cents"),
+            ivm.fold_changes_into_topk(
+                cat, u_now.selectExpr("'I' AS op", "k", "g", "cents"),
                 "U", "T", ["g"], "cents", k=10, num_buckets=32,
             )
             out["ivm_topk_bootstrap_150k_sec"] = round(
@@ -597,15 +601,15 @@ def bench_scaling(spark) -> dict:
                 delete_keys=feed2.selectExpr("k", "g"),
             )
             t0 = time.perf_counter()
-            cat.fold_changes_into_hll(
-                feed2, "U", "H", ["g"], "cents", num_buckets=32,
+            ivm.fold_changes_into_hll(
+                cat, feed2, "U", "H", ["g"], "cents", num_buckets=32,
             )
             out["ivm_hll_fold_600_sec"] = round(
                 time.perf_counter() - t0, 3
             )
             t0 = time.perf_counter()
-            cat.fold_changes_into_topk(
-                feed2, "U", "T", ["g"], "cents", k=10, num_buckets=32,
+            ivm.fold_changes_into_topk(
+                cat, feed2, "U", "T", ["g"], "cents", k=10, num_buckets=32,
             )
             out["ivm_topk_fold_600_sec"] = round(
                 time.perf_counter() - t0, 3

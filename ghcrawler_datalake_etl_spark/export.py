@@ -27,7 +27,9 @@ from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog, write_tsv
 # (table, join column, hop) - the 8 reference outputs
 # (GetRepoData-unused.usql:17-110). hop=None: join column carries the
 # repo URN; hop=("Event"|"Issue"): join column carries the hop table's
-# URN, and the hop table's RepoUrn reaches the repo.
+# URN, and the hop table's RepoUrn reaches the repo. Every join column
+# and hop RepoUrn is a declared field of its table's spec (pinned by
+# tests/test_patterns.py), so the joins need no column check.
 DEFAULT_EXPORTS: tuple[tuple[str, str, str | None], ...] = (
     ("Event", "RepoUrn", None),
     ("EventPayloadCommit", "EventUrn", "Event"),
@@ -53,16 +55,14 @@ def export_repo_data(
     owner_login: str,
     name: str,
     out_folder: str,
-    exports: tuple[tuple[str, str, str | None], ...] = DEFAULT_EXPORTS,
 ) -> dict[str, int]:
-    """Join fan-out + TSV export for one repo. Returns rows per export."""
+    """Join fan-out + TSV export for one repo. Returns rows per export,
+    counted while each TSV is written (one execution per join)."""
     repo = select_repo(catalog, owner_login, name)
     repo_urns = F.broadcast(
         repo.select(F.col("EtlSourceId").alias("_urn")).distinct()
     )
-    counts: dict[str, int] = {}
-    write_tsv(repo, os.path.join(out_folder, "Repo"))
-    counts["Repo"] = repo.count()
+    counts = {"Repo": write_tsv(repo, os.path.join(out_folder, "Repo"))}
 
     # URN set per hop table (e.g. all Event URNs of this repo), computed
     # lazily once and broadcast into each second-hop join.
@@ -80,16 +80,13 @@ def export_repo_data(
             )
         return hop_urns[hop]
 
-    for table, key, hop in exports:
+    for table, key, hop in DEFAULT_EXPORTS:
         if not catalog.exists(table) or (hop and not catalog.exists(hop)):
             continue
         child = catalog.read(table)
-        if key not in child.columns:
-            continue
         target = urns_of(hop) if hop else repo_urns
         joined = child.join(
             target, child[key] == target["_urn"], "inner"
         ).drop("_urn")
-        write_tsv(joined, os.path.join(out_folder, table))
-        counts[table] = joined.count()
+        counts[table] = write_tsv(joined, os.path.join(out_folder, table))
     return counts

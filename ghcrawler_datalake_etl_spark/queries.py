@@ -49,6 +49,7 @@ from ghcrawler_datalake_etl_spark.operators.patterns import (
     snapshot_upsert,
     traffic_series,
 )
+from ghcrawler_datalake_etl_spark.sources import ivm
 from ghcrawler_datalake_etl_spark.streaming import (
     sessionize_batch,
     windowed_event_counts,
@@ -3053,7 +3054,7 @@ _TC_SEQ = _itertools.count()
 )
 def dim_table_changes(spark, sf_dir):
     """Round-11 (VERDICT r10 #6): changefeed EMISSION - the read-side
-    dual of dim_apply_changes (sources/sinks.table_changes, the Delta
+    dual of dim_apply_changes (sources/ivm.table_changes, the Delta
     ``table_changes()`` shape). Snapshot v0 holds orders keys with
     k % 3 <> 0; a day-1 merge moves the table to keys with k % 4 <> 0
     and doubles the price where k % 7 = 0 - so the diff carries
@@ -3097,7 +3098,7 @@ def dim_table_changes(spark, sf_dir):
     delta = s1.filter((F.col("k") % 3 == 0) | (F.col("k") % 7 == 0))
     dels = s0.select("k").filter(F.col("k") % 4 == 0)
     cat.merge_upsert(delta, "T", ["k"], num_buckets=16, delete_keys=dels)
-    return cat.table_changes("T", 0, 1)
+    return ivm.table_changes(cat, "T", 0, 1)
 
 
 @register(
@@ -3136,7 +3137,7 @@ def dim_changefeed_consume(spark, sf_dir):
     Tables shape), never re-reading the upstream after bootstrap.
     table_changes(with_preimages=True) emits the Delta CDF change-type
     set (updates as U_pre/U_post pairs), and
-    ParquetCatalog.fold_changes_into_stats folds each feed with the
+    ivm.fold_changes_into_stats folds each feed with the
     retractable algebra (+post, -pre; integer cents, exact under any
     order), rewriting only the touched groups' buckets. Two upstream
     merge days exercise value updates, GROUP MOVES (status flips
@@ -3180,8 +3181,8 @@ def dim_changefeed_consume(spark, sf_dir):
     # jobs: overlap them (guide 2.6). retain=3 keeps every version a
     # later diff needs.
     run_concurrently(
-        lambda: cat.fold_changes_into_stats(
-            s0.select(F.lit("I").alias("op"), "k", "g", "cents"),
+        lambda: ivm.fold_changes_into_stats(
+            cat, s0.select(F.lit("I").alias("op"), "k", "g", "cents"),
             "S", ["g"], "cents", num_buckets=8,
         ),
         lambda: cat.merge_upsert(
@@ -3208,16 +3209,16 @@ def dim_changefeed_consume(spark, sf_dir):
     # same overlap as above: day-1 fold into S reads only the immutable
     # v0/v1 dirs while day 2 merges into T
     run_concurrently(
-        lambda: cat.fold_changes_into_stats(
-            cat.table_changes("T", 0, 1, with_preimages=True),
+        lambda: ivm.fold_changes_into_stats(
+            cat, ivm.table_changes(cat, "T", 0, 1, with_preimages=True),
             "S", ["g"], "cents", num_buckets=8,
         ),
         lambda: cat.merge_upsert(
             day2, "T", ["k"], num_buckets=16, delete_keys=dels2
         ),
     )
-    cat.fold_changes_into_stats(
-        cat.table_changes("T", 1, 2, with_preimages=True),
+    ivm.fold_changes_into_stats(
+        cat, ivm.table_changes(cat, "T", 1, 2, with_preimages=True),
         "S", ["g"], "cents", num_buckets=8,
     )
     return cat.read("S").select("g", "n", "n_vals", "sum_v")
@@ -3273,7 +3274,7 @@ def dim_join_ivm(spark, sf_dir):
     """Round-13 (VERDICT r12 #4): JOIN-shaped IVM - a standing
     materialized equi-join (orders-shaped A JOIN customer-shaped B on
     B's key) maintained PURELY from the two upstreams' preimage
-    changefeeds (ParquetCatalog.fold_changes_into_join), the piece
+    changefeeds (ivm.fold_changes_into_join), the piece
     fold_changes_into_stats left open (aggregates only). Delta-join
     algebra: dA probes the CURRENT B through a bucket-pruned point
     read (B is keyed by the join column); dB probes a standing
@@ -3374,9 +3375,9 @@ def dim_join_ivm(spark, sf_dir):
             b1, "B", ["ck"], num_buckets=16, delete_keys=dels_b1
         ),
     )
-    cat.fold_changes_into_join(
-        cat.table_changes("A", 0, 1, with_preimages=True),
-        cat.table_changes("B", 0, 1, with_preimages=True),
+    ivm.fold_changes_into_join(
+        cat, ivm.table_changes(cat, "A", 0, 1, with_preimages=True),
+        ivm.table_changes(cat, "B", 0, 1, with_preimages=True),
         "J", "AIdx", "B", ["k"], ["ck"], num_buckets=16,
     )
     # day 2: A quiet; B deletes ck%7=0 and bumps acct where ck%13=0
@@ -3391,9 +3392,9 @@ def dim_join_ivm(spark, sf_dir):
     )
     dels_b2 = c.filter(memb_b1 & (ckc % 7 == 0)).select(ckc.alias("ck"))
     cat.merge_upsert(b2, "B", ["ck"], num_buckets=16, delete_keys=dels_b2)
-    cat.fold_changes_into_join(
-        None,
-        cat.table_changes("B", 1, 2, with_preimages=True),
+    ivm.fold_changes_into_join(
+        cat, None,
+        ivm.table_changes(cat, "B", 1, 2, with_preimages=True),
         "J", "AIdx", "B", ["k"], ["ck"], num_buckets=16,
     )
     return cat.read("J").select("k", "ck", "cents", "nat", "acct")
@@ -3438,7 +3439,7 @@ def dim_join_ivm(spark, sf_dir):
 def dim_minmax_ivm(spark, sf_dir):
     """Round-13 (VERDICT r12 #5): NON-RETRACTABLE aggregate IVM - a
     standing per-group (n, n_vals, min_v, max_v) table maintained from
-    preimage changefeeds (ParquetCatalog.fold_changes_into_extrema),
+    preimage changefeeds (ivm.fold_changes_into_extrema),
     the documented exclusion of fold_changes_into_stats (a sum
     retracts algebraically; an extremum does not). Counts fold
     retractably and inserts only RAISE extrema; a delete that TIES the
@@ -3543,10 +3544,10 @@ def dim_minmax_ivm(spark, sf_dir):
     # read_pruned(version=...)), its feed reads the immutable v0/v1
     # dirs, and the day-2 merge writes only v2 (retain=3 keeps all
     # three) - fully independent jobs (guide 2.6)
-    u_v1 = cat._current_version("U")
+    u_v1 = cat.current_version("U")
     run_concurrently(
-        lambda: cat.fold_changes_into_extrema(
-            cat.table_changes("U", 0, 1, with_preimages=True),
+        lambda: ivm.fold_changes_into_extrema(
+            cat, ivm.table_changes(cat, "U", 0, 1, with_preimages=True),
             "U", "X", ["g"], "v", num_buckets=8, upstream_version=u_v1,
         ),
         lambda: cat.merge_upsert(
@@ -3554,8 +3555,8 @@ def dim_minmax_ivm(spark, sf_dir):
             delete_keys=pre2,
         ),
     )
-    cat.fold_changes_into_extrema(
-        cat.table_changes("U", 1, 2, with_preimages=True),
+    ivm.fold_changes_into_extrema(
+        cat, ivm.table_changes(cat, "U", 1, 2, with_preimages=True),
         "U", "X", ["g"], "v", num_buckets=8,
     )
     return cat.read("X").select("g", "n", "n_vals", "min_v", "max_v")
@@ -3618,7 +3619,7 @@ _HLL_EMPTY_REGSUM = SK.HLL_M * (1 << SK._HLL_RHO_MAX)
 def dim_distinct_ivm(spark, sf_dir):
     """Round-14 (VERDICT r13 #4): per-group COUNT DISTINCT IVM - the
     remaining non-retractable aggregate family, closed with
-    HLL-register folds (ParquetCatalog.fold_changes_into_hll). A
+    HLL-register folds (ivm.fold_changes_into_hll). A
     standing (g, n, n_vals, regs) sketch table subscribes to preimage
     changefeeds of the group-bucketed upstream: counts fold
     retractably, inserts only RAISE registers (per-bucket max - the
@@ -3696,10 +3697,10 @@ def dim_distinct_ivm(spark, sf_dir):
     # upstream read is pinned to v0 (its all-insert feed re-derives
     # nothing, so the pin is belt-and-braces snapshot isolation) and
     # overlaps the day-1 merge into U - independent jobs (guide 2.6).
-    u_v0 = cat._current_version("U")
+    u_v0 = cat.current_version("U")
     run_concurrently(
-        lambda: cat.fold_changes_into_hll(
-            u0.selectExpr("'I' AS op", "*"), "U", "H", ["g"], "v",
+        lambda: ivm.fold_changes_into_hll(
+            cat, u0.selectExpr("'I' AS op", "*"), "U", "H", ["g"], "v",
             num_buckets=8, upstream_version=u_v0,
         ),
         lambda: cat.merge_upsert(
@@ -3716,10 +3717,10 @@ def dim_distinct_ivm(spark, sf_dir):
     )
     # fold day 1 while merging day 2 (upstream read pinned to the
     # post-day-1 version; feed reads immutable v0/v1 dirs; retain=3)
-    u_v1 = cat._current_version("U")
+    u_v1 = cat.current_version("U")
     run_concurrently(
-        lambda: cat.fold_changes_into_hll(
-            cat.table_changes("U", 0, 1, with_preimages=True),
+        lambda: ivm.fold_changes_into_hll(
+            cat, ivm.table_changes(cat, "U", 0, 1, with_preimages=True),
             "U", "H", ["g"], "v", num_buckets=8, upstream_version=u_v1,
         ),
         lambda: cat.merge_upsert(
@@ -3727,8 +3728,8 @@ def dim_distinct_ivm(spark, sf_dir):
             delete_keys=pre2,
         ),
     )
-    cat.fold_changes_into_hll(
-        cat.table_changes("U", 1, 2, with_preimages=True),
+    ivm.fold_changes_into_hll(
+        cat, ivm.table_changes(cat, "U", 1, 2, with_preimages=True),
         "U", "H", ["g"], "v", num_buckets=8,
     )
     h = cat.read("H")
@@ -3818,7 +3819,7 @@ _TOPK_SEQ = _itertools.count()
 def dim_topk_ivm(spark, sf_dir):
     """Round-14: per-group TOP-K IVM - a standing leaderboard table
     (g, n, n_vals, topk array DESC) maintained from preimage
-    changefeeds (ParquetCatalog.fold_changes_into_topk), the
+    changefeeds (ivm.fold_changes_into_topk), the
     k-generalization of the extrema fold (k=1 max). Counts fold
     retractably; inserts merge-and-truncate exactly (the new top-k
     only ever draws from the old top-k and the batch's own); a SHORT
@@ -3924,10 +3925,10 @@ def dim_topk_ivm(spark, sf_dir):
     # fold day 1 while merging day 2: upstream read pinned to the
     # post-day-1 version (snapshot isolation), feed reads immutable
     # v0/v1 dirs, day-2 merge writes only v2 (retain=3) - independent
-    u_v1 = cat._current_version("U")
+    u_v1 = cat.current_version("U")
     run_concurrently(
-        lambda: cat.fold_changes_into_topk(
-            cat.table_changes("U", 0, 1, with_preimages=True),
+        lambda: ivm.fold_changes_into_topk(
+            cat, ivm.table_changes(cat, "U", 0, 1, with_preimages=True),
             "U", "T", ["g"], "v", k=K, num_buckets=8,
             upstream_version=u_v1,
         ),
@@ -3936,8 +3937,8 @@ def dim_topk_ivm(spark, sf_dir):
             delete_keys=pre2,
         ),
     )
-    cat.fold_changes_into_topk(
-        cat.table_changes("U", 1, 2, with_preimages=True),
+    ivm.fold_changes_into_topk(
+        cat, ivm.table_changes(cat, "U", 1, 2, with_preimages=True),
         "U", "T", ["g"], "v", k=K, num_buckets=8,
     )
     t = cat.read("T").select(
@@ -4382,16 +4383,16 @@ def pipeline_ivm_gold(spark, sf_dir):
         (k % 3 != 0) & (k % 7 != 0) & (k % 11 == 0)
     ).select(k.alias("k"))
     cat.merge_upsert(a1, "A", ["k"], num_buckets=16, delete_keys=dels_a1)
-    j_pre = cat._current_version("J")
+    j_pre = cat.current_version("J")
     # hop 1: fact feed -> silver join
-    cat.fold_changes_into_join(
-        cat.table_changes("A", 0, 1, with_preimages=True),
+    ivm.fold_changes_into_join(
+        cat, ivm.table_changes(cat, "A", 0, 1, with_preimages=True),
         None, "J", "AIdx", "B", ["k"], ["ck"], num_buckets=16,
     )
     # hop 2: the SILVER table's own changefeed -> gold stats
-    cat.fold_changes_into_stats(
-        cat.table_changes(
-            "J", j_pre, cat._current_version("J"), with_preimages=True
+    ivm.fold_changes_into_stats(
+        cat, ivm.table_changes(
+            cat, "J", j_pre, cat.current_version("J"), with_preimages=True
         ),
         "G", ["nat"], "cents", num_buckets=8,
     )
@@ -10893,7 +10894,7 @@ def j8_edit_distance2_join(spark, sf_dir):
 
 
 # =====================================================================
-# CDC changefeed apply (sources/sinks.ParquetCatalog.apply_changes)
+# CDC changefeed apply (sources/ivm.apply_changes)
 # =====================================================================
 
 @register(
@@ -10914,7 +10915,7 @@ def j8_edit_distance2_join(spark, sf_dir):
     """,
 )
 def dim_apply_changes(spark, sf_dir):
-    """CDC changefeed apply (ParquetCatalog.apply_changes - the MERGE
+    """CDC changefeed apply (ivm.apply_changes - the MERGE
     INTO ... WHEN MATCHED UPDATE/DELETE / WHEN NOT MATCHED INSERT
     shape): bootstrap a bucketed customer dimension, then apply ONE
     MIXED-ORDER feed, sequenced by ``seq_col`` (round-8, VERDICT r7
@@ -10970,8 +10971,8 @@ def dim_apply_changes(spark, sf_dir):
         cust.where(F.col("c_custkey") % 10 <= 2)
         .select(F.inline(ch))
     )
-    cat.apply_changes(
-        changes, "CustDim", ["c_custkey"], seq_col="seq", num_buckets=8
+    ivm.apply_changes(
+        cat, changes, "CustDim", ["c_custkey"], seq_col="seq", num_buckets=8
     )
     return cat.read("CustDim")
 

@@ -17,6 +17,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ghcrawler_datalake_etl_spark.functions.concurrency import (
     run_concurrently,
 )
+from ghcrawler_datalake_etl_spark.sources import ivm
 
 
 def stream_stage_available_now(
@@ -151,20 +152,20 @@ def _merge_and_emit_changes(
     ledger = man.setdefault("txn", {})
     key = str(micro_batch)
     if key not in ledger:
-        pre = catalog._current_version(name)
-        catalog.apply_changes(
-            bdf, name, key_cols, op_col=op_col, seq_col=seq_col,
+        pre = catalog.current_version(name)
+        ivm.apply_changes(
+            catalog, bdf, name, key_cols, op_col=op_col, seq_col=seq_col,
             num_buckets=num_buckets,
         )
-        post = catalog._current_version(name)
+        post = catalog.current_version(name)
         ledger[key] = {"from": pre, "to": post}
         _write_delta_manifest(feed_root, man)
     rec = ledger[key]
     out = os.path.join(feed_root, f"micro_batch={micro_batch}")
     try:
         feed = (
-            catalog.table_changes(
-                name, rec["from"], rec["to"], op_col=op_col,
+            ivm.table_changes(
+                catalog, name, rec["from"], rec["to"], op_col=op_col,
                 with_preimages=with_preimages,
             )
             if rec["from"] is not None
@@ -886,7 +887,7 @@ def stream_join_ivm(
     num_buckets: int = 16,
 ) -> StreamingQuery:
     """Streaming join-shaped IVM - the foreachBatch arm of
-    ParquetCatalog.fold_changes_into_join, closing the CDC loop for a
+    ivm.fold_changes_into_join, closing the CDC loop for a
     materialized join the way stream_apply_changes_feed closed it for
     the table itself. Per micro-batch of (op, key, row) CDC rows on
     upstream A: apply to the merged A table (bucket-pruned), emit the
@@ -916,8 +917,8 @@ def stream_join_ivm(
             feed_root, op_col, seq_col, num_buckets,
             with_preimages=True,
         )
-        catalog.fold_changes_into_join(
-            feed, None, join_table, index_table, b_table,
+        ivm.fold_changes_into_join(
+            catalog, feed, None, join_table, index_table, b_table,
             list(a_key_cols), list(join_cols),
             op_col=op_col, num_buckets=num_buckets,
         )
@@ -984,8 +985,8 @@ def stream_join_ivm_dim(
             feed_root, op_col, seq_col, num_buckets,
             with_preimages=True,
         )
-        catalog.fold_changes_into_join(
-            None, feed, join_table, index_table, b_table,
+        ivm.fold_changes_into_join(
+            catalog, None, feed, join_table, index_table, b_table,
             list(a_key_cols), list(join_cols),
             op_col=op_col, num_buckets=num_buckets,
         )
@@ -1003,7 +1004,7 @@ def _fold_version_advanced(catalog, name: str, pre) -> bool:
     the per-downstream-table exactly-once test: every fold lands as ONE
     atomic version flip, so 'version advanced' == 'this trigger's fold
     already applied' (single-maintainer contract)."""
-    cur = catalog._current_version(name)
+    cur = catalog.current_version(name)
     if pre is None:
         return cur is not None
     return cur is not None and cur > pre
@@ -1063,7 +1064,7 @@ def stream_aggregate_ivm(
         rec = man["txn"][str(micro_batch)]
         if "folds" not in rec:
             rec["folds"] = {
-                n: catalog._current_version(n)
+                n: catalog.current_version(n)
                 for n in (index_table, stats_table, extrema_table)
             }
             _write_delta_manifest(feed_root, man)
@@ -1087,8 +1088,8 @@ def stream_aggregate_ivm(
             if not _fold_version_advanced(
                 catalog, stats_table, pre[stats_table]
             ):
-                catalog.fold_changes_into_stats(
-                    feed, stats_table, list(group_cols), value_col,
+                ivm.fold_changes_into_stats(
+                    catalog, feed, stats_table, list(group_cols), value_col,
                     op_col=op_col, num_buckets=num_buckets,
                 )
 
@@ -1100,8 +1101,8 @@ def stream_aggregate_ivm(
         if not _fold_version_advanced(
             catalog, extrema_table, pre[extrema_table]
         ):
-            catalog.fold_changes_into_extrema(
-                feed, index_table, extrema_table, list(group_cols),
+            ivm.fold_changes_into_extrema(
+                catalog, feed, index_table, extrema_table, list(group_cols),
                 value_col, op_col=op_col, num_buckets=num_buckets,
             )
 
@@ -1129,7 +1130,7 @@ def stream_distinct_ivm(
     num_buckets: int = 16,
 ) -> StreamingQuery:
     """Streaming COUNT DISTINCT IVM - the foreachBatch arm of
-    ParquetCatalog.fold_changes_into_hll, completing the round-14 fold
+    ivm.fold_changes_into_hll, completing the round-14 fold
     family's batch -> streaming lifecycle exactly as
     :func:`stream_aggregate_ivm` did for the stats/extrema folds. Per
     micro-batch of (op, key, row) CDC rows: apply to the merged
@@ -1162,7 +1163,7 @@ def stream_distinct_ivm(
         rec = man["txn"][str(micro_batch)]
         if "folds" not in rec:
             rec["folds"] = {
-                n: catalog._current_version(n)
+                n: catalog.current_version(n)
                 for n in (index_table, hll_table)
             }
             _write_delta_manifest(feed_root, man)
@@ -1178,8 +1179,8 @@ def stream_distinct_ivm(
                 delete_keys=pres.select(*key_cols, *group_cols),
             )
         if not _fold_version_advanced(catalog, hll_table, pre[hll_table]):
-            catalog.fold_changes_into_hll(
-                feed, index_table, hll_table, list(group_cols),
+            ivm.fold_changes_into_hll(
+                catalog, feed, index_table, hll_table, list(group_cols),
                 value_col, op_col=op_col, num_buckets=num_buckets,
             )
 
@@ -1208,7 +1209,7 @@ def stream_topk_ivm(
     num_buckets: int = 16,
 ) -> StreamingQuery:
     """Streaming TOP-K IVM - the foreachBatch arm of
-    ParquetCatalog.fold_changes_into_topk, completing the leaderboard
+    ivm.fold_changes_into_topk, completing the leaderboard
     fold's batch -> streaming lifecycle (the round-13/14 pattern:
     every fold family ships both arms). Per micro-batch of (op, key,
     row) CDC rows: apply to the merged upstream, emit the version diff
@@ -1242,7 +1243,7 @@ def stream_topk_ivm(
         rec = man["txn"][str(micro_batch)]
         if "folds" not in rec:
             rec["folds"] = {
-                n: catalog._current_version(n)
+                n: catalog.current_version(n)
                 for n in (index_table, topk_table)
             }
             _write_delta_manifest(feed_root, man)
@@ -1258,8 +1259,8 @@ def stream_topk_ivm(
                 delete_keys=pres.select(*key_cols, *group_cols),
             )
         if not _fold_version_advanced(catalog, topk_table, pre[topk_table]):
-            catalog.fold_changes_into_topk(
-                feed, index_table, topk_table, list(group_cols),
+            ivm.fold_changes_into_topk(
+                catalog, feed, index_table, topk_table, list(group_cols),
                 value_col, k=k, op_col=op_col, num_buckets=num_buckets,
             )
 

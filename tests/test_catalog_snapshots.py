@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from ghcrawler_datalake_etl_spark.sources import ivm
 from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
 
 
@@ -62,11 +63,11 @@ def test_merge_meta_is_layout_only_and_dropped_by_overwrite(spark, cat):
     the overwritten version does not have."""
     rows = spark.range(100).selectExpr("id AS k", "CAST(id AS STRING) AS v")
     cat.merge_upsert(rows, "T", ["k"], num_buckets=8)
-    assert cat._merge_meta("T") == {
+    assert cat.layout("T") == {
         "key_cols": ["k"], "num_buckets": 8, "bucket_cols": ["k"],
     }
     cat.overwrite(rows, "T")
-    assert cat._merge_meta("T") is None
+    assert cat.layout("T") is None
     one = spark.createDataFrame([(1, "z")], "k long, v string")
     assert cat.merge_upsert(one, "T", ["k"], num_buckets=8)["linked"] == 0
     assert cat.read("T").count() == 100
@@ -99,8 +100,8 @@ def test_apply_changes_seq_triggers_leave_no_cache(spark, cat):
     before = jsc.getPersistentRDDs().size()
     sizes = []
     for t in range(1, 6):
-        cat.apply_changes(
-            spark.createDataFrame(
+        ivm.apply_changes(
+            cat, spark.createDataFrame(
                 [("U", t, f"u{t}", t), ("D", t + 5, None, t)],
                 "op string, k long, s string, seq long",
             ),

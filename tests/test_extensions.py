@@ -12,6 +12,7 @@ from ghcrawler_datalake_etl_spark.operators import dedup as D
 from ghcrawler_datalake_etl_spark.operators import multimodal as M
 from ghcrawler_datalake_etl_spark.operators import similarity as S
 from ghcrawler_datalake_etl_spark.operators import text as X
+from ghcrawler_datalake_etl_spark.sources import ivm
 from ghcrawler_datalake_etl_spark.streaming import windowed_event_counts
 
 DOC_A = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -3184,8 +3185,8 @@ def test_merge_catalog_empty_bootstrap_roundtrip(spark, tmp_path):
         (r.k, r.v) for r in cat.read("T").collect()
     ) == [(1, "a"), (2, "b")]
     # ... and a delete-everything day leaves it empty but readable
-    cat.apply_changes(
-        spark.createDataFrame(
+    ivm.apply_changes(
+        cat, spark.createDataFrame(
             [(1, "a", "D"), (2, "b", "D")], "k long, v string, op string"
         ),
         "T", ["k"],
@@ -3247,8 +3248,8 @@ def test_fold_changes_into_stats_maintains_downstream(spark, tmp_path):
     )
     cat.merge_upsert(s0, "T", ["k"], num_buckets=4)
     # bootstrap = day-0's insert feed (the table is born as changes)
-    cat.fold_changes_into_stats(
-        s0.select(F.lit("I").alias("op"), "k", "g", "cents"),
+    ivm.fold_changes_into_stats(
+        cat, s0.select(F.lit("I").alias("op"), "k", "g", "cents"),
         "S", ["g"], "cents", num_buckets=4,
     )
     assert {
@@ -3265,9 +3266,9 @@ def test_fold_changes_into_stats_maintains_downstream(spark, tmp_path):
         "T", ["k"], num_buckets=4,
         delete_keys=spark.createDataFrame([(3,), (5,)], "k long"),
     )
-    feed = cat.table_changes("T", 0, 1, with_preimages=True)
+    feed = ivm.table_changes(cat, "T", 0, 1, with_preimages=True)
     assert {r.op for r in feed.collect()} == {"I", "D", "U_pre", "U_post"}
-    cat.fold_changes_into_stats(feed, "S", ["g"], "cents", num_buckets=4)
+    ivm.fold_changes_into_stats(cat, feed, "S", ["g"], "cents", num_buckets=4)
     got = {
         tuple(r)
         for r in cat.read("S").select("g", "n", "n_vals", "sum_v").collect()
@@ -3287,13 +3288,13 @@ def test_fold_changes_into_stats_maintains_downstream(spark, tmp_path):
     assert not any(r[0] == "c" for r in got), "vanished group not deleted"
     # post-image-only feeds cannot retract - must raise, not miscount
     with pytest.raises(Exception, match="preimage"):
-        cat.fold_changes_into_stats(
-            cat.table_changes("T", 0, 1), "S", ["g"], "cents", num_buckets=4
+        ivm.fold_changes_into_stats(
+            cat, ivm.table_changes(cat, "T", 0, 1), "S", ["g"], "cents", num_buckets=4
         )
     # float values would drift under retraction - rejected up front
     with pytest.raises(ValueError, match="integer"):
-        cat.fold_changes_into_stats(
-            feed.withColumn("cents", F.col("cents").cast("double")),
+        ivm.fold_changes_into_stats(
+            cat, feed.withColumn("cents", F.col("cents").cast("double")),
             "S", ["g"], "cents", num_buckets=4,
         )
 
@@ -3312,14 +3313,14 @@ def test_table_changes_emits_cdc_feed(spark, tmp_path):
     )
     cat.merge_upsert(day0, "T", ["k"], num_buckets=8)
     # day 1: update k=3, delete k=7, insert k=100; 17 keys untouched
-    cat.apply_changes(
-        spark.createDataFrame(
+    ivm.apply_changes(
+        cat, spark.createDataFrame(
             [(3, "v3x", 30, "U"), (7, None, None, "D"), (100, "new", 1000, "I")],
             "k long, v string, n long, op string",
         ),
         "T", ["k"], num_buckets=8,
     )
-    feed = cat.table_changes("T", 0, 1)
+    feed = ivm.table_changes(cat, "T", 0, 1)
     got = {(r.op, r.k): (r.v, r.n) for r in feed.collect()}
     assert got == {
         ("U", 3): ("v3x", 30),
@@ -3343,17 +3344,17 @@ def test_table_changes_emits_cdc_feed(spark, tmp_path):
     # roundtrip: v0 + feed == v1
     cat2 = ParquetCatalog(spark, str(tmp_path / "wh2"))
     cat2.merge_upsert(cat.read("T", version=0), "T", ["k"], num_buckets=8)
-    cat2.apply_changes(feed, "T", ["k"], num_buckets=8)
+    ivm.apply_changes(cat2, feed, "T", ["k"], num_buckets=8)
     a = sorted((r.k, r.v, r.n) for r in cat2.read("T").collect())
     b = sorted((r.k, r.v, r.n) for r in cat.read("T", version=1).collect())
     assert a == b
     # identical versions -> empty feed; no merge meta -> loud error
     import pytest as _pytest
 
-    assert cat.table_changes("T", 1, 1).count() == 0
+    assert ivm.table_changes(cat, "T", 1, 1).count() == 0
     cat.overwrite(day0, "P")
     with _pytest.raises(ValueError, match="merge metadata"):
-        cat.table_changes("P", 0, 0)
+        ivm.table_changes(cat, "P", 0, 0)
 
 
 def test_span_overlap_against_index_semantics(spark):

@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from ghcrawler_datalake_etl_spark.sources import ivm
 from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
 
 
@@ -105,7 +106,7 @@ def test_merge_upsert_failed_write_leaves_no_orphan_version(
         [("U", 1, "a", 99)], "op string, pk long, grp string, v long"
     )
     with pytest.raises(Exception, match="preimage feed"):
-        cat.fold_changes_into_stats(bad, "St", ["grp"], "v")
+        ivm.fold_changes_into_stats(cat, bad, "St", ["grp"], "v")
     tdir = str(tmp_path / "wh" / "St")
     orphans = [
         d for d in (os.listdir(tdir) if os.path.isdir(tdir) else [])
@@ -115,7 +116,7 @@ def test_merge_upsert_failed_write_leaves_no_orphan_version(
     good = spark.createDataFrame(
         [("I", 3, "b", 40)], "op string, pk long, grp string, v long"
     )
-    cat.fold_changes_into_stats(good, "St", ["grp"], "v")
+    ivm.fold_changes_into_stats(cat, good, "St", ["grp"], "v")
     got = {
         r["grp"]: (r["n"], r["sum_v"]) for r in cat.read("St").collect()
     }
@@ -146,8 +147,8 @@ def test_join_ivm_scenario_fk_moves_deletes_and_quiet_day(
     )
     cat.merge_upsert(a0, "A", ["k"], num_buckets=4)
     cat.merge_upsert(b0, "B", ["fk"], num_buckets=4)
-    cat.fold_changes_into_join(
-        a0.select(F.lit("I").alias("op"), "*"),
+    ivm.fold_changes_into_join(
+        cat, a0.select(F.lit("I").alias("op"), "*"),
         b0.select(F.lit("I").alias("op"), "*"),
         "J", "AIdx", "B", ["k"], ["fk"], num_buckets=4,
     )
@@ -170,9 +171,9 @@ def test_join_ivm_scenario_fk_moves_deletes_and_quiet_day(
         "B", ["fk"], num_buckets=4,
         delete_keys=spark.createDataFrame([(30,)], "fk long"),
     )
-    cat.fold_changes_into_join(
-        cat.table_changes("A", 0, 1, with_preimages=True),
-        cat.table_changes("B", 0, 1, with_preimages=True),
+    ivm.fold_changes_into_join(
+        cat, ivm.table_changes(cat, "A", 0, 1, with_preimages=True),
+        ivm.table_changes(cat, "B", 0, 1, with_preimages=True),
         "J", "AIdx", "B", ["k"], ["fk"], num_buckets=4,
     )
     j = {r["k"]: (r["fk"], r["bv"]) for r in cat.read("J").collect()}
@@ -185,9 +186,9 @@ def test_join_ivm_scenario_fk_moves_deletes_and_quiet_day(
         "B", ["fk"], num_buckets=4,
         delete_keys=spark.createDataFrame([(10,)], "fk long"),
     )
-    cat.fold_changes_into_join(
-        None,
-        cat.table_changes("B", 1, 2, with_preimages=True),
+    ivm.fold_changes_into_join(
+        cat, None,
+        ivm.table_changes(cat, "B", 1, 2, with_preimages=True),
         "J", "AIdx", "B", ["k"], ["fk"], num_buckets=4,
     )
     j = {r["k"]: (r["fk"], r["bv"]) for r in cat.read("J").collect()}
@@ -206,8 +207,8 @@ def test_join_ivm_rejects_post_image_only_feed(spark, tmp_path):
     b0 = spark.createDataFrame([(10, "y")], "fk long, bv string")
     cat.merge_upsert(a0, "A", ["k"], num_buckets=2)
     cat.merge_upsert(b0, "B", ["fk"], num_buckets=2)
-    cat.fold_changes_into_join(
-        a0.select(F.lit("I").alias("op"), "*"),
+    ivm.fold_changes_into_join(
+        cat, a0.select(F.lit("I").alias("op"), "*"),
         b0.select(F.lit("I").alias("op"), "*"),
         "J", "AIdx", "B", ["k"], ["fk"], num_buckets=2,
     )
@@ -215,8 +216,8 @@ def test_join_ivm_rejects_post_image_only_feed(spark, tmp_path):
         [("U", 1, 10, "z")], "op string, k long, fk long, av string"
     )
     with pytest.raises(Exception, match="preimage feed"):
-        cat.fold_changes_into_join(
-            bad, None, "J", "AIdx", "B", ["k"], ["fk"], num_buckets=2
+        ivm.fold_changes_into_join(
+            cat, bad, None, "J", "AIdx", "B", ["k"], ["fk"], num_buckets=2
         )
     # the standing join is untouched by the failed fold
     assert {r["k"] for r in cat.read("J").collect()} == {1}
@@ -233,8 +234,8 @@ def test_join_ivm_null_fk_rows_never_join(spark, tmp_path):
     b0 = spark.createDataFrame([(10, "y")], "fk long, bv string")
     cat.merge_upsert(a0, "A", ["k"], num_buckets=2)
     cat.merge_upsert(b0, "B", ["fk"], num_buckets=2)
-    cat.fold_changes_into_join(
-        a0.select(F.lit("I").alias("op"), "*"),
+    ivm.fold_changes_into_join(
+        cat, a0.select(F.lit("I").alias("op"), "*"),
         b0.select(F.lit("I").alias("op"), "*"),
         "J", "AIdx", "B", ["k"], ["fk"], num_buckets=2,
     )
@@ -260,8 +261,8 @@ def test_extrema_ivm_scenario_ties_nulls_moves_and_emptying(
              (5, "b", None), (6, "c", 7.0)]
     up0 = spark.createDataFrame(rows0, "k long, g string, v double")
     cat.merge_upsert(up0, "U", ["k"], num_buckets=4, bucket_cols=["g"])
-    cat.fold_changes_into_extrema(
-        up0.select(F.lit("I").alias("op"), "*"), "U", "X", ["g"], "v",
+    ivm.fold_changes_into_extrema(
+        cat, up0.select(F.lit("I").alias("op"), "*"), "U", "X", ["g"], "v",
         num_buckets=4,
     )
     x = {r["g"]: tuple(r)[1:] for r in cat.read("X").select(
@@ -280,8 +281,8 @@ def test_extrema_ivm_scenario_ties_nulls_moves_and_emptying(
             [(2, "a"), (6, "c"), (4, "b")], "k long, g string"
         ),
     )
-    cat.fold_changes_into_extrema(
-        cat.table_changes("U", 0, 1, with_preimages=True),
+    ivm.fold_changes_into_extrema(
+        cat, ivm.table_changes(cat, "U", 0, 1, with_preimages=True),
         "U", "X", ["g"], "v", num_buckets=4,
     )
     x = {r["g"]: tuple(r)[1:] for r in cat.read("X").select(
@@ -295,8 +296,8 @@ def test_extrema_ivm_scenario_ties_nulls_moves_and_emptying(
         "U", ["k"], num_buckets=4, bucket_cols=["g"],
         delete_keys=spark.createDataFrame([(4, "c")], "k long, g string"),
     )
-    cat.fold_changes_into_extrema(
-        cat.table_changes("U", 1, 2, with_preimages=True),
+    ivm.fold_changes_into_extrema(
+        cat, ivm.table_changes(cat, "U", 1, 2, with_preimages=True),
         "U", "X", ["g"], "v", num_buckets=4,
     )
     x = {r["g"]: tuple(r)[1:] for r in cat.read("X").select(
@@ -320,8 +321,8 @@ def test_extrema_ivm_requires_group_bucketed_upstream(spark, tmp_path):
     )
     cat.merge_upsert(up0, "U", ["k"], num_buckets=4)  # key-bucketed
     with pytest.raises(ValueError, match="bucket_cols"):
-        cat.fold_changes_into_extrema(
-            up0.select(F.lit("I").alias("op"), "*"), "U", "X", ["g"], "v"
+        ivm.fold_changes_into_extrema(
+            cat, up0.select(F.lit("I").alias("op"), "*"), "U", "X", ["g"], "v"
         )
 
 
@@ -627,14 +628,14 @@ def test_chained_ivm_gold_subscribes_to_silver_changefeed(
         "A", ["k"], num_buckets=4,
         delete_keys=spark.createDataFrame([(3,)], "k long"),
     )
-    j_pre = cat._current_version("J")
-    cat.fold_changes_into_join(
-        cat.table_changes("A", 0, 1, with_preimages=True),
+    j_pre = cat.current_version("J")
+    ivm.fold_changes_into_join(
+        cat, ivm.table_changes(cat, "A", 0, 1, with_preimages=True),
         None, "J", "AIdx", "B", ["k"], ["fk"], num_buckets=4,
     )
-    cat.fold_changes_into_stats(
-        cat.table_changes(
-            "J", j_pre, cat._current_version("J"), with_preimages=True
+    ivm.fold_changes_into_stats(
+        cat, ivm.table_changes(
+            cat, "J", j_pre, cat.current_version("J"), with_preimages=True
         ),
         "G", ["nat"], "cents", num_buckets=2,
     )
@@ -671,20 +672,20 @@ def test_stats_fold_accepts_overwrite_bootstrapped_table(spark, tmp_path):
         ),
         "St",
     )
-    assert cat._merge_meta("St") is None
+    assert cat.layout("St") is None
     feed = spark.createDataFrame(
         [("I", 3, "a", 5), ("I", 4, "b", 7)],
         "op string, pk long, grp string, v long",
     )
-    cat.fold_changes_into_stats(feed, "St", ["grp"], "v")
+    ivm.fold_changes_into_stats(cat, feed, "St", ["grp"], "v")
     got = {
         r["grp"]: (r["n"], r["sum_v"]) for r in cat.read("St").collect()
     }
     assert got == {"a": (3, 35), "b": (1, 7)}
     # the merge re-bucketed the table: pruned path from now on
-    assert cat._merge_meta("St") is not None
-    cat.fold_changes_into_stats(
-        spark.createDataFrame(
+    assert cat.layout("St") is not None
+    ivm.fold_changes_into_stats(
+        cat, spark.createDataFrame(
             [("I", 5, "a", 1)], "op string, pk long, grp string, v long"
         ),
         "St", ["grp"], "v",
@@ -712,21 +713,21 @@ def test_extrema_fold_raises_when_rederive_has_no_upstream(
         [("I", 1, "a", 10.0), ("I", 2, "a", 5.0)],
         "op string, pk long, grp string, v double",
     )
-    cat.fold_changes_into_extrema(boot, "Up", "X", ["grp"], "v")
+    ivm.fold_changes_into_extrema(cat, boot, "Up", "X", ["grp"], "v")
     # simulate the crashed bootstrap: meta present, pointer gone
     os.remove(str(tmp_path / "wh" / "Up" / "_CURRENT"))
     retract_max = spark.createDataFrame(
         [("D", 1, "a", 10.0)], "op string, pk long, grp string, v double"
     )
     with pytest.raises(ValueError, match="no current version"):
-        cat.fold_changes_into_extrema(
-            retract_max, "Up", "X", ["grp"], "v"
+        ivm.fold_changes_into_extrema(
+            cat, retract_max, "Up", "X", ["grp"], "v"
         )
     # a retraction that does NOT tie an extremum still folds fine
     retract_mid = spark.createDataFrame(
         [("I", 3, "a", 7.0)], "op string, pk long, grp string, v double"
     )
-    cat.fold_changes_into_extrema(retract_mid, "Up", "X", ["grp"], "v")
+    ivm.fold_changes_into_extrema(cat, retract_mid, "Up", "X", ["grp"], "v")
     row = cat.read("X").collect()[0]
     assert (row["n"], row["min_v"], row["max_v"]) == (3, 5.0, 10.0)
 
@@ -749,8 +750,8 @@ def test_join_fold_unpersists_feeds_on_every_exit(spark, tmp_path):
     feed_b = spark.createDataFrame(
         [("I", 5, 1)], "op string, fk long, w long"
     )
-    cat.fold_changes_into_join(
-        None, feed_b, "J", "AIdx", "B", ["pk"], ["fk"], num_buckets=4
+    ivm.fold_changes_into_join(
+        cat, None, feed_b, "J", "AIdx", "B", ["pk"], ["fk"], num_buckets=4
     )
     leaked = _persisted_ids() - before
     assert not leaked, leaked
@@ -765,8 +766,8 @@ def test_join_fold_unpersists_feeds_on_every_exit(spark, tmp_path):
         [("U", 1, 1, 9)], "op string, pk long, fk long, cents long"
     )
     with pytest.raises(Exception, match="preimage feed"):
-        cat.fold_changes_into_join(
-            bad, None, "J", "AIdx", "B", ["pk"], ["fk"], num_buckets=4
+        ivm.fold_changes_into_join(
+            cat, bad, None, "J", "AIdx", "B", ["pk"], ["fk"], num_buckets=4
         )
     leaked = _persisted_ids() - before
     assert not leaked, leaked
@@ -817,8 +818,8 @@ def test_hll_ivm_scenario_last_copy_tied_copy_moves_and_emptying(
         "pk long, g string, v string",
     )
     cat.merge_upsert(up0, "U", ["pk"], num_buckets=4, bucket_cols=["g"])
-    cat.fold_changes_into_hll(
-        up0.selectExpr("'I' AS op", "*"), "U", "H", ["g"], "v"
+    ivm.fold_changes_into_hll(
+        cat, up0.selectExpr("'I' AS op", "*"), "U", "H", ["g"], "v"
     )
     assert _hll_state(cat) == _hll_want(cat.read("U"))
 
@@ -834,8 +835,8 @@ def test_hll_ivm_scenario_last_copy_tied_copy_moves_and_emptying(
             [(2, "a"), (1, "a"), (4, "b")], "pk long, g string"
         ),
     )
-    cat.fold_changes_into_hll(
-        cat.table_changes("U", 0, 1, with_preimages=True),
+    ivm.fold_changes_into_hll(
+        cat, ivm.table_changes(cat, "U", 0, 1, with_preimages=True),
         "U", "H", ["g"], "v",
     )
     assert _hll_state(cat) == _hll_want(cat.read("U"))
@@ -848,8 +849,8 @@ def test_hll_ivm_scenario_last_copy_tied_copy_moves_and_emptying(
             [(3, "a"), (4, "a")], "pk long, g string"
         ),
     )
-    cat.fold_changes_into_hll(
-        cat.table_changes("U", 1, 2, with_preimages=True),
+    ivm.fold_changes_into_hll(
+        cat, ivm.table_changes(cat, "U", 1, 2, with_preimages=True),
         "U", "H", ["g"], "v",
     )
     got = _hll_state(cat)
@@ -864,8 +865,8 @@ def test_hll_ivm_requires_group_bucketed_upstream(spark, tmp_path):
     )
     cat.merge_upsert(up, "U", ["pk"], num_buckets=4)  # key-bucketed
     with pytest.raises(ValueError, match="bucket_cols"):
-        cat.fold_changes_into_hll(
-            up.selectExpr("'I' AS op", "*"), "U", "H", ["g"], "v"
+        ivm.fold_changes_into_hll(
+            cat, up.selectExpr("'I' AS op", "*"), "U", "H", ["g"], "v"
         )
 
 
@@ -875,13 +876,13 @@ def test_hll_ivm_raises_when_rederive_has_no_upstream(spark, tmp_path):
         [(1, "a", "x"), (2, "a", "y")], "pk long, g string, v string"
     )
     cat.merge_upsert(up, "U", ["pk"], num_buckets=4, bucket_cols=["g"])
-    cat.fold_changes_into_hll(
-        up.selectExpr("'I' AS op", "*"), "U", "H", ["g"], "v"
+    ivm.fold_changes_into_hll(
+        cat, up.selectExpr("'I' AS op", "*"), "U", "H", ["g"], "v"
     )
     os.remove(str(tmp_path / "wh" / "U" / "_CURRENT"))
     with pytest.raises(ValueError, match="no current version"):
-        cat.fold_changes_into_hll(
-            spark.createDataFrame(
+        ivm.fold_changes_into_hll(
+            cat, spark.createDataFrame(
                 [("D", 1, "a", "x")], "op string, pk long, g string, v string"
             ),
             "U", "H", ["g"], "v",
@@ -895,8 +896,8 @@ def test_hll_ivm_rejects_post_image_only_feed(spark, tmp_path):
     )
     cat.merge_upsert(up, "U", ["pk"], num_buckets=4, bucket_cols=["g"])
     with pytest.raises(Exception, match="preimage feed"):
-        cat.fold_changes_into_hll(
-            spark.createDataFrame(
+        ivm.fold_changes_into_hll(
+            cat, spark.createDataFrame(
                 [("U", 1, "a", "q")],
                 "op string, pk long, g string, v string",
             ),
@@ -1021,15 +1022,15 @@ def test_apply_changes_cross_trigger_stale_ops_dropped(spark, tmp_path):
     cat.merge_upsert(base, "T", ["k"], num_buckets=4)
 
     # trigger N+1 arrives first: k=1 moves to seq 7
-    cat.apply_changes(
-        spark.createDataFrame([(1, 17, 7, "U")],
+    ivm.apply_changes(
+        cat, spark.createDataFrame([(1, 17, 7, "U")],
                               "k long, v long, seq long, op string"),
         "T", ["k"], seq_col="seq", num_buckets=4,
     )
     # trigger N arrives LATE: k=1 seq 6 (stale), k=2 delete seq 6
     # (fresh), k=3 seq 4 (stale - below its base row), k=4 new
-    cat.apply_changes(
-        spark.createDataFrame(
+    ivm.apply_changes(
+        cat, spark.createDataFrame(
             [(1, 16, 6, "U"), (2, None, 6, "D"), (3, 29, 4, "U"),
              (4, 40, 1, "I")],
             "k long, v long, seq long, op string",
@@ -1043,8 +1044,8 @@ def test_apply_changes_cross_trigger_stale_ops_dropped(spark, tmp_path):
     assert got[4] == (40, 1), "new key applies"
 
     # equal-sequence re-delivery across triggers is stale too
-    cat.apply_changes(
-        spark.createDataFrame([(1, 99, 7, "U")],
+    ivm.apply_changes(
+        cat, spark.createDataFrame([(1, 99, 7, "U")],
                               "k long, v long, seq long, op string"),
         "T", ["k"], seq_col="seq", num_buckets=4,
     )
@@ -1054,13 +1055,13 @@ def test_apply_changes_cross_trigger_stale_ops_dropped(spark, tmp_path):
 
     # pinned LIMITATION: no tombstones - delete at seq 8, then a late
     # seq-6 op re-applies as first contact (docstring contract)
-    cat.apply_changes(
-        spark.createDataFrame([(4, None, 8, "D")],
+    ivm.apply_changes(
+        cat, spark.createDataFrame([(4, None, 8, "D")],
                               "k long, v long, seq long, op string"),
         "T", ["k"], seq_col="seq", num_buckets=4,
     )
-    cat.apply_changes(
-        spark.createDataFrame([(4, 41, 6, "U")],
+    ivm.apply_changes(
+        cat, spark.createDataFrame([(4, 41, 6, "U")],
                               "k long, v long, seq long, op string"),
         "T", ["k"], seq_col="seq", num_buckets=4,
     )
@@ -1159,8 +1160,8 @@ def test_vacuum_never_corrupts_hardlink_shared_current_snapshot(
 
     # a failed fold leaves no orphan version dir between merges
     with pytest.raises(Exception, match="preimage feed"):
-        cat.fold_changes_into_stats(
-            spark.createDataFrame(
+        ivm.fold_changes_into_stats(
+            cat, spark.createDataFrame(
                 [("U", 1, 0, 5)], "op string, k long, g long, v long"
             ),
             "TS", ["g"], "v",
@@ -1286,8 +1287,8 @@ def test_topk_ivm_scenario_horizon_ties_short_arrays_and_emptying(
              (8, "n", None)]
     up0 = spark.createDataFrame(rows0, "k long, g string, v double")
     cat.merge_upsert(up0, "U", ["k"], num_buckets=4, bucket_cols=["g"])
-    cat.fold_changes_into_topk(
-        up0.select(F.lit("I").alias("op"), "*"), "U", "T", ["g"], "v",
+    ivm.fold_changes_into_topk(
+        cat, up0.select(F.lit("I").alias("op"), "*"), "U", "T", ["g"], "v",
         k=3, num_buckets=4,
     )
     t = {r["g"]: (r["n"], r["n_vals"], r["topk"]) for r in cat.read("T").collect()}
@@ -1308,8 +1309,8 @@ def test_topk_ivm_scenario_horizon_ties_short_arrays_and_emptying(
             [(3, "a"), (5, "a"), (6, "b"), (7, "b")], "k long, g string"
         ),
     )
-    cat.fold_changes_into_topk(
-        cat.table_changes("U", 0, 1, with_preimages=True),
+    ivm.fold_changes_into_topk(
+        cat, ivm.table_changes(cat, "U", 0, 1, with_preimages=True),
         "U", "T", ["g"], "v", k=3, num_buckets=4,
     )
     t = {r["g"]: (r["n"], r["n_vals"], r["topk"]) for r in cat.read("T").collect()}
@@ -1335,8 +1336,8 @@ def test_topk_ivm_requires_group_bucketed_upstream(spark, tmp_path):
     up0 = spark.createDataFrame([(1, "a", 5.0)], "k long, g string, v double")
     cat.merge_upsert(up0, "U", ["k"], num_buckets=4)  # key-bucketed
     with pytest.raises(ValueError, match="bucket_cols"):
-        cat.fold_changes_into_topk(
-            up0.select(F.lit("I").alias("op"), "*"), "U", "T", ["g"], "v", k=2
+        ivm.fold_changes_into_topk(
+            cat, up0.select(F.lit("I").alias("op"), "*"), "U", "T", ["g"], "v", k=2
         )
 
 
@@ -1350,8 +1351,8 @@ def test_topk_ivm_raises_when_rederive_has_no_upstream(spark, tmp_path):
         "k long, g string, v double",
     )
     cat.merge_upsert(up0, "U", ["k"], num_buckets=4, bucket_cols=["g"])
-    cat.fold_changes_into_topk(
-        up0.select(F.lit("I").alias("op"), "*"), "U", "T", ["g"], "v",
+    ivm.fold_changes_into_topk(
+        cat, up0.select(F.lit("I").alias("op"), "*"), "U", "T", ["g"], "v",
         k=2, num_buckets=4,
     )
     # simulate the crash: meta survives, the version pointer is gone
@@ -1360,8 +1361,8 @@ def test_topk_ivm_raises_when_rederive_has_no_upstream(spark, tmp_path):
         [("D", 1, "a", 9.0)], "op string, k long, g string, v double"
     )
     with pytest.raises(ValueError, match="no current version"):
-        cat.fold_changes_into_topk(
-            feed, "U", "T", ["g"], "v", k=2, num_buckets=4
+        ivm.fold_changes_into_topk(
+            cat, feed, "U", "T", ["g"], "v", k=2, num_buckets=4
         )
 
 
@@ -1378,19 +1379,19 @@ def test_topk_ivm_rejects_post_image_only_feed_and_shrunk_k(
     )
     cat.merge_upsert(up0, "U", ["k"], num_buckets=4, bucket_cols=["g"])
     with pytest.raises(Exception, match="preimage feed"):
-        cat.fold_changes_into_topk(
-            spark.createDataFrame(
+        ivm.fold_changes_into_topk(
+            cat, spark.createDataFrame(
                 [("U", 1, "a", 9.5)], "op string, k long, g string, v double"
             ),
             "U", "T", ["g"], "v", k=2, num_buckets=4,
         )
-    cat.fold_changes_into_topk(
-        up0.select(F.lit("I").alias("op"), "*"), "U", "T", ["g"], "v",
+    ivm.fold_changes_into_topk(
+        cat, up0.select(F.lit("I").alias("op"), "*"), "U", "T", ["g"], "v",
         k=2, num_buckets=4,
     )
     with pytest.raises(ValueError, match="k must stay constant"):
-        cat.fold_changes_into_topk(
-            spark.createDataFrame(
+        ivm.fold_changes_into_topk(
+            cat, spark.createDataFrame(
                 [("I", 3, "a", 1.0)], "op string, k long, g string, v double"
             ),
             "U", "T", ["g"], "v", k=1, num_buckets=4,
@@ -1492,8 +1493,8 @@ def test_topk_ivm_struct_values_argmax_leaderboard(spark, tmp_path):
         F.struct("score", "k", "payload").alias("v"),
     )
     cat.merge_upsert(up0, "U", ["k"], num_buckets=4, bucket_cols=["g"])
-    cat.fold_changes_into_topk(
-        up0.select(F.lit("I").alias("op"), "*"), "U", "T", ["g"], "v",
+    ivm.fold_changes_into_topk(
+        cat, up0.select(F.lit("I").alias("op"), "*"), "U", "T", ["g"], "v",
         k=2, num_buckets=4,
     )
 
@@ -1517,8 +1518,8 @@ def test_topk_ivm_struct_values_argmax_leaderboard(spark, tmp_path):
             [(3, "a"), (5, "b")], "k long, g string"
         ),
     )
-    cat.fold_changes_into_topk(
-        cat.table_changes("U", 0, 1, with_preimages=True),
+    ivm.fold_changes_into_topk(
+        cat, ivm.table_changes(cat, "U", 0, 1, with_preimages=True),
         "U", "T", ["g"], "v", k=2, num_buckets=4,
     )
     assert arrays() == {"a": [(9.0, 1, "p1"), (7.0, 2, "p2")]}
@@ -1557,8 +1558,8 @@ def test_histogram_quantile_ivm_is_a_stats_fold_composition(spark, tmp_path):
              (4, "a", 27.0), (5, "b", 95.0)]
     up0 = spark.createDataFrame(rows0, "k long, g string, v double")
     cat.merge_upsert(up0, "U", ["k"], num_buckets=4)
-    cat.fold_changes_into_stats(
-        binned(up0.select(F.lit("I").alias("op"), "*")).withColumn(
+    ivm.fold_changes_into_stats(
+        cat, binned(up0.select(F.lit("I").alias("op"), "*")).withColumn(
             "one", F.lit(1)
         ),
         "HIST", ["g", "bin"], "one", num_buckets=4,
@@ -1580,9 +1581,9 @@ def test_histogram_quantile_ivm_is_a_stats_fold_composition(spark, tmp_path):
             [(4, "a"), (5, "b")], "k long, g string"
         ),
     )
-    cat.fold_changes_into_stats(
-        binned(
-            cat.table_changes("U", 0, 1, with_preimages=True)
+    ivm.fold_changes_into_stats(
+        cat, binned(
+            ivm.table_changes(cat, "U", 0, 1, with_preimages=True)
         ).withColumn("one", F.lit(1)),
         "HIST", ["g", "bin"], "one", num_buckets=4,
     )
@@ -1650,11 +1651,11 @@ def test_chained_gold_nonretractable_folds_via_silver_replica(spark, tmp_path):
     # the group-bucketed silver replica - the re-derivation target
     cat.merge_upsert(j0, "JRep", ["k"], num_buckets=4, bucket_cols=["nat"])
     feed0 = j0.select(F.lit("I").alias("op"), "*")
-    cat.fold_changes_into_extrema(feed0, "JRep", "GX", ["nat"], "cents",
+    ivm.fold_changes_into_extrema(cat, feed0, "JRep", "GX", ["nat"], "cents",
                                   num_buckets=4)
-    cat.fold_changes_into_hll(feed0, "JRep", "GH", ["nat"], "cents",
+    ivm.fold_changes_into_hll(cat, feed0, "JRep", "GH", ["nat"], "cents",
                               num_buckets=4)
-    cat.fold_changes_into_topk(feed0, "JRep", "GT", ["nat"], "cents",
+    ivm.fold_changes_into_topk(cat, feed0, "JRep", "GT", ["nat"], "cents",
                                k=2, num_buckets=4)
 
     # day 1 on the fact side: delete k4 (nat0's max), FK-move k3 3->2
@@ -1668,13 +1669,13 @@ def test_chained_gold_nonretractable_folds_via_silver_replica(spark, tmp_path):
         "A", ["k"], num_buckets=4,
         delete_keys=spark.createDataFrame([(4,)], "k long"),
     )
-    j_pre = cat._current_version("J")
-    cat.fold_changes_into_join(
-        cat.table_changes("A", 0, 1, with_preimages=True),
+    j_pre = cat.current_version("J")
+    ivm.fold_changes_into_join(
+        cat, ivm.table_changes(cat, "A", 0, 1, with_preimages=True),
         None, "J", "AIdx", "B", ["k"], ["ck"], num_buckets=4,
     )
-    feed1 = cat.table_changes(
-        "J", j_pre, cat._current_version("J"), with_preimages=True
+    feed1 = ivm.table_changes(
+        cat, "J", j_pre, cat.current_version("J"), with_preimages=True
     ).persist()
     posts = feed1.filter(F.col("op").isin("I", "U_post")).drop("op")
     pres = feed1.filter(F.col("op").isin("D", "U_pre"))
@@ -1683,11 +1684,11 @@ def test_chained_gold_nonretractable_folds_via_silver_replica(spark, tmp_path):
         posts, "JRep", ["k"], num_buckets=4, bucket_cols=["nat"],
         delete_keys=pres.select("k", "nat"),
     )
-    cat.fold_changes_into_extrema(feed1, "JRep", "GX", ["nat"], "cents",
+    ivm.fold_changes_into_extrema(cat, feed1, "JRep", "GX", ["nat"], "cents",
                                   num_buckets=4)
-    cat.fold_changes_into_hll(feed1, "JRep", "GH", ["nat"], "cents",
+    ivm.fold_changes_into_hll(cat, feed1, "JRep", "GH", ["nat"], "cents",
                               num_buckets=4)
-    cat.fold_changes_into_topk(feed1, "JRep", "GT", ["nat"], "cents",
+    ivm.fold_changes_into_topk(cat, feed1, "JRep", "GT", ["nat"], "cents",
                                k=2, num_buckets=4)
     feed1.unpersist()
 

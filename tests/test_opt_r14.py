@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ghcrawler_datalake_etl_spark.functions.concurrency import (
     run_concurrently,
 )
+from ghcrawler_datalake_etl_spark.sources import ivm
 from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
 
 
@@ -74,20 +75,20 @@ def test_fold_pinned_upstream_equals_sequential(spark, cat):
         return c
 
     seq = build(cat.warehouse + "_seq")
-    seq.fold_changes_into_extrema(
-        seq.table_changes("U", 0, 1, with_preimages=True),
+    ivm.fold_changes_into_extrema(
+        seq, ivm.table_changes(seq, "U", 0, 1, with_preimages=True),
         "U", "X", ["g"], "v", num_buckets=4,
     )
 
     pin = build(cat.warehouse + "_pin")
-    v1 = pin._current_version("U")
+    v1 = pin.current_version("U")
     # day 2 merges BEFORE the day-1 fold runs (the overlap's worst case)
     pin.merge_upsert(
         spark.createDataFrame([(9, "a", 77.0)], "k long, g string, v double"),
         "U", ["k"], num_buckets=4, bucket_cols=["g"],
     )
-    pin.fold_changes_into_extrema(
-        pin.table_changes("U", 0, 1, with_preimages=True),
+    ivm.fold_changes_into_extrema(
+        pin, ivm.table_changes(pin, "U", 0, 1, with_preimages=True),
         "U", "X", ["g"], "v", num_buckets=4, upstream_version=v1,
     )
 
@@ -148,8 +149,8 @@ def test_meta_schema_is_written_schema_not_delta(spark, cat):
         "D", ["k"], num_buckets=4,
     )
     # feed carries seq; table does not - alignment drops it
-    cat.apply_changes(
-        spark.createDataFrame(
+    ivm.apply_changes(
+        cat, spark.createDataFrame(
             [("U", 1, "a2", 10), ("I", 3, "c", 11)],
             "op string, k long, s string, seq long",
         ),

@@ -12,7 +12,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
+from ghcrawler_datalake_etl_spark.sources import ivm
+from ghcrawler_datalake_etl_spark.sources.sinks import (
+    BucketIds,
+    ParquetCatalog,
+)
 
 
 @pytest.fixture
@@ -26,8 +30,8 @@ def _merge_days(cat, spark):
         "k long, v string, n long",
     )
     cat.merge_upsert(day0, "T", ["k"], num_buckets=8)
-    cat.apply_changes(
-        spark.createDataFrame(
+    ivm.apply_changes(
+        cat, spark.createDataFrame(
             [
                 (3, "v3x", 30, "U"),
                 (7, None, None, "D"),
@@ -46,7 +50,7 @@ def test_table_changes_diff_has_no_join(spark, cat):
     union-agg form is one Exchange and no Join node at all."""
     _merge_days(cat, spark)
     for pre in (False, True):
-        feed = cat.table_changes("T", 0, 1, with_preimages=pre)
+        feed = ivm.table_changes(cat, "T", 0, 1, with_preimages=pre)
         p = feed._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in p, p
         assert "SortMergeJoin" not in p, p
@@ -58,7 +62,7 @@ def test_table_changes_union_agg_same_feed(spark, cat):
     the new row, D the deleted values, U the post-image (or the
     U_pre/U_post pair), unchanged keys never appear."""
     _merge_days(cat, spark)
-    got = {(r.op, r.k): (r.v, r.n) for r in cat.table_changes("T", 0, 1).collect()}
+    got = {(r.op, r.k): (r.v, r.n) for r in ivm.table_changes(cat, "T", 0, 1).collect()}
     assert got == {
         ("U", 3): ("v3x", 30),
         ("D", 7): ("v7", 70),
@@ -66,7 +70,7 @@ def test_table_changes_union_agg_same_feed(spark, cat):
     }
     pre = {
         (r.op, r.k): (r.v, r.n)
-        for r in cat.table_changes("T", 0, 1, with_preimages=True).collect()
+        for r in ivm.table_changes(cat, "T", 0, 1, with_preimages=True).collect()
     }
     assert pre == {
         ("U_pre", 3): ("v3", 30),
@@ -92,7 +96,7 @@ def test_table_changes_null_values_not_reported(spark, cat):
         "k long, v string, n long",
     )
     cat.merge_upsert(d1, "T", ["k"], num_buckets=4)
-    rows = cat.table_changes("T", 0, 1).collect()
+    rows = ivm.table_changes(cat, "T", 0, 1).collect()
     got = sorted((r.op, r.k, r.v, r.n) for r in rows)
     assert got == [("U", 2, "b", 2), ("U", 3, None, 3)]
 
@@ -111,19 +115,33 @@ def test_merge_affected_superset_equivalence(spark, tmp_path):
         "cast(pmod(xxhash64(id), 16) AS int) AS b",
     )
     victim = all_b.filter("b = 5").select("k")
+    touched = {
+        r.b
+        for r in delta.select("k")
+        .unionByName(victim)
+        .selectExpr("cast(pmod(xxhash64(k), 16) AS int) AS b")
+        .collect()
+    }
+    # a superset of at most half the buckets keeps the sparse
+    # per-bucket path (DENSE_REWRITE_FRACTION = 0.5)
+    spare = sorted(set(range(16)) - touched)
+    superset = sorted(touched | set(spare[: 8 - len(touched)]))
+    assert 5 in superset and len(touched) < len(superset) <= 8
     outs = []
-    for affected in (None, list(range(16))):
+    for affected in (None, superset):
         c = ParquetCatalog(
             spark, str(tmp_path / f"wh_{affected is None}"), retain=2
         )
         c.merge_upsert(base, "T", ["k"], num_buckets=16)
         stats = c.merge_upsert(
             delta, "T", ["k"], num_buckets=16, delete_keys=victim,
-            affected_buckets=affected,
-            dense_rewrite_fraction=1.1,  # force the sparse per-bucket path
+            affected_buckets=(
+                None if affected is None
+                else BucketIds(c.layout("T"), affected)
+            ),
         )
         if affected is not None:
-            assert stats["linked"] == 0  # superset: nothing linked
+            assert stats["rewritten"] == len(superset)
         outs.append(sorted((r.k, r.v) for r in c.read("T").collect()))
     assert outs[0] == outs[1]
     # the delete-only bucket's keys are gone
@@ -139,7 +157,9 @@ def test_read_pruned_superset_ids_exact_rows(spark, cat):
     cat.merge_upsert(base, "U", ["k"], num_buckets=8, bucket_cols=["g"])
     probe = spark.createDataFrame([(3,)], "g long")
     exact = cat.read_pruned("U", probe)
-    wide = cat.read_pruned("U", probe, bucket_ids=list(range(8)))
+    wide = cat.read_pruned(
+        "U", probe, bucket_ids=BucketIds(cat.layout("U"), list(range(8)))
+    )
     assert sorted(map(tuple, exact.collect())) == sorted(
         map(tuple, wide.collect())
     )
@@ -151,9 +171,14 @@ def test_bucket_ids_multi_matches_per_spec_collects(spark, cat):
     df = spark.createDataFrame(
         [(1, 10), (2, 20), (3, 30), (18, 10)], "k long, g long"
     )
-    fused = cat._bucket_ids_multi(df, [(["k"], 16), (["g"], 8)])
-    for spec, got in zip(((["k"], 16), (["g"], 8)), fused):
-        cols, n = spec
+    cat.merge_upsert(df, "K", ["k"], num_buckets=16)
+    cat.merge_upsert(df, "G", ["k"], num_buckets=8, bucket_cols=["g"])
+    fused = cat.bucket_ids(df, ["K", "G"])
+    for (table, cols, n), tagged in zip(
+        (("K", ["k"], 16), ("G", ["g"], 8)), fused
+    ):
+        assert tagged.layout == cat.layout(table)
+        got = tagged.ids
         want = sorted(
             r[0]
             for r in df.select(
@@ -192,8 +217,8 @@ def test_fold_join_unmatched_fk_superset_affected(spark, cat):
         ],
         "op string, k long, ck long, cents long",
     )
-    cat.fold_changes_into_join(
-        feed_a, None, "J", "AIdx", "B", ["k"], ["ck"], num_buckets=4,
+    ivm.fold_changes_into_join(
+        cat, feed_a, None, "J", "AIdx", "B", ["k"], ["ck"], num_buckets=4,
     )
     got = sorted(map(tuple, cat.read("J").collect()))
     a_final = spark.createDataFrame(
@@ -215,8 +240,8 @@ def test_fold_stats_fused_ids_equal_fresh_aggregate(spark, cat):
         "k long, g string, v long",
     )
     cat.merge_upsert(day0, "U", ["k"], num_buckets=8)
-    cat.fold_changes_into_stats(
-        day0.selectExpr("'I' AS op", "*"), "S", ["g"], "v", num_buckets=4,
+    ivm.fold_changes_into_stats(
+        cat, day0.selectExpr("'I' AS op", "*"), "S", ["g"], "v", num_buckets=4,
     )
     # day 1: move k=3 to group a, delete k=4 (group c empties)
     feed = spark.createDataFrame(
@@ -227,7 +252,7 @@ def test_fold_stats_fused_ids_equal_fresh_aggregate(spark, cat):
         ],
         "op string, k long, g string, v long",
     )
-    cat.fold_changes_into_stats(feed, "S", ["g"], "v", num_buckets=4)
+    ivm.fold_changes_into_stats(cat, feed, "S", ["g"], "v", num_buckets=4)
     got = sorted(map(tuple, cat.read("S").collect()))
     final = spark.createDataFrame(
         [(1, "a", 10), (2, "a", 20), (3, "a", 5)],
@@ -247,3 +272,34 @@ def test_fold_stats_fused_ids_equal_fresh_aggregate(spark, cat):
         )
     )
     assert got == want
+
+
+def test_stale_bucket_ids_ignored_after_rebucket(spark, tmp_path):
+    """Ids collected under one layout and handed over after the table
+    was re-bucketed (another ``num_buckets``) must not prune: their
+    tag no longer equals the table's layout, so read_pruned and
+    merge_upsert collect their own and give exactly what the
+    unassisted calls give. Used raw, the old layout's ids would name
+    the wrong bucket directories."""
+    base = spark.range(64).selectExpr("id AS k", "id * 3 AS v")
+    probe = spark.createDataFrame([(5,), (17,), (40,)], "k long")
+    delta = spark.createDataFrame(
+        [(5, -1), (17, -2), (99, -3)], "k long, v long"
+    )
+    outs = []
+    for stale in (False, True):
+        c = ParquetCatalog(spark, str(tmp_path / f"wh_{stale}"), retain=2)
+        c.merge_upsert(base, "T", ["k"], num_buckets=4)
+        [ids] = c.bucket_ids(probe, ["T"])
+        c.merge_upsert(base, "T", ["k"], num_buckets=16)  # re-bucket
+        assert ids.layout != c.layout("T")
+        given = ids if stale else None
+        pruned = c.read_pruned("T", probe, bucket_ids=given)
+        got = sorted(map(tuple, pruned.collect()))
+        c.merge_upsert(
+            delta, "T", ["k"], num_buckets=16, affected_buckets=given
+        )
+        outs.append((got, sorted(map(tuple, c.read("T").collect()))))
+    assert outs[0] == outs[1]
+    assert [k for k, _ in outs[1][0]] == [5, 17, 40]
+    assert len(outs[1][1]) == 65  # 64 keys, one new, none duplicated

@@ -17,6 +17,7 @@ import pytest
 
 from ghcrawler_datalake_etl_spark.pipeline import run_daily
 from ghcrawler_datalake_etl_spark.plans.catalog import CATALOG, spec_for
+from ghcrawler_datalake_etl_spark.sources import ivm
 from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
 from ghcrawler_datalake_etl_spark.sources.staging import read_staging, stage_json
 from tests.conftest import meta, write_docs
@@ -327,6 +328,22 @@ def test_export_repo_data_fan_out(spark, warehouse, tmp_path):
     assert counts2["Repo"] == 0 and counts2.get("Issue", 0) == 0
 
 
+def test_default_exports_join_columns_are_declared():
+    """Every export's join column is a declared field of its table's
+    spec, and so is ``RepoUrn`` of each hop table: export_repo_data
+    joins them unconditionally, so a spec edit that drops one fails
+    here instead of silently skipping an export."""
+    from ghcrawler_datalake_etl_spark.export import DEFAULT_EXPORTS
+
+    def fields(table):
+        return {f.name for f in spec_for(table).fields}
+
+    for table, key, hop in DEFAULT_EXPORTS:
+        assert key in fields(table), (table, key)
+        if hop:
+            assert "RepoUrn" in fields(hop), hop
+
+
 def test_issue_labels_pattern_b_by_issue_urn(spark, warehouse):
     catalog, _ = warehouse
     got = rows(catalog, "IssueLabel", "IssueLabelId", "Name", "Color")
@@ -600,7 +617,7 @@ def test_apply_changes_cdc_ops(spark, tmp_path):
         ],
         "k long, val string, op string",
     )
-    stats = cat.apply_changes(changes, "T", ["k"], num_buckets=16)
+    stats = ivm.apply_changes(cat, changes, "T", ["k"], num_buckets=16)
     got = {r["k"]: r["val"] for r in cat.read("T").collect()}
     assert 1 not in got
     assert got[2] == "updated"
@@ -625,7 +642,7 @@ def test_apply_changes_delete_only_and_conflict(spark, tmp_path):
     feed = spark.createDataFrame(
         [(3, None, "D"), (7, None, "D")], "k long, v long, op string"
     )
-    cat.apply_changes(feed, "T", ["k"], num_buckets=4)
+    ivm.apply_changes(cat, feed, "T", ["k"], num_buckets=4)
     keys = {r["k"] for r in cat.read("T").collect()}
     assert keys == set(range(20)) - {3, 7}
 
@@ -633,7 +650,7 @@ def test_apply_changes_delete_only_and_conflict(spark, tmp_path):
     feed = spark.createDataFrame(
         [(5, 999, "D"), (5, 555, "U")], "k long, v long, op string"
     )
-    cat.apply_changes(feed, "T", ["k"], num_buckets=4)
+    ivm.apply_changes(cat, feed, "T", ["k"], num_buckets=4)
     got = {r["k"]: r["v"] for r in cat.read("T").collect()}
     assert got[5] == 555
 
@@ -671,7 +688,7 @@ def test_apply_changes_seq_col_orders_mixed_feed(spark, tmp_path):
         ],
         "k long, v long, seq long, op string",
     )
-    cat.apply_changes(feed, "T", ["k"], seq_col="seq", num_buckets=4)
+    ivm.apply_changes(cat, feed, "T", ["k"], seq_col="seq", num_buckets=4)
     got = {r["k"]: (r["v"], r["seq"]) for r in cat.read("T").collect()}
     assert 1 not in got, "insert-then-delete must end deleted"
     assert got[2] == (222, 2), "delete-then-insert must end inserted"
@@ -686,6 +703,6 @@ def test_apply_changes_seq_col_orders_mixed_feed(spark, tmp_path):
         [(6, 666, 9, "U"), (6, None, 10, "D")],
         "k long, v long, seq long, op string",
     )
-    cat.apply_changes(feed2, "T", ["k"], num_buckets=4)
+    ivm.apply_changes(cat, feed2, "T", ["k"], num_buckets=4)
     got = {r["k"]: r["v"] for r in cat.read("T").collect()}
     assert got[6] == 666

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 
+from ghcrawler_datalake_etl_spark.sources import ivm
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -404,7 +406,7 @@ def test_fold_stats_delta_never_shuffles_standing(spark):
     # the fold must prune it with a broadcast SEMI on the feed's groups
     # and broadcast the feed-sized survivors into the outer join - no
     # SortMergeJoin, no Exchange of the standing side at any scale
-    from ghcrawler_datalake_etl_spark.sources.sinks import fold_stats_delta
+    from ghcrawler_datalake_etl_spark.sources.ivm import fold_stats_delta
 
     feed = spark.createDataFrame(
         [("I", 1, "a", 10)], "op string, k long, g string, cents long"
@@ -765,7 +767,7 @@ def test_table_changes_reads_only_changed_buckets(spark, tmp_path):
         spark.createDataFrame([(7, 1000)], "k long, v long"),
         "T", ["k"], num_buckets=16,
     )
-    feed = cat.table_changes("T", 0, 1)
+    feed = ivm.table_changes(cat, "T", 0, 1)
     bucket = (
         spark.createDataFrame([(7,)], "k long")
         .select(F.pmod(F.xxhash64("k"), F.lit(16)).cast("int").alias("b"))

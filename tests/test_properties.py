@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ghcrawler_datalake_etl_spark.functions.core import latest_by
 from ghcrawler_datalake_etl_spark.operators import joins as JN
 from ghcrawler_datalake_etl_spark.operators import text as TX
+from ghcrawler_datalake_etl_spark.sources import ivm
 
 SETTINGS = dict(max_examples=10, deadline=None, derandomize=True)
 
@@ -1195,8 +1196,8 @@ def test_changefeed_fold_matches_recompute_property(spark, init, days):
     )
     s0 = spark.createDataFrame(init, SCHEMA)
     cat.merge_upsert(s0, "T", ["k"], num_buckets=4)
-    cat.fold_changes_into_stats(
-        s0.select(F.lit("I").alias("op"), "k", "g", "cents"),
+    ivm.fold_changes_into_stats(
+        cat, s0.select(F.lit("I").alias("op"), "k", "g", "cents"),
         "S", ["g"], "cents", num_buckets=2,
     )
     for v, ops in enumerate(days):
@@ -1207,8 +1208,8 @@ def test_changefeed_fold_matches_recompute_property(spark, init, days):
             num_buckets=4,
             delete_keys=spark.createDataFrame(dels, "k long"),
         )
-        cat.fold_changes_into_stats(
-            cat.table_changes("T", v, v + 1, with_preimages=True),
+        ivm.fold_changes_into_stats(
+            cat, ivm.table_changes(cat, "T", v, v + 1, with_preimages=True),
             "S", ["g"], "cents", num_buckets=2,
         )
     got = {
@@ -1278,8 +1279,8 @@ def test_join_ivm_fold_matches_recompute_property(
     b0 = spark.createDataFrame(init_b, B_SCHEMA)
     cat.merge_upsert(a0, "A", ["k"], num_buckets=4)
     cat.merge_upsert(b0, "B", ["fk"], num_buckets=4)
-    cat.fold_changes_into_join(
-        a0.select(F.lit("I").alias("op"), "*"),
+    ivm.fold_changes_into_join(
+        cat, a0.select(F.lit("I").alias("op"), "*"),
         b0.select(F.lit("I").alias("op"), "*"),
         "J", "AIdx", "B", ["k"], ["fk"], num_buckets=4,
     )
@@ -1302,9 +1303,9 @@ def test_join_ivm_fold_matches_recompute_property(
                 [(fk,) for fk, bv, d in b_ops if d], "fk long"
             ),
         )
-        cat.fold_changes_into_join(
-            cat.table_changes("A", v, v + 1, with_preimages=True),
-            cat.table_changes("B", v, v + 1, with_preimages=True),
+        ivm.fold_changes_into_join(
+            cat, ivm.table_changes(cat, "A", v, v + 1, with_preimages=True),
+            ivm.table_changes(cat, "B", v, v + 1, with_preimages=True),
             "J", "AIdx", "B", ["k"], ["fk"], num_buckets=4,
         )
     got = {tuple(r) for r in cat.read("J").select("k", "fk", "av", "bv").collect()}
@@ -1357,8 +1358,8 @@ def test_extrema_fold_matches_recompute_property(spark, init, days):
     state = {k: (g, v) for k, g, v in init}
     s0 = spark.createDataFrame(init, SCHEMA)
     cat.merge_upsert(s0, "U", ["k"], num_buckets=4, bucket_cols=["g"])
-    cat.fold_changes_into_extrema(
-        s0.select(F.lit("I").alias("op"), "k", "g", "v"),
+    ivm.fold_changes_into_extrema(
+        cat, s0.select(F.lit("I").alias("op"), "k", "g", "v"),
         "U", "X", ["g"], "v", num_buckets=2,
     )
     for v_i, ops in enumerate(days):
@@ -1377,8 +1378,8 @@ def test_extrema_fold_matches_recompute_property(spark, init, days):
                 state.pop(k, None)
             else:
                 state[k] = (g, val)
-        cat.fold_changes_into_extrema(
-            cat.table_changes("U", v_i, v_i + 1, with_preimages=True),
+        ivm.fold_changes_into_extrema(
+            cat, ivm.table_changes(cat, "U", v_i, v_i + 1, with_preimages=True),
             "U", "X", ["g"], "v", num_buckets=2,
         )
     got = {
@@ -1619,8 +1620,8 @@ def test_hll_fold_matches_recompute_property(spark, init, days):
     state = {k: (g, v) for k, g, v in init}
     s0 = spark.createDataFrame(init, SCHEMA)
     cat.merge_upsert(s0, "U", ["k"], num_buckets=4, bucket_cols=["g"])
-    cat.fold_changes_into_hll(
-        s0.select(F.lit("I").alias("op"), "k", "g", "v"),
+    ivm.fold_changes_into_hll(
+        cat, s0.select(F.lit("I").alias("op"), "k", "g", "v"),
         "U", "H", ["g"], "v", num_buckets=2,
     )
     for v_i, ops in enumerate(days):
@@ -1637,8 +1638,8 @@ def test_hll_fold_matches_recompute_property(spark, init, days):
                 state.pop(k, None)
             else:
                 state[k] = (g, val)
-        cat.fold_changes_into_hll(
-            cat.table_changes("U", v_i, v_i + 1, with_preimages=True),
+        ivm.fold_changes_into_hll(
+            cat, ivm.table_changes(cat, "U", v_i, v_i + 1, with_preimages=True),
             "U", "H", ["g"], "v", num_buckets=2,
         )
     got = {
@@ -1701,8 +1702,8 @@ def test_topk_fold_matches_recompute_property(spark, init, days):
     state = {k: (g, v) for k, g, v in init}
     s0 = spark.createDataFrame(init, SCHEMA)
     cat.merge_upsert(s0, "U", ["k"], num_buckets=4, bucket_cols=["g"])
-    cat.fold_changes_into_topk(
-        s0.select(F.lit("I").alias("op"), "k", "g", "v"),
+    ivm.fold_changes_into_topk(
+        cat, s0.select(F.lit("I").alias("op"), "k", "g", "v"),
         "U", "T", ["g"], "v", k=K, num_buckets=2,
     )
     for v_i, ops in enumerate(days):
@@ -1719,8 +1720,8 @@ def test_topk_fold_matches_recompute_property(spark, init, days):
                 state.pop(k, None)
             else:
                 state[k] = (g, val)
-        cat.fold_changes_into_topk(
-            cat.table_changes("U", v_i, v_i + 1, with_preimages=True),
+        ivm.fold_changes_into_topk(
+            cat, ivm.table_changes(cat, "U", v_i, v_i + 1, with_preimages=True),
             "U", "T", ["g"], "v", k=K, num_buckets=2,
         )
     got = {
@@ -1786,8 +1787,8 @@ def test_topk_fold_struct_values_property(spark, init, days):
     state = {k: (g, s) for k, g, s in init}
     s0 = structify(spark.createDataFrame(init, SCHEMA))
     cat.merge_upsert(s0, "U", ["k"], num_buckets=4, bucket_cols=["g"])
-    cat.fold_changes_into_topk(
-        s0.select(F.lit("I").alias("op"), "*"),
+    ivm.fold_changes_into_topk(
+        cat, s0.select(F.lit("I").alias("op"), "*"),
         "U", "T", ["g"], "v", k=K, num_buckets=2,
     )
     for v_i, ops in enumerate(days):
@@ -1803,8 +1804,8 @@ def test_topk_fold_struct_values_property(spark, init, days):
                 state.pop(k, None)
             else:
                 state[k] = (g, s)
-        cat.fold_changes_into_topk(
-            cat.table_changes("U", v_i, v_i + 1, with_preimages=True),
+        ivm.fold_changes_into_topk(
+            cat, ivm.table_changes(cat, "U", v_i, v_i + 1, with_preimages=True),
             "U", "T", ["g"], "v", k=K, num_buckets=2,
         )
     got = {

@@ -10,6 +10,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from ghcrawler_datalake_etl_spark.sources import ivm
 from ghcrawler_datalake_etl_spark.streaming import (
     sessionize_batch,
     sessionize_stream,
@@ -926,8 +927,8 @@ def test_stream_apply_changes_feed_roundtrip(spark, tmp_path):
         "T", ["k"], num_buckets=4,
     )
     for rows in (t1, t2):
-        twin.apply_changes(
-            spark.createDataFrame(rows, "k long, v string, op string"),
+        ivm.apply_changes(
+            twin, spark.createDataFrame(rows, "k long, v string, op string"),
             "T", ["k"], num_buckets=4,
         )
     got = sorted((r.k, r.v) for r in cat.read("T").collect())
@@ -950,15 +951,15 @@ def test_stream_apply_changes_feed_roundtrip(spark, tmp_path):
     )
     assert len(feed_dirs) == 2
     for _, d in feed_dirs:
-        replay.apply_changes(
-            spark.read.parquet(os.path.join(feed_root, d)),
+        ivm.apply_changes(
+            replay, spark.read.parquet(os.path.join(feed_root, d)),
             "T", ["k"], num_buckets=4,
         )
     assert got == sorted((r.k, r.v) for r in replay.read("T").collect())
 
     # (c) replayed LAST trigger (the only one the checkpoint contract
     # can replay): same feed, no spurious version
-    ver_before = cat._current_version("T")
+    ver_before = cat.current_version("T")
     feed1 = os.path.join(feed_root, feed_dirs[1][1])
     before = sorted(
         (r.op, r.k, r.v) for r in spark.read.parquet(feed1).collect()
@@ -968,7 +969,7 @@ def test_stream_apply_changes_feed_roundtrip(spark, tmp_path):
         spark.createDataFrame(t2, "k long, v string, op string"),
         feed_dirs[1][0], "T", ["k"], feed_root, "op", None, 4,
     )
-    assert cat._current_version("T") == ver_before
+    assert cat.current_version("T") == ver_before
     assert before == sorted(
         (r.op, r.k, r.v) for r in spark.read.parquet(feed1).collect()
     )
@@ -983,7 +984,7 @@ def test_stream_apply_changes_feed_roundtrip(spark, tmp_path):
         spark.createDataFrame(t1, "k long, v string, op string"),
         feed_dirs[0][0], "T", ["k"], feed_root, "op", None, 4,
     )
-    assert cat._current_version("T") == ver_before
+    assert cat.current_version("T") == ver_before
     assert before0 == sorted(
         (r.op, r.k, r.v) for r in spark.read.parquet(feed0).collect()
     )
