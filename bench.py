@@ -45,21 +45,20 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def bench_incremental_merge(spark, n_docs: int = 150_000):
-    """Two-day Repo pipeline timing: day 2 as a full snapshot rewrite
-    vs the merge_upsert incremental path (sources/sinks.py) on a
-    synthesized GHCrawler-shaped corpus. Sidecar-only numbers - the
-    round-2 verdict asked for the rewrite-vs-merge win to be measured,
-    not just pytest-pinned.
+def bench_table_changes(spark, n_docs: int = 150_000):
+    """Changefeed emission over a merged table: ``ivm.table_changes``
+    diffs retained versions of a 150k-row ``Repo`` table built with
+    ``merge_upsert`` (the IVM layer's write path) from a synthesized
+    GHCrawler-shaped corpus. Sidecar-only numbers.
 
     Two delta shapes, because bucket pruning is the whole mechanism:
-    a DENSE delta (400 uniformly-hashed keys > 32 buckets) touches
-    every bucket, so merge degenerates to a full rewrite plus merge
-    overhead - the honest worst case; a SPARSE delta (6 keys) leaves
-    most buckets untouched and they hard-link instead of rewriting -
-    the case incremental runs exist for. At 100 TB the same geometry
-    holds per-bucket: the win scales with (untouched buckets /
-    num_buckets), not with data size."""
+    a DENSE day (400 uniformly-hashed keys over 32 buckets) rewrites
+    every bucket, a SPARSE day (6 keys) leaves most of them hard-linked,
+    and hardlink identity lets the diff skip inode-equal buckets unread,
+    so emission scales with the CHANGED fraction. Each day's rows are
+    staged and curated alone (``run_daily(init_mode=True)``), then
+    merged; every day is newer than the standing rows, so the merge's
+    delta-wins equals the ETL's latest-wins."""
     import shutil
     import tempfile
 
@@ -69,7 +68,8 @@ def bench_incremental_merge(spark, n_docs: int = 150_000):
     from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
     from ghcrawler_datalake_etl_spark.sources.staging import stage_json
 
-    root = tempfile.mkdtemp(prefix="bench_merge_")
+    root = tempfile.mkdtemp(prefix="bench_tc_")
+    spec = spec_for("Repo")
 
     def _doc(i: int, day: str) -> str:
         return json.dumps(
@@ -90,6 +90,10 @@ def bench_incremental_merge(spark, n_docs: int = 150_000):
 
     out: dict[str, float] = {}
     try:
+        staging = os.path.join(root, "staging")
+        day_cat = ParquetCatalog(spark, os.path.join(root, "wh_day"))
+        # retain=3 keeps all three versions alive for the diffs below
+        catalog = ParquetCatalog(spark, os.path.join(root, "wh"), retain=3)
         for day, ids in (
             ("2024-01-05", range(n_docs)),                      # base
             ("2024-01-06", range(0, n_docs, n_docs // 400)),    # dense
@@ -99,39 +103,12 @@ def bench_incremental_merge(spark, n_docs: int = 150_000):
             with open(path, "w") as f:
                 for i in ids:
                     f.write(_doc(i, day) + "\n")
-            stage_json(spark, path, os.path.join(root, "staging"), day)
-
-        for mode, incremental in (("full", False), ("merge", True)):
-            # retain=3 on the merge warehouse keeps all three versions
-            # alive for the changefeed-emission arms below
-            catalog = ParquetCatalog(
-                spark, os.path.join(root, f"wh_{mode}"),
-                retain=3 if incremental else 2,
-            )
-            run_daily(
-                spark, os.path.join(root, "staging"), "2024-01-05",
-                catalog, specs=(spec_for("Repo"),), incremental=incremental,
-            )
-            for label, day in (("dense", "2024-01-06"),
-                               ("sparse", "2024-01-07")):
-                t0 = time.perf_counter()
-                run_daily(
-                    spark, os.path.join(root, "staging"), day,
-                    catalog, specs=(spec_for("Repo"),),
-                    incremental=incremental,
-                )
-                out[f"{mode}_{label}_delta_sec"] = round(
-                    time.perf_counter() - t0, 3
-                )
+            stage_json(spark, path, staging, day)
+            run_daily(spark, staging, day, day_cat, specs=(spec,), init_mode=True)
+            catalog.merge_upsert(day_cat.read(spec.table), spec.table, list(spec.key))
         out["n_docs"] = n_docs
         out["n_delta_keys_dense"] = 400
         out["n_delta_keys_sparse"] = 6
-        # round-11 changefeed-emission arms: table_changes diffs two
-        # retained versions of the 150k-row merged table. The sparse
-        # diff (6-key day) must cost a fraction of the dense one (400
-        # keys -> most buckets rewritten): hardlink identity skips
-        # inode-equal buckets unread, so emission scales with the
-        # CHANGED fraction - the mechanism, measured, not just pinned.
         t0 = time.perf_counter()
         feed = ivm.table_changes(catalog, "Repo", 0, 1)
         out["tc_dense_rows"] = feed.count()
@@ -813,11 +790,11 @@ def main() -> None:
         # session (round-9 investigation; min-of-2 did not mask it
         # because BOTH runs inherit the pressure).
         spark.catalog.clearCache()
-        merge_runs = [bench_incremental_merge(spark) for _ in range(side_rep)]
-        sidecar["incremental_merge"] = {
-            k: (min(r[k] for r in merge_runs)
-                if k.endswith("_sec") else merge_runs[0][k])
-            for k in merge_runs[0]
+        tc_runs = [bench_table_changes(spark) for _ in range(side_rep)]
+        sidecar["table_changes"] = {
+            k: (min(r[k] for r in tc_runs)
+                if k.endswith("_sec") else tc_runs[0][k])
+            for k in tc_runs[0]
         }
         if os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1":
             scale_runs = [bench_scaling(spark) for _ in range(side_rep)]

@@ -4,7 +4,7 @@ GetRepoData(org, repo); /root/reference/USQL/ProcessDaily.usql:7,
 StageData.usql:5, GetRepoData-unused.usql:7) as subcommands:
 
     python -m ghcrawler_datalake_etl_spark stage --input DIR --staging DIR --date 2024-01-05
-    python -m ghcrawler_datalake_etl_spark daily --staging DIR --warehouse DIR --date 2024-01-05 [--init]
+    python -m ghcrawler_datalake_etl_spark daily --staging DIR --warehouse DIR --date 2024-01-05 [--init] [--tables T1,T2]
     python -m ghcrawler_datalake_etl_spark export --warehouse DIR --org LOGIN --repo NAME --out DIR
 """
 
@@ -28,9 +28,6 @@ def main(argv: list[str] | None = None) -> int:
     p_daily.add_argument("--date", required=True)
     p_daily.add_argument("--init", action="store_true",
                          help="backfill mode (ignore previous snapshots)")
-    p_daily.add_argument("--incremental", action="store_true",
-                         help="bucket-level merge for keyed snapshots "
-                              "(rewrites only the day's buckets)")
     p_daily.add_argument("--tables", default=None,
                          help="comma-separated table subset")
 
@@ -67,7 +64,6 @@ def main(argv: list[str] | None = None) -> int:
             ParquetCatalog(spark, args.warehouse),
             specs=specs,
             init_mode=args.init,
-            incremental=args.incremental,
         )
         print("\n".join(built))
     else:

@@ -3,7 +3,6 @@ from ghcrawler_datalake_etl_spark.operators.patterns import (
     collection_refresh,
     snapshot_upsert,
     traffic_series,
-    version_log,
 )
 
 __all__ = [
@@ -11,5 +10,4 @@ __all__ = [
     "collection_refresh",
     "snapshot_upsert",
     "traffic_series",
-    "version_log",
 ]

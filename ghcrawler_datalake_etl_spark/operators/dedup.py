@@ -93,14 +93,6 @@ def minhash_signature_from_hashes(hs: Column, num_hashes: int = 64) -> Column:
     )
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature straight from a shingle array. Prefer the
-    two-projection form (shingle_hashes in one select, then
-    minhash_signature_from_hashes) - inlining here re-evaluates the md5
-    per permutation."""
-    return minhash_signature_from_hashes(shingle_hashes(shingle_col), num_hashes)
-
-
 def minhash_signature_pandas_udf(num_hashes: int = 64):
     """Vectorized (Arrow) form of minhash_signature_from_hashes -
     bit-identical output (same int64 (a*h+b) mod P arithmetic), ~5-10x

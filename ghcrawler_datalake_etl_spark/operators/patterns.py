@@ -3,7 +3,7 @@
 transforms.
 
 Each function is pure DataFrame-in / DataFrame-out so the same transform
-serves the daily-incremental path (ProcessDaily) and the one-time
+serves the daily path (ProcessDaily) and the one-time
 backfill path (CreateAndInitialize*): the backfill is just the transform
 with an empty/absent previous snapshot. All logic is Column expressions
 (no Python UDFs) so every pattern stays on the Tungsten codegen path and
@@ -12,9 +12,9 @@ scales by partitioning alone.
 Scale notes (100 TB discipline):
 - The only shuffles are the ones the semantics require: one exchange per
   dedup (hash by key) and, for collection refresh, one for the anti-join.
-- Dedup defaults to the window form for parity but accepts
-  ``strategy="max_by"`` (hash-aggregate with map-side partial combine -
-  no per-partition full sort) for wide inputs; see functions.core.latest_by.
+- Dedup is the window form (parity with the reference's ROW_NUMBER);
+  ``functions.core.latest_by(strategy="max_by")`` is the sort-free
+  hash-aggregate alternative for wide inputs.
 - Union-with-snapshot never re-reads more than the snapshot's columns;
   explodes happen AFTER the parent dedup so the array blow-up applies to
   the minimal row set (mirrors /root/reference/USQL/ProcessDaily.usql:292).
@@ -47,7 +47,6 @@ def snapshot_upsert(
     keys: Sequence[str],
     order_by: Sequence[Column] | None = None,
     tiebreakers: Sequence[str] = (),
-    strategy: str = "window",
 ) -> DataFrame:
     """Pattern A - scalar-entity snapshot upsert (14 reference tables).
 
@@ -55,6 +54,11 @@ def snapshot_upsert(
     snapshot -> latest-wins dedup on ``keys`` ordered by
     ``greatest(DeletedAt, ProcessedAt)`` desc -> full rewrite.
     Ref canonical: Commit, /root/reference/USQL/ProcessDaily.usql:98-177.
+
+    Pattern E (RepoLog's version log) is the same transform keyed on
+    (entity key, version timestamp), so every observed version is kept
+    and re-crawls of one version dedupe to the latest fetch
+    (reference USQL/ProcessDaily.usql:2621,2628-2631,2747-2859).
 
     ``order_by`` defaults to the reference's F10 "last touched" ordering,
     which expects ``deleted_at``/``processed_at`` columns present.
@@ -67,7 +71,7 @@ def snapshot_upsert(
         greatest_touched("deleted_at", "processed_at")
     ]
     order += [F.col(c) for c in tiebreakers]
-    return latest_by(unioned, keys, order, strategy=strategy)
+    return latest_by(unioned, keys, order)
 
 
 def array_child(
@@ -166,27 +170,3 @@ def traffic_series(
         return unioned.dropDuplicates(list(natural_key))
     return latest_by(unioned, natural_key, order_by)
 
-
-def version_log(
-    new_df: DataFrame,
-    log_df: DataFrame | None,
-    keys: Sequence[str],
-    order_by: Sequence[Column] | None = None,
-    tiebreakers: Sequence[str] = (),
-) -> DataFrame:
-    """Pattern E - append-style version log (RepoLog only).
-
-    Same machinery as pattern A but keyed on (entity key, version
-    timestamp) so EVERY observed version is retained - an SCD-2-lite.
-    Ref: /root/reference/USQL/ProcessDaily.usql:2621,2628-2631,2747-2859
-    (dedup key (EtlSourceId, UpdatedAt)).
-
-    Re-crawls of the same version dedupe to one row (latest fetch wins by
-    processed_at); distinct versions accumulate.
-    """
-    unioned = _union_snapshot(new_df, log_df)
-    order = list(order_by) if order_by is not None else [
-        greatest_touched("deleted_at", "processed_at")
-    ]
-    order += [F.col(c) for c in tiebreakers]
-    return latest_by(unioned, keys, order)

@@ -401,11 +401,6 @@ def fingerprint(col: ColumnOrName) -> Column:
     return F.md5(F.array_join(toks, " "))
 
 
-def content_hash(col: ColumnOrName) -> Column:
-    """Exact content hash (md5 of the raw text)."""
-    return F.md5(_path(col))
-
-
 # Rabin-Karp rolling-hash parameters. P is the Mersenne prime 2^31-1 so
 # acc stays < 2^31 and acc*B + h (< 2^31 * 2^20 + 2^31) never overflows
 # int64 - the identical fold is therefore exact in any BIGINT engine.
@@ -477,13 +472,6 @@ def winnow_fingerprints(th: Column, window: int = 4) -> Column:
     return F.when(n == 0, F.array().cast("array<long>")).otherwise(
         F.array_sort(F.array_distinct(wins))
     )
-
-
-def winnow_sketch_hash(th: Column, window: int = 4) -> Column:
-    """md5 digest of the winnowing sketch - one joinable string per
-    document for sketch-equality grouping."""
-    fps = winnow_fingerprints(th, window)
-    return F.md5(F.array_join(F.transform(fps, lambda x: x.cast("string")), ","))
 
 
 def bpe_pair_counts(

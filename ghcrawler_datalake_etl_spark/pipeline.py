@@ -10,12 +10,14 @@ Scale/plan notes:
 - The day's staging partition is scanned once and cached (the reference
   re-scans it per section - quirk Q6, SURVEY.md 2.11); each entity filter
   then prunes from memory.
-- Each entity family parses with the schema the catalog fixes for it
-  (``plans.catalog.ENTITY_SCHEMAS``, SURVEY.md 1.3), so every path a spec
+- Each entity family parses with the schema its specs fix for it
+  (``plans.catalog.entity_schemas``, SURVEY.md 1.3), so every path a spec
   reads exists; absent and malformed values project as typed NULLs (the
   reference's ``Get*`` are total), whatever the day holds.
-- Writes go through the atomic-swap catalog (fixes Q8) with file counts
-  scaled by the reference's relative-size hints.
+- Every table is recomputed and replaced in full through the atomic-swap
+  catalog (``ParquetCatalog.overwrite``, fixes Q8), like the reference's
+  TRUNCATE+INSERT (reference USQL/ProcessDaily.usql:142-177), with
+  file counts scaled by the reference's relative-size hints.
 """
 
 from __future__ import annotations
@@ -34,11 +36,9 @@ from ghcrawler_datalake_etl_spark.operators.patterns import (
     collection_refresh,
     snapshot_upsert,
     traffic_series,
-    version_log,
 )
 from ghcrawler_datalake_etl_spark.plans.catalog import (
     CATALOG,
-    ENTITY_SCHEMAS,
     ORIGIN_PATH,
     RESOURCES_PATH,
     UNIQUE_PATH,
@@ -129,7 +129,10 @@ def build_table(
     """Compute the new full snapshot for one spec (one ProcessDaily
     section). ``entity_day`` is the day's staging rows already filtered
     to the spec's entity family and parsed (``data`` struct present)."""
-    if spec.pattern == "A":
+    if spec.pattern in ("A", "E"):
+        # E is A keyed on (entity key, version timestamp): RepoLog's
+        # (EtlSourceId, UpdatedAt) key keeps every observed version
+        # (reference USQL/ProcessDaily.usql:2621,2628-2631).
         new_df = project_entity(entity_day, spec)
         return snapshot_upsert(
             new_df,
@@ -142,13 +145,13 @@ def build_table(
     if spec.pattern == "B":
         # Dedup parents BEFORE exploding (ref keeps RowNumber==1 inside the
         # explode filter, /root/reference/USQL/ProcessDaily.usql:292).
+        key = list(spec.key)
         parents = entity_day.select(
             *_envelope_cols(),
             *[typed_field("data", f) for f in spec.fields],
             F.col(f"data.{spec.array_path}").alias("_array"),
         )
-        dedup_keys = [k for k in spec.key if k in parents.columns] or ["EtlSourceId"]
-        parents = latest_by(parents, dedup_keys, [_touched(), F.col("FetchedAt")])
+        parents = latest_by(parents, key, [_touched(), F.col("FetchedAt")])
         exploded = array_child(
             parents,
             "_array",
@@ -176,8 +179,8 @@ def build_table(
         # refresh on re-crawl) and pin it by test.
         if previous is None:
             return new_df
-        refreshed = parents.select(*dedup_keys).distinct()
-        carryover = previous.join(F.broadcast(refreshed), dedup_keys, "left_anti")
+        refreshed = parents.select(*key).distinct()
+        carryover = previous.join(F.broadcast(refreshed), key, "left_anti")
         return new_df.unionByName(carryover, allowMissingColumns=True)
 
     if spec.pattern == "C":
@@ -229,53 +232,7 @@ def build_table(
             order_by=None if unordered else [_touched(), F.col("FetchedAt")],
         )
 
-    if spec.pattern == "E":
-        new_df = project_entity(entity_day, spec)
-        return version_log(
-            new_df,
-            previous,
-            keys=list(spec.key),
-            order_by=[_touched()],
-            tiebreakers=["FetchedAt"],
-        )
-
     raise ValueError(f"unknown pattern {spec.pattern}")
-
-
-def build_delta(
-    spec: EntitySpec,
-    entity_day: DataFrame,
-    previous: DataFrame,
-) -> DataFrame:
-    """Incremental form of build_table for the keyed snapshot patterns
-    (A/E): the merged result restricted to the keys the day TOUCHES.
-
-    Semantics are identical to the full path - the day's typed rows are
-    resolved against the previous snapshot's rows FOR THOSE KEYS with
-    the same latest-wins window (the old row can still win a late
-    re-crawl), so handing the result to ``ParquetCatalog.merge_upsert``
-    (delta-wins per key) reproduces ``build_table`` + ``overwrite``
-    exactly while rewriting only the touched hash buckets. The
-    reference rewrites every table in full daily
-    (/root/reference/USQL/ProcessDaily.usql:142-177, TRUNCATE+INSERT) -
-    at 100 TB that full rewrite IS the job's cost, which is why the
-    incremental path exists.
-    """
-    if spec.pattern not in ("A", "E"):
-        raise ValueError(f"build_delta supports patterns A/E, not {spec.pattern}")
-    new_df = project_entity(entity_day, spec)
-    keys = list(spec.key)
-    prev_subset = previous.join(
-        F.broadcast(new_df.select(*keys).distinct()), keys, "left_semi"
-    )
-    resolve = snapshot_upsert if spec.pattern == "A" else version_log
-    return resolve(
-        new_df,
-        prev_subset,
-        keys=keys,
-        order_by=[_touched()],
-        tiebreakers=["FetchedAt"],
-    )
 
 
 def run_daily(
@@ -285,29 +242,19 @@ def run_daily(
     catalog: ParquetCatalog,
     specs: tuple[EntitySpec, ...] = CATALOG,
     init_mode: bool = False,
-    incremental: bool = False,
 ) -> list[str]:
     """Run every spec for one day (ProcessDaily); ``init_mode`` ignores
     previous snapshots (CreateAndInitialize* backfill path).
 
-    Each entity family is parsed once, with the schema its specs declare
-    (``plans.catalog.ENTITY_SCHEMAS``, built at import; specs outside the
-    catalog get theirs built here). A family absent from the day parses
-    to no rows, so its tables are rebuilt from the previous snapshot
-    alone.
-
-    ``incremental=True`` routes the keyed snapshot patterns (A/E)
-    through ``build_delta`` + ``merge_upsert``: only the hash buckets
-    the day's keys land in are rewritten, untouched buckets hard-link
-    into the new version. Results are identical to the full path (the
-    first incremental run of a table pays a one-time re-bucket).
-    Patterns B/C/D keep the full rewrite (their refresh unit is the
-    parent document / collection page, not a row key).
+    Each entity family is parsed once, with the union of the paths the
+    specs being run read from it (``plans.catalog.entity_schemas``). A
+    family absent from the day parses to no rows, so its tables are
+    rebuilt from the previous snapshot alone. Every spec's new snapshot
+    (``build_table``) replaces the table in full (``overwrite``), so a
+    day that failed part-way re-runs to the same warehouse.
     """
     staging_day = read_staging(spark, staging_path, ingest_date).cache()  # Q6
-    schemas = (
-        ENTITY_SCHEMAS if all(s in CATALOG for s in specs) else entity_schemas(specs)
-    )
+    schemas = entity_schemas(specs)
     parsed: dict = {}  # one parse per entity family, shared across specs (Q6)
     built = []
     try:
@@ -317,23 +264,13 @@ def run_daily(
                 filtered = staging_day.filter(_entity_filter(spec))
                 parsed[fkey] = parse_entity(filtered, schemas[fkey]).cache()
             previous = None if init_mode else catalog.read_or_none(spec.table)
-            if incremental and spec.pattern in ("A", "E"):
-                # first run bootstraps the bucketed layout through the
-                # same sink, so day 2 is already link-incremental
-                delta = (
-                    build_table(spec, parsed[fkey], None)
-                    if previous is None
-                    else build_delta(spec, parsed[fkey], previous)
-                )
-                catalog.merge_upsert(delta, spec.table, list(spec.key))
-            else:
-                snapshot = build_table(spec, parsed[fkey], previous)
-                catalog.overwrite(
-                    snapshot,
-                    spec.table,
-                    num_files=max(1, spec.size_hint // 20),
-                    sort_by=[k for k in spec.key if k in snapshot.columns],
-                )
+            snapshot = build_table(spec, parsed[fkey], previous)
+            catalog.overwrite(
+                snapshot,
+                spec.table,
+                num_files=max(1, spec.size_hint // 20),
+                sort_by=[k for k in spec.key if k in snapshot.columns],
+            )
             built.append(spec.table)
     finally:
         for df in parsed.values():

@@ -445,9 +445,12 @@ class ParquetCatalog:
         affected_buckets: BucketIds | None = None,
     ) -> dict[str, int]:
         """Key-level upsert that rewrites ONLY the hash buckets the delta
-        touches - the incremental alternative to ``overwrite`` for the
-        snapshot tables (pattern A/E): a daily run over a 100 TB Commit
-        table must not rewrite a year of untouched data to land one day.
+        touches - the write primitive of the change-data layer
+        (``sources/ivm.py``: changefeed apply, view folds), where a
+        batch touches few keys of a large table. The daily ETL does not
+        use it: a crawl day's keys land in most buckets, where the merge
+        is a full rewrite plus its bookkeeping, so ``run_daily``
+        replaces every table with ``overwrite``.
 
         Layout: versions are partitioned by ``_kb =
         pmod(xxhash64(bucket_cols), num_buckets)``; the layout lives in
@@ -741,32 +744,6 @@ def _link_tree(src: str, dst: str) -> None:
             except OSError:
                 shutil.copy2(s, d)
 
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    path: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int,
-    sort_cols: Sequence[str] | None = None,
-) -> None:
-    """Write ``df`` as a bucketed (and optionally sorted) parquet table
-    registered in the session catalog - the Spark analog of the
-    reference's ``DISTRIBUTE HASH(k) INTO n`` + clustered index
-    (S6, e.g. /root/reference/USQL/CreateAndInitializeCommit.usql:49-55).
-
-    Two tables bucketed on their join key with the same bucket count
-    join with NO Exchange on either side (bucket-pruned, co-located
-    scan): for repeated large-large joins the shuffle is paid once at
-    write time instead of per query. Pinned by
-    tests/test_plan_shape.py::test_bucketed_join_is_exchange_free.
-    """
-    writer = df.write.mode("overwrite").option("path", path).bucketBy(
-        num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(name)
 
 def write_tsv(df: DataFrame, path: str, num_files: int = 1) -> int:
     """TSV export sink (S7, /root/reference/USQL/GetRepoData-unused.usql:17-19

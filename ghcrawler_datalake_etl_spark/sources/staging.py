@@ -24,7 +24,7 @@ table the first time two days disagree on a field's type).
   (:17-21) become the partition directory + ``input_file_name()``.
 
 Typed extraction (``parse_entity``) parses an entity family with the
-schema the catalog declares for it (``plans.catalog.ENTITY_SCHEMAS``),
+schema the catalog declares for it (``plans.catalog.entity_schemas``),
 never one inferred from the day, so no day - even one lacking the
 family - pays an extra pass or parses to a different schema.
 
@@ -132,7 +132,7 @@ def parse_entity(filtered: DataFrame, schema: StructType) -> DataFrame:
     ``data_raw`` with a ``data`` struct.
 
     ``schema`` is the family's catalog schema
-    (``plans.catalog.ENTITY_SCHEMAS``) - SURVEY.md 1.3: one explicit
+    (``plans.catalog.entity_schemas``) - SURVEY.md 1.3: one explicit
     StructType per entity, never inference in production - so this is a
     single lazy JVM-side ``from_json`` whatever the day holds.
     """

@@ -66,7 +66,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # decision instead of paying the ~60-80 ms RDD-conversion probe
         _SCAN_SOURCE[df] = key
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

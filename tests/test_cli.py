@@ -1,6 +1,6 @@
 """The S8 stored-procedure surface end-to-end through the argparse CLI
-(python -m ghcrawler_datalake_etl_spark ...): stage -> daily
-(incremental) -> export, sharing the test session via getOrCreate."""
+(python -m ghcrawler_datalake_etl_spark ...): stage -> daily -> export,
+sharing the test session via getOrCreate."""
 
 from __future__ import annotations
 
@@ -38,8 +38,7 @@ def test_cli_stage_daily_export(spark, tmp_path):
     assert main(["stage", "--input", str(raw), "--staging", staging,
                  "--date", "2024-01-05"]) == 0
     assert main(["daily", "--staging", staging, "--warehouse", wh,
-                 "--date", "2024-01-05", "--tables", "Repo",
-                 "--incremental"]) == 0
+                 "--date", "2024-01-05", "--tables", "Repo"]) == 0
     assert main(["export", "--warehouse", wh, "--org", "acme",
                  "--repo", "cliproj", "--out", out]) == 0
 

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ghcrawler_datalake_etl_spark.pipeline import run_daily
+from ghcrawler_datalake_etl_spark.pipeline import _ENVELOPE, run_daily
 from ghcrawler_datalake_etl_spark.plans.catalog import (
     CATALOG,
     ENTITY_SCHEMAS,
@@ -57,6 +57,17 @@ def test_every_spec_path_resolves_in_its_family_schema(spec):
 
 def test_every_catalog_family_has_a_schema():
     assert set(ENTITY_SCHEMAS) == {s.entity_filter for s in CATALOG}
+
+
+@pytest.mark.parametrize(
+    "spec", [s for s in CATALOG if s.pattern == "B"], ids=lambda s: s.table
+)
+def test_pattern_b_key_is_a_parent_column(spec):
+    """Pattern B dedups parents and replaces children on ``spec.key``
+    as declared, so the key must be columns of the parent row (the
+    envelope or a parent field), never the child ordinal."""
+    assert set(spec.key) <= set(_ENVELOPE) | {f.name for f in spec.fields}
+    assert spec.child_id not in spec.key
 
 
 def _spec(table, fields=(), array_path=None, element_fields=()):

@@ -4,7 +4,8 @@
 folds) may reach the catalog only through its public methods: the
 bucket layout, its directory names and the snapshot metadata files stay
 inside ``sources/sinks.py``. The ETL DAG (``pipeline.py``,
-``export.py``) must not depend on the IVM layer at all."""
+``export.py``) must not depend on the IVM layer at all, and writes only
+through ``overwrite``: the bucket merge is the IVM layer's."""
 
 from __future__ import annotations
 
@@ -75,6 +76,10 @@ def test_ivm_has_no_layout_literals():
 def test_etl_dag_does_not_import_ivm():
     for rel in ("pipeline.py", "export.py"):
         for n in ast.walk(_tree(rel)):
+            # the ETL writes only through overwrite
+            assert not (
+                isinstance(n, ast.Attribute) and n.attr == "merge_upsert"
+            ), f"{rel} line {n.lineno} references merge_upsert"
             if isinstance(n, ast.Import):
                 mods = [a.name for a in n.names]
             elif isinstance(n, ast.ImportFrom):
@@ -86,3 +91,4 @@ def test_etl_dag_does_not_import_ivm():
             assert not any(
                 m.split(".")[-1] == "ivm" for m in mods
             ), f"{rel} line {n.lineno} imports the IVM layer"
+

@@ -491,33 +491,11 @@ def test_merge_upsert_dense_delta_falls_back_to_full_rewrite(
     assert cat.read("T").filter(F.col("k") == 3).first().val == "day3"
 
 
-def test_run_daily_incremental_matches_full(spark, tmp_path):
-    """incremental=True (build_delta + merge_upsert) must produce
-    byte-identical Commit (pattern A) and RepoLog (pattern E) snapshots
-    to the full-rewrite path, while rewriting only the day's buckets."""
-    root = tmp_path
-    raw1, raw2 = str(root / "r1"), str(root / "r2")
-    staging_f, staging_i = str(root / "sf"), str(root / "si")
-    write_docs(raw1, DAY1)
-    write_docs(raw2, DAY2)
-    specs = (spec_for("Commit"), spec_for("RepoLog"))
-
-    full = ParquetCatalog(spark, str(root / "wh_full"))
-    inc = ParquetCatalog(spark, str(root / "wh_inc"))
-    for staging, catalog, flag in (
-        (staging_f, full, False),
-        (staging_i, inc, True),
-    ):
-        stage_json(spark, raw1, staging, "2024-01-01")
-        run_daily(spark, staging, "2024-01-01", catalog, specs=specs,
-                  incremental=flag)
-        stage_json(spark, raw2, staging, "2024-01-02")
-        run_daily(spark, staging, "2024-01-02", catalog, specs=specs,
-                  incremental=flag)
-
-    # day 3: the adversarial merge cases - a DELETE marker for c2, and a
-    # LATE re-crawl of c1 older than the stored day-2 row (the stored row
-    # must win: merge resolves by last-touched, not delta-wins)
+def test_run_daily_late_recrawl_loses_and_delete_marker_wins(spark, tmp_path):
+    """Day 3 on a standing Commit/RepoLog warehouse, the adversarial
+    cases of the latest-wins rewrite: a LATE re-crawl of c1, older than
+    the stored day-2 row, must lose (resolution is by last touched, not
+    by arrival), and c2's delete marker must win."""
     T0 = "2024-01-01T00:00:00Z"
     T3 = "2024-01-03T06:00:00Z"
     day3 = [
@@ -528,44 +506,117 @@ def test_run_daily_incremental_matches_full(spark, tmp_path):
         repo_doc(REPO_URN, T3, T3, stars=170,
                  updated_at="2024-01-02T18:00:00Z"),
     ]
-    raw3 = str(root / "r3")
-    write_docs(raw3, day3)
-    for staging, catalog, flag in (
-        (staging_f, full, False),
-        (staging_i, inc, True),
-    ):
-        stage_json(spark, raw3, staging, "2024-01-03")
-        run_daily(spark, staging, "2024-01-03", catalog, specs=specs,
-                  incremental=flag)
+    staging = str(tmp_path / "staging")
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    for day, docs in (("2024-01-01", DAY1), ("2024-01-02", DAY2),
+                      ("2024-01-03", day3)):
+        write_docs(str(tmp_path / day), docs)
+        stage_json(spark, str(tmp_path / day), staging, day)
+        run_daily(spark, staging, day, catalog,
+                  specs=(spec_for("Commit"), spec_for("RepoLog")))
 
-    for table in ("Commit", "RepoLog"):
-        a = sorted(map(tuple, full.read(table).collect()))
-        b = sorted(
-            map(tuple, inc.read(table).select(*full.read(table).columns).collect())
-        )
-        assert a == b, f"{table}: incremental diverged from full"
-
-    commits = {r.EtlSourceId: r for r in inc.read("Commit").collect()}
+    commits = {r.EtlSourceId: r for r in catalog.read("Commit").collect()}
     # the late day-3 re-crawl of c1 LOST to the newer stored day-2 row
     assert commits["urn:gh:commit:c1"].CommitMessage == "first-amended"
     # c2's delete marker won (DeletedAt > ProcessedAt orders last)
     assert commits["urn:gh:commit:c2"].DeletedAt is not None
+    # RepoLog keeps every repo version
+    assert rows(catalog, "RepoLog", "StargazersCount") == [(100,), (150,), (170,)]
 
-    # day 1 bootstraps the bucketed layout, so day 2 is a true partial
-    # rewrite: untouched buckets are hard-linked (nlink > 1) from v0
-    import os
-    cur = inc.current_path("Commit")
-    assert cur.endswith("v2")  # day1 bootstrap v0, day2 merge v1, day3 merge v2
-    kb_dirs = [d for d in os.listdir(cur) if d.startswith("_kb=")]
-    assert len(kb_dirs) >= 2
-    linked = sum(
-        1
-        for d in kb_dirs
-        for f in os.listdir(os.path.join(cur, d))
-        if f.endswith(".parquet")
-        and os.stat(os.path.join(cur, d, f)).st_nlink > 1
-    )
-    assert linked > 0, "no untouched bucket was file-reused on day 2"
+
+def referrers_doc(urn, fetched, processed, series):
+    return {
+        "_metadata": meta("referrers", urn, fetched, processed, None,
+                          {"repo": {"href": REPO_URN}}),
+        "referrers": series,
+    }
+
+
+#: one spec per pattern, plus pattern D's order-free dedup (Referrers);
+#: Commit last, so a failure at the last write leaves every other
+#: pattern already re-applied (RepoLog is pattern A's code)
+RERUN_SPECS = tuple(
+    spec_for(t)
+    for t in ("RepoLog", "CommitFile", "RepoCollaborators", "Clones",
+              "Referrers", "Commit")
+)
+RERUN_DAYS = (
+    ("2024-01-01", DAY1 + [
+        referrers_doc("urn:gh:referrers:r1", T1, T1,
+                      [{"referrer": "google.com", "count": 5, "uniques": 2},
+                       {"referrer": "github.com", "count": 3, "uniques": 1}]),
+    ]),
+    ("2024-01-02", DAY2 + [
+        referrers_doc("urn:gh:referrers:r1", T2, T2,
+                      [{"referrer": "google.com", "count": 7, "uniques": 3}]),
+    ]),
+)
+
+
+@pytest.fixture(scope="module")
+def rerun_base(spark, tmp_path_factory):
+    """Both days staged, and a warehouse holding day 1."""
+    root = tmp_path_factory.mktemp("rerun")
+    staging = str(root / "staging")
+    for day, docs in RERUN_DAYS:
+        write_docs(str(root / day), docs)
+        stage_json(spark, str(root / day), staging, day)
+    base = str(root / "day1")
+    run_daily(spark, staging, "2024-01-01", ParquetCatalog(spark, base),
+              specs=RERUN_SPECS)
+    return root, staging, base
+
+
+@pytest.mark.parametrize("init_mode", [False, True], ids=["standing", "init"])
+def test_failed_day_reruns_to_the_same_warehouse(
+    spark, rerun_base, monkeypatch, init_mode
+):
+    """Day 2's last table write fails inside its Spark job, leaving an
+    uncommitted version directory and every other table at day 2.
+    Re-running day 2 must give the warehouse a clean run gives: each
+    pattern is idempotent under re-applying the same day. A table reads
+    only its own previous snapshot, so failing at the last write covers
+    both states a failure at any k leaves: tables written and not."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    root, staging, base = rerun_base
+    mode = "init" if init_mode else "standing"
+
+    def day2(path):
+        catalog = ParquetCatalog(spark, path)
+        run_daily(spark, staging, "2024-01-02", catalog, specs=RERUN_SPECS,
+                  init_mode=init_mode)
+        return catalog
+
+    shutil.copytree(base, root / f"clean_{mode}")
+    clean = day2(str(root / f"clean_{mode}"))
+    write = ParquetCatalog.overwrite
+    calls = []
+
+    def failing(self, df, name, *args, **kwargs):
+        calls.append(name)
+        if len(calls) == len(RERUN_SPECS):
+            df = df.filter(F.raise_error(f"injected failure writing {name}")
+                           .isNull())
+        return write(self, df, name, *args, **kwargs)
+
+    path = str(root / f"rerun_{mode}")
+    shutil.copytree(base, path)
+    with monkeypatch.context() as m:
+        m.setattr(ParquetCatalog, "overwrite", failing)
+        with pytest.raises(Exception, match="injected failure writing Commit"):
+            day2(path)
+    failed = ParquetCatalog(spark, path)
+    assert failed.current_version("Commit") == 0  # still day 1: v1 never committed
+    assert all(failed.current_version(s.table) == 1 for s in RERUN_SPECS[:-1])
+    rerun = day2(path)
+    for spec in RERUN_SPECS:
+        got, want = rerun.read(spec.table), clean.read(spec.table)
+        assert got.dtypes == want.dtypes, spec.table
+        diff = got.exceptAll(want).unionByName(want.exceptAll(got))
+        assert diff.isEmpty(), spec.table
 
 
 def test_merge_upsert_one_file_per_bucket(spark, tmp_path):

@@ -124,41 +124,6 @@ def test_parity_paths_have_no_python(spark, queries):
             )
 
 
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts must
-    sort-merge join with no Exchange on either side (S6: the write-time
-    shuffle replaces every query-time shuffle)."""
-    from ghcrawler_datalake_etl_spark.sources.sinks import write_bucketed_table
-
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    write_bucketed_table(
-        orders, "orders_bkt", str(tmp_path / "o"), ["o_orderkey"], 8,
-        sort_cols=["o_orderkey"],
-    )
-    write_bucketed_table(
-        li, "lineitem_bkt", str(tmp_path / "l"), ["l_orderkey"], 8,
-        sort_cols=["l_orderkey"],
-    )
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("orders_bkt").join(
-            spark.table("lineitem_bkt"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        p = plan(joined)
-        assert "SortMergeJoin" in p
-        assert "Exchange" not in p, "bucketed join must not shuffle"
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS orders_bkt")
-        spark.sql("DROP TABLE IF EXISTS lineitem_bkt")
-
-
 def test_salted_join_spreads_key(spark, queries):
     """The skew rewrite must actually join on (key, salt), not key."""
     p = plan(queries["j5_salted_skew_join"](spark, SF_DIR), "simple")
