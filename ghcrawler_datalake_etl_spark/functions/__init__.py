@@ -1,8 +1,4 @@
 from ghcrawler_datalake_etl_spark.functions.core import (
-    get_bool,
-    get_long,
-    get_string,
-    get_timestamp,
     greatest_touched,
     latest_by,
     pii_hash,
@@ -10,10 +6,6 @@ from ghcrawler_datalake_etl_spark.functions.core import (
 )
 
 __all__ = [
-    "get_bool",
-    "get_long",
-    "get_string",
-    "get_timestamp",
     "greatest_touched",
     "latest_by",
     "pii_hash",

@@ -1,12 +1,13 @@
-"""Scalar helpers: the Spark-native equivalents of the reference's
-``GHInsights.USql.Utility.Get*`` family and its dedup idioms.
+"""Scalar helpers: the reference's dedup idioms and PII pseudonymization.
 
 The reference stores each crawled JSON document flattened into a
 path->bytes map and extracts typed columns with scalar .NET helpers
-(SURVEY.md section 2.6; /root/reference/USQL/ProcessDaily.usql:98-129).
-Here documents are native nested structs, so "path extraction" is just
-struct access + cast - everything below is a Column expression (JVM-side,
-whole-stage codegen; zero Python UDFs, per SURVEY.md section 2.8).
+(``GHInsights.USql.Utility.Get*``, SURVEY.md section 2.6; reference
+USQL/ProcessDaily.usql:98-129). Here documents are
+native nested structs, so "path extraction" is struct access + try_cast,
+written per spec as SQL text by ``pipeline.typed_field``. Everything
+below is a Column expression (JVM-side, whole-stage codegen; zero Python
+UDFs, per SURVEY.md section 2.8).
 """
 
 from __future__ import annotations
@@ -85,42 +86,6 @@ def int_vector_literal(values: Sequence[int]) -> Column:
     return F.expr(f"array({body})")
 
 
-def get_string(col: ColumnOrName) -> Column:
-    """Utility.GetString / GetUSqlString: path -> string, NULL if absent.
-
-    Ref: /root/reference/USQL/ProcessDaily.usql:100,115 (647 + 66 call
-    sites). Spark strings are unbounded so the 128KB-safe GetUSqlString
-    variant collapses into the same expression.
-    """
-    return _path(col).cast("string")
-
-
-def get_long(col: ColumnOrName) -> Column:
-    """Utility.GetInteger: path -> integer, NULL if absent/non-numeric.
-
-    Ref: /root/reference/USQL/ProcessDaily.usql:104 (485 call sites).
-    LongType because GitHub ids exceed int32. try_cast keeps the
-    function total under ANSI mode (malformed -> NULL, never throw).
-    """
-    return _path(col).try_cast("long")
-
-
-def get_bool(col: ColumnOrName) -> Column:
-    """Utility.GetBoolean (ref: /root/reference/USQL/ProcessDaily.usql:106).
-    Total: malformed -> NULL (try_cast)."""
-    return _path(col).try_cast("boolean")
-
-
-def get_timestamp(col: ColumnOrName) -> Column:
-    """Utility.GetDateTime: ISO-8601 string -> UTC timestamp.
-
-    Ref: /root/reference/USQL/ProcessDaily.usql:108. Session TZ is pinned
-    to UTC by the session factory, so a bare cast is exact. Total:
-    malformed -> NULL (try_cast).
-    """
-    return _path(col).try_cast("timestamp")
-
-
 def pii_hash(col: ColumnOrName) -> Column:
     """Deterministic pseudonymization for PII columns.
 
@@ -130,8 +95,7 @@ def pii_hash(col: ColumnOrName) -> Column:
     sha2-256 keeps the column joinable across tables and runs while
     removing the cleartext. NULL stays NULL.
     """
-    c = _path(col).cast("string")
-    return F.when(c.isNull(), F.lit(None).cast("string")).otherwise(F.sha2(c, 256))
+    return F.sha2(_path(col).cast("string"), 256)
 
 
 def greatest_touched(deleted_at: ColumnOrName, processed_at: ColumnOrName) -> Column:

@@ -14,6 +14,9 @@ Scale/plan notes:
   (``plans.catalog.entity_schemas``, SURVEY.md 1.3), so every path a spec
   reads exists; absent and malformed values project as typed NULLs (the
   reference's ``Get*`` are total), whatever the day holds.
+- Each projection is SQL text compiled from the spec (``typed_field``)
+  and run with one ``selectExpr``: a per-field ``Column`` chain costs a
+  few py4j round trips, about 4 ms a field over the catalog's 884.
 - Every table is recomputed and replaced in full through the atomic-swap
   catalog (``ParquetCatalog.overwrite``, fixes Q8), like the reference's
   TRUNCATE+INSERT (reference USQL/ProcessDaily.usql:142-177), with
@@ -24,13 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ghcrawler_datalake_etl_spark.functions.core import (
-    greatest_touched,
-    latest_by,
-    pii_hash,
-)
+from ghcrawler_datalake_etl_spark.functions.core import greatest_touched, latest_by
 from ghcrawler_datalake_etl_spark.operators.patterns import (
     array_child,
     collection_refresh,
@@ -49,30 +47,51 @@ from ghcrawler_datalake_etl_spark.plans.catalog import (
 from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
 from ghcrawler_datalake_etl_spark.sources.staging import parse_entity, read_staging
 
-_TYPE = {
-    "string": T.StringType(),
-    "long": T.LongType(),
-    "boolean": T.BooleanType(),
-    "timestamp": T.TimestampType(),
-}
-
 # Envelope columns every curated table carries, from staging metadata
 # (the reference emits EtlSourceId/Etl* per table, e.g.
-# /root/reference/USQL/ProcessDaily.usql:98-103,141-145).
-_ENVELOPE = ("EtlSourceId", "EtlIngestDate", "FetchedAt", "ProcessedAt", "DeletedAt")
+# reference USQL/ProcessDaily.usql:98-103,141-145). EtlIngestDate is a
+# UTC timestamp like the reference's DateTime.Parse(IngestDate)
+# (reference USQL/ProcessDaily.usql:32).
+_ENVELOPE_SQL = (
+    "urn AS EtlSourceId",
+    "try_cast(ingest_date AS timestamp) AS EtlIngestDate",
+    "fetched_at AS FetchedAt",
+    "processed_at AS ProcessedAt",
+    "deleted_at AS DeletedAt",
+)
+_ENVELOPE = tuple(e.rsplit(" AS ", 1)[1] for e in _ENVELOPE_SQL)
+# The reference's redundant leading Urn (same value as EtlSourceId):
+# scalar/traffic/log tables carry it, child tables don't (Commit's CTAS
+# leads with Urn, CommitFile's starts at CommitUrn,
+# reference USQL/CreateAndInitializeCommit.usql vs
+# CreateAndInitializeCommitFile.usql).
+_URN = "urn AS Urn"
 
 
-def typed_field(root: str, fld: Field) -> Column:
-    """Typed path extraction, total like the reference's Utility.Get*: a
-    path a document lacks parses to NULL under the declared schema, and a
-    malformed value casts to a typed NULL (SURVEY.md 2.6 F1-F6). try_cast,
-    not cast: under ANSI mode (Spark 4 default) a plain cast would abort
-    the whole daily run on one bad document. ``pii`` fields are always
-    pseudonymized (``pii_hash``, the reference's GetPiiString)."""
-    col = F.col(f"{root}.{fld.path}")
+def _q(path: str) -> str:
+    """SQL reference to a dotted path, every segment backquoted (element
+    paths such as ``distinct`` and names such as ``Position`` are SQL
+    words)."""
+    return ".".join(f"`{part}`" for part in path.split("."))
+
+
+def typed_field(root: str, fld: Field) -> str:
+    """Typed path extraction as SQL text, total like the reference's
+    Utility.Get*: a path a document lacks parses to NULL under the
+    declared schema, and a malformed value casts to a typed NULL
+    (SURVEY.md 2.6 F1-F6). try_cast, not cast: under ANSI mode (Spark 4
+    default) a plain cast would abort the whole daily run on one bad
+    document. The catalog's type names are Spark SQL type names. ``pii``
+    fields are always pseudonymized with sha2-256 (the reference's
+    GetPiiString); the leaf is a string and NULL stays NULL."""
+    ref = _q(f"{root}.{fld.path}")
     if fld.type == "pii":
-        return pii_hash(col).alias(fld.name)
-    return col.try_cast(_TYPE[fld.type]).alias(fld.name)
+        return f"sha2({ref}, 256) AS `{fld.name}`"
+    return f"try_cast({ref} AS {fld.type}) AS `{fld.name}`"
+
+
+def _typed(root: str, fields: tuple[Field, ...]) -> list[str]:
+    return [typed_field(root, f) for f in fields]
 
 
 def _entity_filter(spec: EntitySpec) -> Column:
@@ -87,38 +106,8 @@ def _entity_filter(spec: EntitySpec) -> Column:
     raise ValueError(f"unknown entity filter op {op}")
 
 
-def _envelope_cols(with_urn: bool = False) -> list[Column]:
-    """Staging-metadata columns every curated table carries.
-
-    ``with_urn`` adds the reference's redundant leading ``Urn`` column
-    (same value as EtlSourceId - scalar/traffic/log tables carry both,
-    child tables don't; e.g. Commit CTAS leads with Urn while CommitFile
-    starts at CommitUrn, /root/reference/USQL/CreateAndInitializeCommit.usql
-    vs CreateAndInitializeCommitFile.usql). EtlIngestDate is a UTC
-    timestamp like the reference's DateTime.Parse(IngestDate)
-    (/root/reference/USQL/ProcessDaily.usql:32)."""
-    cols = [
-        F.col("urn").alias("EtlSourceId"),
-        F.col("ingest_date").try_cast("timestamp").alias("EtlIngestDate"),
-        F.col("fetched_at").alias("FetchedAt"),
-        F.col("processed_at").alias("ProcessedAt"),
-        F.col("deleted_at").alias("DeletedAt"),
-    ]
-    if with_urn:
-        cols.insert(0, F.col("urn").alias("Urn"))
-    return cols
-
-
 def _touched() -> Column:
     return greatest_touched("DeletedAt", "ProcessedAt")
-
-
-def project_entity(entity_day: DataFrame, spec: EntitySpec) -> DataFrame:
-    """Wide typed projection over the parsed entity rows (P7)."""
-    cols = _envelope_cols(with_urn=True) + [
-        typed_field("data", f) for f in spec.fields
-    ]
-    return entity_day.select(*cols)
 
 
 def build_table(
@@ -128,12 +117,16 @@ def build_table(
 ) -> DataFrame:
     """Compute the new full snapshot for one spec (one ProcessDaily
     section). ``entity_day`` is the day's staging rows already filtered
-    to the spec's entity family and parsed (``data`` struct present)."""
+    to the spec's entity family and parsed (``data`` struct present).
+    Every column list comes from the spec: the projections are its
+    fields as SQL text (``typed_field``, the wide typed projection P7)."""
     if spec.pattern in ("A", "E"):
         # E is A keyed on (entity key, version timestamp): RepoLog's
         # (EtlSourceId, UpdatedAt) key keeps every observed version
         # (reference USQL/ProcessDaily.usql:2621,2628-2631).
-        new_df = project_entity(entity_day, spec)
+        new_df = entity_day.selectExpr(
+            _URN, *_ENVELOPE_SQL, *_typed("data", spec.fields)
+        )
         return snapshot_upsert(
             new_df,
             previous,
@@ -146,29 +139,23 @@ def build_table(
         # Dedup parents BEFORE exploding (ref keeps RowNumber==1 inside the
         # explode filter, /root/reference/USQL/ProcessDaily.usql:292).
         key = list(spec.key)
-        parents = entity_day.select(
-            *_envelope_cols(),
-            *[typed_field("data", f) for f in spec.fields],
-            F.col(f"data.{spec.array_path}").alias("_array"),
+        parents = entity_day.selectExpr(
+            *_ENVELOPE_SQL,
+            *_typed("data", spec.fields),
+            f"{_q('data.' + spec.array_path)} AS _array",
         )
         parents = latest_by(parents, key, [_touched(), F.col("FetchedAt")])
-        exploded = array_child(
-            parents,
-            "_array",
-            [c for c in parents.columns if c != "_array"],
-            spec.child_id,
+        parent_cols = [*_ENVELOPE, *(f.name for f in spec.fields)]
+        exploded = array_child(parents, "_array", parent_cols, spec.child_id)
+        # the reference's final projection overwrites the explode ordinal
+        # with an element field of the same role (e.g.
+        # EventPayloadReleaseAssetId = the asset's own id,
+        # reference USQL/ProcessDaily.usql:1397-1398); the ordinal
+        # stays internal.
+        ordinal = [] if spec.extra.get("ordinal_internal") else [spec.child_id]
+        new_df = exploded.selectExpr(
+            *map(_q, parent_cols + ordinal), *_typed("element", spec.element_fields)
         )
-        new_df = exploded.select(
-            *[c for c in exploded.columns if c != "element"],
-            *[typed_field("element", f) for f in spec.element_fields],
-        )
-        if spec.extra.get("ordinal_internal"):
-            # the reference's final projection overwrites the explode
-            # ordinal with an element field of the same role (e.g.
-            # EventPayloadReleaseAssetId = the asset's own id,
-            # /root/reference/USQL/ProcessDaily.usql:1397-1398); the
-            # ordinal stays internal.
-            new_df = new_df.drop(spec.child_id)
         # Replace-by-parent: a re-crawled parent's children are replaced
         # wholesale (handles shrinking arrays). The literal reference
         # dedups child rows by EtlSourceId ALONE (e.g. CommitFile,
@@ -187,19 +174,17 @@ def build_table(
         origin_like = spec.extra.get("origin_like")
         # Collection pages carry origin (owner) + resources (member hrefs)
         # links (/root/reference/USQL/ProcessDaily.usql:39-61).
-        pages = entity_day.select(
+        pages = entity_day.selectExpr(
             typed_field("data", Field(spec.origin_col, ORIGIN_PATH)),
             typed_field("data", Field("UniqueUrn", UNIQUE_PATH)),
-            F.col(f"data.{RESOURCES_PATH}").alias("resources"),
-            F.col("processed_at").alias("ProcessedAt"),
-            F.col("fetched_at").alias("FetchedAt"),
-            F.col("ingest_date").try_cast("timestamp").alias("EtlIngestDate"),
+            f"{_q('data.' + RESOURCES_PATH)} AS resources",
+            *_ENVELOPE_SQL[1:4],  # EtlIngestDate, FetchedAt, ProcessedAt
         ).filter(F.col(spec.origin_col).isNotNull())
         if origin_like:
             # The `members` entity feeds OrgMembers and TeamMembers from one
             # scan, split by origin URN (ProcessDaily.usql:1747-1763).
             pages = pages.filter(F.col(spec.origin_col).like(origin_like))
-        members = collection_refresh(
+        return collection_refresh(
             pages,
             previous,
             origin_col=spec.origin_col,
@@ -210,19 +195,17 @@ def build_table(
             # (/root/reference/USQL/ProcessDaily.usql:82-91)
             extra_cols=("FetchedAt", "ProcessedAt", "EtlIngestDate", "UniqueUrn"),
         )
-        return members
 
     if spec.pattern == "D":
-        base = entity_day.select(
-            *_envelope_cols(with_urn=True),
-            *[typed_field("data", f) for f in spec.fields],
-            F.posexplode_outer(F.col(f"data.{spec.array_path}")).alias(
-                "_pos", "element"
-            ),
+        parent_cols = ["Urn", *_ENVELOPE, *(f.name for f in spec.fields)]
+        base = entity_day.selectExpr(
+            _URN,
+            *_ENVELOPE_SQL,
+            *_typed("data", spec.fields),
+            f"explode({_q('data.' + spec.array_path)}) AS element",
         ).filter(F.col("element").isNotNull())
-        new_df = base.select(
-            *[c for c in base.columns if c not in ("element", "_pos")],
-            *[typed_field("element", f) for f in spec.element_fields],
+        new_df = base.selectExpr(
+            *map(_q, parent_cols), *_typed("element", spec.element_fields)
         )
         unordered = bool(spec.extra.get("unordered_dedup"))
         return traffic_series(
@@ -269,7 +252,7 @@ def run_daily(
                 snapshot,
                 spec.table,
                 num_files=max(1, spec.size_hint // 20),
-                sort_by=[k for k in spec.key if k in snapshot.columns],
+                sort_by=list(spec.key),
             )
             built.append(spec.table)
     finally:

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ghcrawler_datalake_etl_spark.pipeline import _ENVELOPE, run_daily
+from ghcrawler_datalake_etl_spark.pipeline import _ENVELOPE, build_table, run_daily
 from ghcrawler_datalake_etl_spark.plans.catalog import (
     CATALOG,
     ENTITY_SCHEMAS,
@@ -25,7 +25,7 @@ from ghcrawler_datalake_etl_spark.plans.catalog import (
     spec_for,
 )
 from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
-from ghcrawler_datalake_etl_spark.sources.staging import stage_json
+from ghcrawler_datalake_etl_spark.sources.staging import parse_entity, stage_json
 from tests.conftest import meta, write_docs
 from tests.test_patterns import DAY1, T1
 
@@ -68,6 +68,35 @@ def test_pattern_b_key_is_a_parent_column(spec):
     envelope or a parent field), never the child ordinal."""
     assert set(spec.key) <= set(_ENVELOPE) | {f.name for f in spec.fields}
     assert spec.child_id not in spec.key
+
+
+#: the staged columns ``run_daily`` parses (``sources.staging``)
+STAGED = (
+    "entity_name string, ingest_date date, fetched_at timestamp, "
+    "processed_at timestamp, deleted_at timestamp, urn string, "
+    "source_file string, data_raw string"
+)
+
+
+@pytest.mark.parametrize("spec", CATALOG, ids=lambda s: s.table)
+def test_every_spec_plan_analyzes(spark, spec):
+    """Each spec's plan resolves over its family's parse schema, with and
+    without a previous snapshot, and carries the spec's key: a quoting or
+    type-name error in any field's projection fails here, without a
+    Spark job. Reserved keywords are enforced, so a path segment such as
+    ``distinct`` must be backquoted."""
+    conf = "spark.sql.ansi.enforceReservedKeywords"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        day = parse_entity(spark.createDataFrame([], STAGED),
+                           ENTITY_SCHEMAS[spec.entity_filter])
+        built = build_table(spec, day, None)
+        assert set(spec.key) <= set(built.columns)
+        previous = spark.createDataFrame([], built.schema)
+        assert build_table(spec, day, previous).dtypes == built.dtypes
+    finally:
+        spark.conf.set(conf, saved)
 
 
 def _spec(table, fields=(), array_path=None, element_fields=()):

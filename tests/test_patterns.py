@@ -109,16 +109,19 @@ def issue_doc(urn, fetched, processed, labels):
     }
 
 
-def user_doc(urn, fetched, processed):
-    return {
+def user_doc(urn, fetched, processed, email="ann@example.com"):
+    doc = {
         "_metadata": meta("user", urn, fetched, processed, None),
         "id": 101, "login": "ann", "name": "Ann Author",
-        "email": "ann@example.com", "company": "ACME", "location": "NYC",
+        "email": email, "company": "ACME", "location": "NYC",
         "hireable": True, "public_repos": 5, "followers": 10, "following": 3,
         "type": "User", "site_admin": False,
         "created_at": "2019-01-01T00:00:00Z",
         "updated_at": "2023-12-01T00:00:00Z",
     }
+    if email is None:
+        del doc["email"]
+    return doc
 
 
 DAY1 = [
@@ -166,6 +169,8 @@ DAY2 = [
     clones_doc("urn:gh:clones:r1", T2, T2,
                [{"timestamp": "2023-12-31T00:00:00Z", "count": 8, "uniques": 3},
                 {"timestamp": "2024-01-01T00:00:00Z", "count": 4, "uniques": 4}]),
+    # a user without an email
+    user_doc("urn:gh:user:102", T2, T2, email=None),
 ]
 
 SPEC_SUBSET = tuple(
@@ -246,9 +251,15 @@ def test_pattern_a_latest_wins(spark, warehouse):
 
 
 def test_pattern_a_pii_scrubbed(spark, warehouse):
+    """PII fields hold the sha2-256 hex of the cleartext; an absent one
+    stays NULL."""
+    import hashlib
+
     catalog, _ = warehouse
-    emails = [r[0] for r in rows(catalog, "User", "Email")]
-    assert all(e is not None and len(e) == 64 for e in emails)  # sha2-256 hex
+    assert rows(catalog, "User", "EtlSourceId", "Email") == [
+        ("urn:gh:user:101", hashlib.sha256(b"ann@example.com").hexdigest()),
+        ("urn:gh:user:102", None),
+    ]
 
 
 def test_pattern_b_commitfile_posexplode(spark, warehouse):
