@@ -2,12 +2,10 @@ from ghcrawler_datalake_etl_spark.operators.patterns import (
     array_child,
     collection_refresh,
     snapshot_upsert,
-    traffic_series,
 )
 
 __all__ = [
     "array_child",
     "collection_refresh",
     "snapshot_upsert",
-    "traffic_series",
 ]

@@ -1,6 +1,9 @@
 """The five composite ETL patterns - the reference's "query templates"
 (SURVEY.md section 2.9), re-expressed as config-driven DataFrame
-transforms.
+transforms. They reduce to three merge policies: latest-wins by key
+(``snapshot_upsert``: A, D and E), replace children by parent
+(``array_child``: B) and replace members by origin
+(``collection_refresh``: C).
 
 Each function is pure DataFrame-in / DataFrame-out so the same transform
 serves the daily path (ProcessDaily) and the one-time
@@ -59,6 +62,14 @@ def snapshot_upsert(
     (entity key, version timestamp), so every observed version is kept
     and re-crawls of one version dedupe to the latest fetch
     (reference USQL/ProcessDaily.usql:2621,2628-2631,2747-2859).
+
+    Pattern D (Clones/Views/Referrers/Paths traffic series) is A with an
+    explode: the caller projects one row per series element and upserts
+    on the natural key, e.g. (RepoUrn, DataDate), so a newer fetch
+    refreshes a day's counts (:3293-3295). The reference's literal
+    MAP_AGG collapses the series (bug Q3, :3267-3274) and its
+    Referrers/Paths ROW_NUMBER has no ORDER BY (W2/Q2, :3387); latest-wins
+    is one of the picks that allows.
 
     ``order_by`` defaults to the reference's F10 "last touched" ordering,
     which expects ``deleted_at``/``processed_at`` columns present.
@@ -143,30 +154,4 @@ def collection_refresh(
     refreshed = members.select(origin_col).distinct()
     carryover = existing_df.join(F.broadcast(refreshed), origin_col, "left_anti")
     return members.unionByName(carryover, allowMissingColumns=True).distinct()
-
-
-def traffic_series(
-    new_df: DataFrame,
-    snapshot_df: DataFrame | None,
-    natural_key: Sequence[str],
-    order_by: Sequence[Column] | None = None,
-) -> DataFrame:
-    """Pattern D - traffic time-series upsert (Clones/Views/Referrers/Paths).
-
-    The caller explodes the per-fetch series array into one row per
-    element (the reference's literal MAP_AGG drops the array index and
-    collapses the series - bug Q3, /root/reference/USQL/ProcessDaily.usql:3267-3274;
-    we implement the intended one-row-per-element semantics, SURVEY.md 2.11).
-    This function then upserts on the natural key, e.g. (RepoUrn, DataDate)
-    (:3293-3295).
-
-    With ``order_by`` given: latest-wins (Clones/Views - newer fetch
-    refreshes a day's counts). Without: exact-duplicate drop, matching the
-    reference's ORDER-BY-less ROW_NUMBER (W2/Q2, :3387) with the honest
-    ``dropDuplicates`` contract.
-    """
-    unioned = _union_snapshot(new_df, snapshot_df)
-    if order_by is None:
-        return unioned.dropDuplicates(list(natural_key))
-    return latest_by(unioned, natural_key, order_by)
 

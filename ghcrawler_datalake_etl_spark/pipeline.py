@@ -2,14 +2,17 @@
 
 The reference's ProcessDaily.usql is 3,593 lines of 24 mechanically
 similar sections (/root/reference/USQL/ProcessDaily.usql); each section
-here is ``build_table(spec)`` dispatching to the five pattern transforms.
-The one-time backfill scripts (CreateAndInitialize*.usql) are the same
-transforms with no previous snapshot - ``init_mode=True``.
+here is ``build_table(spec)``, which runs the spec's plan through one of
+three merge policies: latest-wins by key (patterns A, D and E; D is A
+over the exploded series array), replace children by parent (B) and
+replace members by origin (C). The one-time backfill scripts
+(CreateAndInitialize*.usql) are the same transforms with no previous
+snapshot - ``init_mode=True``.
 
 Scale/plan notes:
 - The day's staging partition is scanned once and cached (the reference
   re-scans it per section - quirk Q6, SURVEY.md 2.11); each entity filter
-  then prunes from memory.
+  (SQL text from the spec) then prunes from memory.
 - Each entity family parses with the schema its specs fix for it
   (``plans.catalog.entity_schemas``, SURVEY.md 1.3), so every path a spec
   reads exists; absent and malformed values project as typed NULLs (the
@@ -19,11 +22,13 @@ Scale/plan notes:
   few py4j round trips, about 4 ms a field over the catalog's 884.
 - Every table is recomputed and replaced in full through the atomic-swap
   catalog (``ParquetCatalog.overwrite``, fixes Q8), like the reference's
-  TRUNCATE+INSERT (reference USQL/ProcessDaily.usql:142-177), with
-  file counts scaled by the reference's relative-size hints.
+  TRUNCATE+INSERT (reference USQL/ProcessDaily.usql:142-177); the final
+  stage's partitions, which AQE sizes from the data, set the file count.
 """
 
 from __future__ import annotations
+
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,19 +38,13 @@ from ghcrawler_datalake_etl_spark.operators.patterns import (
     array_child,
     collection_refresh,
     snapshot_upsert,
-    traffic_series,
 )
-from ghcrawler_datalake_etl_spark.plans.catalog import (
-    CATALOG,
-    ORIGIN_PATH,
-    RESOURCES_PATH,
-    UNIQUE_PATH,
-    EntitySpec,
-    Field,
-    entity_schemas,
-)
+from ghcrawler_datalake_etl_spark.plans.catalog import CATALOG, EntitySpec, entity_schemas
 from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
 from ghcrawler_datalake_etl_spark.sources.staging import parse_entity, read_staging
+
+if TYPE_CHECKING:
+    from ghcrawler_datalake_etl_spark.plans.catalog import Field
 
 # Envelope columns every curated table carries, from staging metadata
 # (the reference emits EtlSourceId/Etl* per table, e.g.
@@ -94,20 +93,14 @@ def _typed(root: str, fields: tuple[Field, ...]) -> list[str]:
     return [typed_field(root, f) for f in fields]
 
 
-def _entity_filter(spec: EntitySpec) -> Column:
-    op, val = spec.entity_filter
-    c = F.col("entity_name")
-    if op == "eq":
-        return c == val  # P1
-    if op == "like":
-        return c.like(val)  # P2
-    if op == "isin":
-        return c.isin(*val)  # P3
-    raise ValueError(f"unknown entity filter op {op}")
-
-
 def _touched() -> Column:
     return greatest_touched("DeletedAt", "ProcessedAt")
+
+
+def _select(spec: EntitySpec, rows: DataFrame, *cols: str) -> DataFrame:
+    """The day's projected rows, kept where the spec's ``where`` holds."""
+    out = rows.selectExpr(*cols)
+    return out.filter(spec.where) if spec.where else out
 
 
 def build_table(
@@ -120,15 +113,23 @@ def build_table(
     to the spec's entity family and parsed (``data`` struct present).
     Every column list comes from the spec: the projections are its
     fields as SQL text (``typed_field``, the wide typed projection P7)."""
-    if spec.pattern in ("A", "E"):
+    names = [f.name for f in spec.fields]
+    array = _q(f"data.{spec.array_path}") if spec.array_path else None
+    if spec.pattern in ("A", "D", "E"):
         # E is A keyed on (entity key, version timestamp): RepoLog's
         # (EtlSourceId, UpdatedAt) key keeps every observed version
-        # (reference USQL/ProcessDaily.usql:2621,2628-2631).
-        new_df = entity_day.selectExpr(
-            _URN, *_ENVELOPE_SQL, *_typed("data", spec.fields)
-        )
+        # (reference USQL/ProcessDaily.usql:2621,2628-2631). D is A over
+        # one row per series element: the reference's literal MAP_AGG
+        # collapses the series (bug Q3, ProcessDaily.usql:3267-3274), and
+        # a re-fetch refreshes a day's counts (:3293-3295).
+        rows = entity_day
+        cols = [_URN, *_ENVELOPE_SQL, *_typed("data", spec.fields)]
+        if array:
+            rows = rows.selectExpr("*", f"explode({array}) AS element")
+            rows = rows.filter("element IS NOT NULL")
+            cols += _typed("element", spec.element_fields)
         return snapshot_upsert(
-            new_df,
+            _select(spec, rows, *cols),
             previous,
             keys=list(spec.key),
             order_by=[_touched()],
@@ -139,22 +140,20 @@ def build_table(
         # Dedup parents BEFORE exploding (ref keeps RowNumber==1 inside the
         # explode filter, /root/reference/USQL/ProcessDaily.usql:292).
         key = list(spec.key)
-        parents = entity_day.selectExpr(
-            *_ENVELOPE_SQL,
-            *_typed("data", spec.fields),
-            f"{_q('data.' + spec.array_path)} AS _array",
+        parents = _select(
+            spec, entity_day, *_ENVELOPE_SQL, *_typed("data", spec.fields),
+            f"{array} AS _array",
         )
         parents = latest_by(parents, key, [_touched(), F.col("FetchedAt")])
-        parent_cols = [*_ENVELOPE, *(f.name for f in spec.fields)]
-        exploded = array_child(parents, "_array", parent_cols, spec.child_id)
-        # the reference's final projection overwrites the explode ordinal
-        # with an element field of the same role (e.g.
-        # EventPayloadReleaseAssetId = the asset's own id,
-        # reference USQL/ProcessDaily.usql:1397-1398); the ordinal
-        # stays internal.
-        ordinal = [] if spec.extra.get("ordinal_internal") else [spec.child_id]
+        # With no child_id the position stays internal: the reference's
+        # final projection overwrites the explode ordinal with an element
+        # field of the same role (EventPayloadReleaseAssetId = the asset's
+        # own id, reference USQL/ProcessDaily.usql:1397-1398).
+        parent_cols = [*_ENVELOPE, *names]
+        exploded = array_child(parents, "_array", parent_cols, spec.child_id or "_pos")
+        child_id = [spec.child_id] if spec.child_id else []
         new_df = exploded.selectExpr(
-            *map(_q, parent_cols + ordinal), *_typed("element", spec.element_fields)
+            *map(_q, parent_cols + child_id), *_typed("element", spec.element_fields)
         )
         # Replace-by-parent: a re-crawled parent's children are replaced
         # wholesale (handles shrinking arrays). The literal reference
@@ -171,48 +170,26 @@ def build_table(
         return new_df.unionByName(carryover, allowMissingColumns=True)
 
     if spec.pattern == "C":
-        origin_like = spec.extra.get("origin_like")
         # Collection pages carry origin (owner) + resources (member hrefs)
         # links (/root/reference/USQL/ProcessDaily.usql:39-61).
-        pages = entity_day.selectExpr(
-            typed_field("data", Field(spec.origin_col, ORIGIN_PATH)),
-            typed_field("data", Field("UniqueUrn", UNIQUE_PATH)),
-            f"{_q('data.' + RESOURCES_PATH)} AS resources",
+        origin, member = spec.key
+        pages = _select(
+            spec, entity_day, *_typed("data", spec.fields), f"{array} AS resources",
             *_ENVELOPE_SQL[1:4],  # EtlIngestDate, FetchedAt, ProcessedAt
-        ).filter(F.col(spec.origin_col).isNotNull())
-        if origin_like:
-            # The `members` entity feeds OrgMembers and TeamMembers from one
-            # scan, split by origin URN (ProcessDaily.usql:1747-1763).
-            pages = pages.filter(F.col(spec.origin_col).like(origin_like))
+        ).filter(F.col(origin).isNotNull())
         return collection_refresh(
             pages,
             previous,
-            origin_col=spec.origin_col,
-            member_col=spec.member_col,
+            origin_col=origin,
+            member_col=member,
             page_order=[F.col("ProcessedAt"), F.col("FetchedAt")],
             # page-constant passthroughs: the reference's membership rows
             # carry the page's timestamps + UniqueUrn
             # (/root/reference/USQL/ProcessDaily.usql:82-91)
-            extra_cols=("FetchedAt", "ProcessedAt", "EtlIngestDate", "UniqueUrn"),
-        )
-
-    if spec.pattern == "D":
-        parent_cols = ["Urn", *_ENVELOPE, *(f.name for f in spec.fields)]
-        base = entity_day.selectExpr(
-            _URN,
-            *_ENVELOPE_SQL,
-            *_typed("data", spec.fields),
-            f"explode({_q('data.' + spec.array_path)}) AS element",
-        ).filter(F.col("element").isNotNull())
-        new_df = base.selectExpr(
-            *map(_q, parent_cols), *_typed("element", spec.element_fields)
-        )
-        unordered = bool(spec.extra.get("unordered_dedup"))
-        return traffic_series(
-            new_df,
-            previous,
-            natural_key=list(spec.key),
-            order_by=None if unordered else [_touched(), F.col("FetchedAt")],
+            extra_cols=(
+                "FetchedAt", "ProcessedAt", "EtlIngestDate",
+                *(n for n in names if n != origin),
+            ),
         )
 
     raise ValueError(f"unknown pattern {spec.pattern}")
@@ -244,16 +221,11 @@ def run_daily(
         for spec in specs:
             fkey = spec.entity_filter
             if fkey not in parsed:
-                filtered = staging_day.filter(_entity_filter(spec))
+                filtered = staging_day.filter(fkey)
                 parsed[fkey] = parse_entity(filtered, schemas[fkey]).cache()
             previous = None if init_mode else catalog.read_or_none(spec.table)
             snapshot = build_table(spec, parsed[fkey], previous)
-            catalog.overwrite(
-                snapshot,
-                spec.table,
-                num_files=max(1, spec.size_hint // 20),
-                sort_by=list(spec.key),
-            )
+            catalog.overwrite(snapshot, spec.table, sort_by=list(spec.key))
             built.append(spec.table)
     finally:
         for df in parsed.values():

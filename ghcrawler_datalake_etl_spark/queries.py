@@ -47,7 +47,6 @@ from ghcrawler_datalake_etl_spark.operators.patterns import (
     array_child,
     collection_refresh,
     snapshot_upsert,
-    traffic_series,
 )
 from ghcrawler_datalake_etl_spark.sources import ivm
 from ghcrawler_datalake_etl_spark.streaming import (
@@ -909,9 +908,10 @@ def pattern_c_collection_refresh(spark, sf_dir):
     """,
 )
 def pattern_d_traffic_series(spark, sf_dir):
-    """Pattern D machinery: two overlapping 'fetches' of the daily series
-    (split at the cutoff, re-reporting the cutoff day) deduped on the
-    natural key (event_type, data_date) - latest fetch wins; both fetches
+    """Pattern D machinery (pattern A's upsert over series rows): two
+    overlapping 'fetches' of the daily series (split at the cutoff,
+    re-reporting the cutoff day) deduped on the natural key
+    (event_type, data_date) - latest fetch wins; both fetches
     report identical values so the result equals the direct aggregate."""
     ev = _t(spark, sf_dir, "events")
     daily = ev.groupBy(
@@ -926,10 +926,10 @@ def pattern_d_traffic_series(spark, sf_dir):
     fetch2 = daily.filter(F.col("data_date") >= "2024-01-10").withColumn(
         "fetched_at", F.lit(2)
     )
-    merged = traffic_series(
+    merged = snapshot_upsert(
         fetch2,
         fetch1,
-        natural_key=["event_type", "data_date"],
+        keys=["event_type", "data_date"],
         order_by=[F.col("fetched_at")],
     )
     return merged.select("event_type", "data_date", "n", "total_value")
@@ -10752,8 +10752,8 @@ def layout_compact_roundtrip(spark, sf_dir):
     )
     wh = _run_tmp("compact_wh")
     cat = ParquetCatalog(spark, wh)
-    # repartition plants the fragmentation (overwrite's coalesce can
-    # only shrink a narrow scan's 1-2 partitions, never widen)
+    # repartition plants the fragmentation (a narrow scan reads into
+    # 1-2 partitions)
     cat.overwrite(ev.repartition(16), "EventsSnapshot")
     cat.compact("EventsSnapshot", target_bytes=1 << 30)
     return cat.read("EventsSnapshot")

@@ -413,20 +413,18 @@ class ParquetCatalog:
         self,
         df: DataFrame,
         name: str,
-        num_files: int | None = None,
         sort_by: Sequence[str] = (),
     ) -> None:
         """Atomic full-snapshot rewrite (the S5 TRUNCATE+INSERT analog).
 
-        ``num_files`` mirrors the reference's hash-bucket sizing signal
-        (DISTRIBUTE HASH INTO 20/60/200, SURVEY.md section 4); ``sort_by``
-        is the clustered-index analog (sortWithinPartitions -> parquet
-        row-group locality for the dedup keys).
+        One file per partition of ``df``'s final stage, which AQE sizes
+        from the data (the reference's DISTRIBUTE HASH INTO n hint is not
+        needed); ``sort_by`` is the clustered-index analog
+        (sortWithinPartitions -> parquet row-group locality for the dedup
+        keys).
         """
         version, out = self._next_version(name)
         writer = df
-        if num_files is not None:
-            writer = writer.coalesce(num_files)
         if sort_by:
             writer = writer.sortWithinPartitions(*sort_by)
         writer.write.mode("overwrite").format(self.data_format).save(out)
@@ -691,11 +689,10 @@ class ParquetCatalog:
         target = max(1, -(-total // max(1, target_bytes)))
         compacted = len(before) > target
         if compacted:
-            # repartition, not overwrite's num_files coalesce: the
-            # rewrite scan of many small files packs into FEWER
-            # partitions than the byte target implies
-            # (maxPartitionBytes), and coalesce can only shrink - the
-            # target would silently not be honored
+            # repartition, not coalesce: the rewrite scan of many small
+            # files packs into FEWER partitions than the byte target
+            # implies (maxPartitionBytes), and coalesce can only shrink -
+            # the target would silently not be honored
             self.overwrite(
                 self.read(name).repartition(target), name, sort_by=sort_by
             )
@@ -719,14 +716,6 @@ class ParquetCatalog:
                 ignore_errors=True,
             )
         return drop
-
-    def tables(self) -> list[str]:
-        return sorted(
-            d
-            for d in os.listdir(self.warehouse)
-            if os.path.isdir(os.path.join(self.warehouse, d))
-            and self.current_version(d) is not None
-        )
 
 
 def _link_tree(src: str, dst: str) -> None:

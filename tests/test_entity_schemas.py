@@ -82,15 +82,16 @@ STAGED = (
 def test_every_spec_plan_analyzes(spark, spec):
     """Each spec's plan resolves over its family's parse schema, with and
     without a previous snapshot, and carries the spec's key: a quoting or
-    type-name error in any field's projection fails here, without a
-    Spark job. Reserved keywords are enforced, so a path segment such as
-    ``distinct`` must be backquoted."""
+    type-name error in any field's projection, its ``entity_filter`` or
+    its ``where`` fails here, without a Spark job. Reserved keywords are
+    enforced, so a path segment such as ``distinct`` must be
+    backquoted."""
     conf = "spark.sql.ansi.enforceReservedKeywords"
     saved = spark.conf.get(conf)
     spark.conf.set(conf, "true")
     try:
-        day = parse_entity(spark.createDataFrame([], STAGED),
-                           ENTITY_SCHEMAS[spec.entity_filter])
+        staged = spark.createDataFrame([], STAGED).filter(spec.entity_filter)
+        day = parse_entity(staged, ENTITY_SCHEMAS[spec.entity_filter])
         built = build_table(spec, day, None)
         assert set(spec.key) <= set(built.columns)
         previous = spark.createDataFrame([], built.schema)
@@ -103,7 +104,7 @@ def _spec(table, fields=(), array_path=None, element_fields=()):
     return EntitySpec(
         table=table,
         pattern="B" if array_path else "A",
-        entity_filter=("eq", "thing"),
+        entity_filter="entity_name = 'thing'",
         fields=tuple(Field(p.replace(".", "_"), p) for p in fields),
         array_path=array_path,
         element_fields=tuple(Field(p, p) for p in element_fields),
@@ -132,7 +133,7 @@ def test_specs_sharing_a_family_union_their_paths():
     schema = entity_schemas(
         (_spec("A", ["author.login", "sha"]),
          _spec("B", ["author.id"], "files", ["sha", "stats.adds"]))
-    )[("eq", "thing")]
+    )["entity_name = 'thing'"]
     assert schema.simpleString() == (
         "struct<author:struct<login:string,id:string>,sha:string,"
         "files:array<struct<sha:string,stats:struct<adds:string>>>>"

@@ -2910,7 +2910,7 @@ def test_compact_respects_byte_target(spark, tmp_path):
     df = spark.range(50_000).withColumn(
         "payload", F.sha2(F.col("id").cast("string"), 256)
     )
-    cat.overwrite(df, "T", num_files=32)
+    cat.overwrite(df.repartition(32), "T")
     import os
 
     path = cat.current_path("T")
@@ -2918,6 +2918,7 @@ def test_compact_respects_byte_target(spark, tmp_path):
     total = sum(os.path.getsize(os.path.join(path, f)) for f in parts)
     # target half the bytes -> exactly 2 files
     stats = cat.compact("T", target_bytes=(total + 1) // 2)
+    assert stats["files_before"] == 32
     assert stats["compacted"] and stats["files_after"] == 2
     assert cat.read("T").count() == 50_000
 

@@ -543,8 +543,8 @@ def referrers_doc(urn, fetched, processed, series):
     }
 
 
-#: one spec per pattern, plus pattern D's order-free dedup (Referrers);
-#: Commit last, so a failure at the last write leaves every other
+#: one spec per pattern, plus pattern D's key with ProcessedAt in it
+#: (Referrers); Commit last, so a failure at the last write leaves every other
 #: pattern already re-applied (RepoLog is pattern A's code)
 RERUN_SPECS = tuple(
     spec_for(t)
@@ -628,6 +628,40 @@ def test_failed_day_reruns_to_the_same_warehouse(
         assert got.dtypes == want.dtypes, spec.table
         diff = got.exceptAll(want).unionByName(want.exceptAll(got))
         assert diff.isEmpty(), spec.table
+
+
+def test_pattern_d_key_tie_keeps_the_latest_fetch(spark, tmp_path):
+    """Referrers' key (RepoUrn, Referrer, ProcessedAt) ties when one
+    processing pass is fetched twice. The latest fetch wins, within one
+    day and against the standing snapshot: a late-arriving older fetch
+    loses to the stored newer one, whatever the order of arrival."""
+    p = "2024-01-01T06:00:00Z"
+    f1, f2, f3 = ("2024-01-01T07:00:00Z", "2024-01-01T08:00:00Z",
+                  "2024-01-01T09:00:00Z")
+    f4 = "2024-01-02T06:00:00Z"
+    urn = "urn:gh:referrers:r1"
+
+    def doc(fetched, counts):
+        return referrers_doc(urn, fetched, p, [
+            {"referrer": r, "count": c, "uniques": 1} for r, c in counts.items()
+        ])
+
+    days = (
+        ("2024-01-01", [doc(f3, {"google.com": 9, "github.com": 4}),
+                        doc(f1, {"google.com": 5, "github.com": 3})],
+         {"google.com": 9, "github.com": 4}),
+        ("2024-01-02", [doc(f4, {"github.com": 8}),
+                        doc(f2, {"google.com": 7, "github.com": 6})],
+         {"google.com": 9, "github.com": 8}),
+    )
+    staging = str(tmp_path / "staging")
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    for day, docs, want in days:
+        write_docs(str(tmp_path / day), docs)
+        stage_json(spark, str(tmp_path / day), staging, day)
+        run_daily(spark, staging, day, catalog, specs=(spec_for("Referrers"),))
+        got = catalog.read("Referrers").select("Referrer", "Count").collect()
+        assert dict(got) == want, day
 
 
 def test_merge_upsert_one_file_per_bucket(spark, tmp_path):
