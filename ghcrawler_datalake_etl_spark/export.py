@@ -8,11 +8,13 @@ hop table) - one-hop children join the repo URN directly; payload/label
 tables reach the repo through their parent (Event.Urn == EventUrn,
 Issue.Urn == IssueUrn; GetRepoData-unused.usql:42-70,105).
 
-Plan shape: the repo side is a point filter (one row) - broadcast it so
-every child scan is a pushdown-filtered scan + broadcast hash join, no
-shuffle of the big side (the ADLA compiler made the same choice;
-SURVEY.md 3.3). The hop sets (event/issue URNs of ONE repo) stay small,
-so the second hop broadcasts too.
+Plan shape: the repo URNs come from the point filter (a handful of
+rows), collected once. One-hop children filter their join column with
+them as a literal IN, which the parquet scan takes as a pushed-down
+filter. Two-hop children left-semi join the hop table filtered the same
+way, broadcast (no shuffle of the big side; the ADLA compiler made the
+same choice, SURVEY.md 3.3). A hop set (all event URNs of one repo) is
+never collected: a popular repo's events are unbounded.
 """
 
 from __future__ import annotations
@@ -57,36 +59,30 @@ def export_repo_data(
     out_folder: str,
 ) -> dict[str, int]:
     """Join fan-out + TSV export for one repo. Returns rows per export,
-    counted while each TSV is written (one execution per join)."""
+    counted while each TSV is written (one execution per export). Every
+    TSV keeps its table's columns in the table's order."""
     repo = select_repo(catalog, owner_login, name)
-    repo_urns = F.broadcast(
-        repo.select(F.col("EtlSourceId").alias("_urn")).distinct()
-    )
     counts = {"Repo": write_tsv(repo, os.path.join(out_folder, "Repo"))}
+    # The point filter returns a handful of rows (one repo, or a few urns
+    # sharing an owner and name), so its URNs travel as literals.
+    urns = [r.EtlSourceId for r in repo.select("EtlSourceId").collect()]
 
-    # URN set per hop table (e.g. all Event URNs of this repo), computed
-    # lazily once and broadcast into each second-hop join.
-    hop_urns: dict[str, DataFrame] = {}
-
-    def urns_of(hop: str) -> DataFrame:
-        if hop not in hop_urns:
-            parent = catalog.read(hop)
-            hop_urns[hop] = F.broadcast(
-                parent.join(
-                    repo_urns, parent["RepoUrn"] == repo_urns["_urn"], "inner"
-                )
-                .select(F.col("EtlSourceId").alias("_urn"))
-                .distinct()
-            )
-        return hop_urns[hop]
+    def of_repo(table: str, key: str = "RepoUrn") -> DataFrame:
+        return catalog.read(table).filter(F.col(key).isin(urns))
 
     for table, key, hop in DEFAULT_EXPORTS:
         if not catalog.exists(table) or (hop and not catalog.exists(hop)):
             continue
-        child = catalog.read(table)
-        target = urns_of(hop) if hop else repo_urns
-        joined = child.join(
-            target, child[key] == target["_urn"], "inner"
-        ).drop("_urn")
-        counts[table] = write_tsv(joined, os.path.join(out_folder, table))
+        if hop is None:
+            rows = of_repo(table, key)
+        else:
+            # A popular repo's hop set is unbounded: broadcast it, never
+            # collect it. A join condition, not USING, keeps the child's
+            # column order.
+            child = catalog.read(table)
+            hop_set = F.broadcast(
+                of_repo(hop).select(F.col("EtlSourceId").alias("_urn"))
+            )
+            rows = child.join(hop_set, child[key] == hop_set["_urn"], "left_semi")
+        counts[table] = write_tsv(rows, os.path.join(out_folder, table))
     return counts

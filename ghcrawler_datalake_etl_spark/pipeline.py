@@ -11,8 +11,11 @@ snapshot - ``init_mode=True``.
 
 Scale/plan notes:
 - The day's staging partition is scanned once and cached (the reference
-  re-scans it per section - quirk Q6, SURVEY.md 2.11); each entity filter
-  (SQL text from the spec) then prunes from memory.
+  re-scans it per section - quirk Q6, SURVEY.md 2.11). It is the day's
+  one cache: each spec filters its entity family (SQL text from the
+  spec) from it and parses that family itself. Under AQE a cached frame
+  costs a job of its own the first time a query reads it, so only a
+  frame every spec reads is worth one; a family is read by one or two.
 - Each entity family parses with the schema its specs fix for it
   (``plans.catalog.entity_schemas``, SURVEY.md 1.3), so every path a spec
   reads exists; absent and malformed values project as typed NULLs (the
@@ -206,29 +209,25 @@ def run_daily(
     """Run every spec for one day (ProcessDaily); ``init_mode`` ignores
     previous snapshots (CreateAndInitialize* backfill path).
 
-    Each entity family is parsed once, with the union of the paths the
-    specs being run read from it (``plans.catalog.entity_schemas``). A
-    family absent from the day parses to no rows, so its tables are
-    rebuilt from the previous snapshot alone. Every spec's new snapshot
-    (``build_table``) replaces the table in full (``overwrite``), so a
-    day that failed part-way re-runs to the same warehouse.
+    The cached staging day is the one cache: each spec parses its entity
+    family from it, with the union of the paths the specs being run read
+    from that family (``plans.catalog.entity_schemas``). A family absent
+    from the day parses to no rows, so its tables are rebuilt from the
+    previous snapshot alone. Every spec's new snapshot (``build_table``)
+    replaces the table in full (``overwrite``), so a day that failed
+    part-way re-runs to the same warehouse.
     """
     staging_day = read_staging(spark, staging_path, ingest_date).cache()  # Q6
     schemas = entity_schemas(specs)
-    parsed: dict = {}  # one parse per entity family, shared across specs (Q6)
     built = []
     try:
         for spec in specs:
             fkey = spec.entity_filter
-            if fkey not in parsed:
-                filtered = staging_day.filter(fkey)
-                parsed[fkey] = parse_entity(filtered, schemas[fkey]).cache()
+            entity_day = parse_entity(staging_day.filter(fkey), schemas[fkey])
             previous = None if init_mode else catalog.read_or_none(spec.table)
-            snapshot = build_table(spec, parsed[fkey], previous)
+            snapshot = build_table(spec, entity_day, previous)
             catalog.overwrite(snapshot, spec.table, sort_by=list(spec.key))
             built.append(spec.table)
     finally:
-        for df in parsed.values():
-            df.unpersist()
         staging_day.unpersist()
     return built

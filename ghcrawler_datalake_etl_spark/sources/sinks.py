@@ -734,15 +734,16 @@ def _link_tree(src: str, dst: str) -> None:
                 shutil.copy2(s, d)
 
 
-def write_tsv(df: DataFrame, path: str, num_files: int = 1) -> int:
+def write_tsv(df: DataFrame, path: str) -> int:
     """TSV export sink (S7, /root/reference/USQL/GetRepoData-unused.usql:17-19
-    ``OUTPUT ... USING Outputters.Tsv()``). Returns the rows written,
-    observed by the write job itself (``DataFrame.observe``) instead of
-    a second execution of ``df`` for a count."""
+    ``OUTPUT ... USING Outputters.Tsv()``), one file with a header row.
+    Returns the rows written, observed by the write job itself
+    (``DataFrame.observe``) instead of a second execution of ``df`` for
+    a count."""
     obs = Observation()
     (
         df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        .coalesce(num_files)
+        .coalesce(1)
         .write.mode("overwrite")
         .option("sep", "\t")
         .option("header", True)
@@ -751,14 +752,15 @@ def write_tsv(df: DataFrame, path: str, num_files: int = 1) -> int:
     return obs.get["rows"]
 
 
-def write_jsonl(df: DataFrame, path: str, num_files: int = 1) -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """JSON-lines export sink - the de-facto interchange format of
     training-data pipelines (and the shape of the reference's OWN
-    crawler input: one JSON document per line, sources/staging.py S1).
-    ``ignoreNullFields=false`` keeps explicit nulls so the round trip
-    is lossless: unlike TSV, JSONL distinguishes NULL from ''."""
+    crawler input: one JSON document per line, sources/staging.py S1),
+    one file. ``ignoreNullFields=false`` keeps explicit nulls so the
+    round trip is lossless: unlike TSV, JSONL distinguishes NULL from
+    ''."""
     (
-        df.coalesce(num_files)
+        df.coalesce(1)
         .write.mode("overwrite")
         .option("ignoreNullFields", "false")
         .json(path)

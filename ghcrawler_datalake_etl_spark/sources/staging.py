@@ -37,7 +37,7 @@ always possible - staging is the durable source of truth.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -61,6 +61,28 @@ _ENVELOPE_SCHEMA = (
 )
 
 
+def _staged(raw: DataFrame, ingest_date: str, source_file: Column) -> DataFrame:
+    """The staging projection of raw JSON lines (a ``value`` column):
+    the typed envelope, the day, ``source_file`` and the raw document.
+    ``stage_json`` and its streaming twin both stage through it."""
+    meta = F.from_json(F.col("value"), _ENVELOPE_SCHEMA).getField("_metadata")
+    return (
+        raw.select(
+            meta.getField("type").alias("entity_name"),
+            F.lit(ingest_date).alias("ingest_date"),
+            meta.getField("fetchedAt").try_cast("timestamp").alias("fetched_at"),
+            meta.getField("processedAt").try_cast("timestamp").alias("processed_at"),
+            meta.getField("deletedAt").try_cast("timestamp").alias("deleted_at"),
+            meta.getField("links").getField("self").getField("href").alias("urn"),
+            source_file.alias("source_file"),
+            F.col("value").alias("data_raw"),
+        )
+        # FlatJson(silent: true) equivalent: malformed/non-document lines
+        # parse to NULL metadata and are dropped.
+        .filter(F.col("entity_name").isNotNull() & F.col("urn").isNotNull())
+    )
+
+
 def stage_json(
     spark: SparkSession,
     input_path: str,
@@ -73,36 +95,7 @@ def stage_json(
     (dynamic partition overwrite == the reference's partition swap,
     StageData.usql:24-36).
     """
-    raw = spark.read.text(input_path)
-    env = F.from_json(F.col("value"), _ENVELOPE_SCHEMA)
-    staged = (
-        raw.select(
-            env.getField("_metadata").getField("type").alias("entity_name"),
-            F.lit(ingest_date).alias("ingest_date"),
-            env.getField("_metadata")
-            .getField("fetchedAt")
-            .try_cast("timestamp")
-            .alias("fetched_at"),
-            env.getField("_metadata")
-            .getField("processedAt")
-            .try_cast("timestamp")
-            .alias("processed_at"),
-            env.getField("_metadata")
-            .getField("deletedAt")
-            .try_cast("timestamp")
-            .alias("deleted_at"),
-            env.getField("_metadata")
-            .getField("links")
-            .getField("self")
-            .getField("href")
-            .alias("urn"),
-            F.input_file_name().alias("source_file"),
-            F.col("value").alias("data_raw"),
-        )
-        # FlatJson(silent: true) equivalent: malformed/non-document lines
-        # parse to NULL metadata and are dropped.
-        .filter(F.col("entity_name").isNotNull() & F.col("urn").isNotNull())
-    )
+    staged = _staged(spark.read.text(input_path), ingest_date, F.input_file_name())
     (
         staged.write.mode("overwrite")
         # per-write override, NOT session-conf reliance: under the

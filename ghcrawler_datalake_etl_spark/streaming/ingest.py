@@ -30,24 +30,14 @@ def stream_stage_available_now(
     """Streaming twin of sources.staging.stage_json: file-source stream
     over the day's JSON, available-now trigger (process the backlog,
     then stop) - idempotent via the checkpoint, exactly-once per file."""
-    from ghcrawler_datalake_etl_spark.sources.staging import _ENVELOPE_SCHEMA
+    from ghcrawler_datalake_etl_spark.sources.staging import _staged
 
     raw = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", 64)
         .load(input_path)
     )
-    env = F.from_json(F.col("value"), _ENVELOPE_SCHEMA)
-    staged = raw.select(
-        env.getField("_metadata").getField("type").alias("entity_name"),
-        F.lit(ingest_date).alias("ingest_date"),
-        env.getField("_metadata").getField("fetchedAt").try_cast("timestamp").alias("fetched_at"),
-        env.getField("_metadata").getField("processedAt").try_cast("timestamp").alias("processed_at"),
-        env.getField("_metadata").getField("deletedAt").try_cast("timestamp").alias("deleted_at"),
-        env.getField("_metadata").getField("links").getField("self").getField("href").alias("urn"),
-        F.lit("stream").alias("source_file"),
-        F.col("value").alias("data_raw"),
-    ).filter(F.col("entity_name").isNotNull() & F.col("urn").isNotNull())
+    staged = _staged(raw, ingest_date, F.lit("stream"))
     return (
         staged.writeStream.format("parquet")
         .option("path", staging_path)

@@ -334,9 +334,112 @@ def test_export_repo_data_fan_out(spark, warehouse, tmp_path):
     with open(part) as f:
         rows = list(csv.DictReader(f, delimiter="\t"))
     assert rows[0]["Name"] == "proj" and rows[0]["OwnerLogin"] == "acme"
+    # every TSV carries its table's columns in the table's order (a USING
+    # join would move the join column first and keep the counts)
+    for table in counts:
+        assert tsv_rows(out, table)[0] == catalog.read(table).columns, table
     # unknown repo exports an empty Repo set and no child rows
     counts2 = export_repo_data(catalog, "acme", "nope", str(tmp_path / "e2"))
     assert counts2["Repo"] == 0 and counts2.get("Issue", 0) == 0
+
+
+def tsv_rows(out, table):
+    """Header and data rows of one exported TSV (a single part file)."""
+    import csv
+
+    (part,) = (p for p in (out / table).iterdir() if p.suffix == ".csv")
+    with open(part) as f:
+        return list(csv.reader(f, delimiter="\t"))
+
+
+def test_export_repo_data_keeps_every_repo_of_one_name(spark, tmp_path):
+    """A transferred repo can leave two ``Repo`` rows with one owner and
+    name under different urns. The export keeps both, and the one-hop
+    (Issue) and two-hop (Issue -> IssueLabel) children of both; another
+    repo's children stay out."""
+    from ghcrawler_datalake_etl_spark.export import export_repo_data
+
+    def issue_of(urn, repo_urn, labels):
+        doc = issue_doc(urn, T1, T1, [{"name": n, "color": "red", "default": False}
+                                      for n in labels])
+        doc["_metadata"]["links"]["repo"]["href"] = repo_urn
+        return doc
+
+    other = repo_doc("urn:gh:repo:3", T1, T1, 5, "2023-12-31T00:00:00Z")
+    other["name"] = "other"
+    docs = [
+        repo_doc(REPO_URN, T1, T1, 100, "2023-12-31T00:00:00Z"),
+        repo_doc(REPO2_URN, T1, T1, 7, "2023-12-31T00:00:00Z"),
+        other,
+        issue_of("urn:gh:issue:i1", REPO_URN, ["bug", "p1"]),
+        issue_of("urn:gh:issue:i2", REPO2_URN, ["old"]),
+        issue_of("urn:gh:issue:i3", "urn:gh:repo:3", ["x", "y"]),
+    ]
+    write_docs(str(tmp_path / "raw"), docs)
+    stage_json(spark, str(tmp_path / "raw"), str(tmp_path / "stg"), "2024-01-01")
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    run_daily(spark, str(tmp_path / "stg"), "2024-01-01", catalog,
+              specs=tuple(spec_for(t) for t in ("Repo", "Issue", "IssueLabel")))
+
+    out = tmp_path / "export"
+    counts = export_repo_data(catalog, "acme", "proj", str(out))
+    assert counts == {"Repo": 2, "Issue": 2, "IssueLabel": 3}
+
+    def column(table, name):
+        header, *rows = tsv_rows(out, table)
+        assert header == catalog.read(table).columns, table
+        return sorted(r[header.index(name)] for r in rows)
+
+    assert column("Repo", "EtlSourceId") == [REPO_URN, REPO2_URN]
+    assert column("Issue", "RepoUrn") == [REPO_URN, REPO2_URN]
+    assert column("IssueLabel", "IssueUrn") == [
+        "urn:gh:issue:i1", "urn:gh:issue:i1", "urn:gh:issue:i2"]
+
+
+def jobs_of(spark, action):
+    """Spark jobs that ``action()`` runs, counted by its job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_daily_costs_at_most_two_jobs_per_spec(spark, tmp_path):
+    """The cached staging day is ``run_daily``'s one cache. A cache of
+    each parsed family would cost a job of its own under AQE the first
+    time a spec reads it (3 jobs for the first spec of a family, not 2).
+    Over three families of two specs each, the day stays within 2 jobs
+    a spec, plus one to read the staging footers and one to fill the
+    staging-day cache."""
+    specs = tuple(spec_for(t) for t in (
+        "Commit", "CommitFile", "Repo", "RepoLog", "Issue", "IssueLabel"))
+    staging = str(tmp_path / "stg")
+    write_docs(str(tmp_path / "raw"), DAY1)
+    stage_json(spark, str(tmp_path / "raw"), staging, "2024-01-01")
+    catalog = ParquetCatalog(spark, str(tmp_path / "wh"))
+    jobs = jobs_of(spark, lambda: run_daily(spark, staging, "2024-01-01", catalog,
+                                            specs=specs, init_mode=True))
+    assert jobs <= 2 * len(specs) + 2, jobs
+
+
+def test_export_costs_at_most_two_jobs_per_tsv(spark, warehouse, tmp_path):
+    """The export collects the point filter's repo URNs once and filters
+    each child with them, so a TSV costs its write and at most one more
+    job (the Repo URNs' collect, or a broadcast hop set)."""
+    from ghcrawler_datalake_etl_spark.export import export_repo_data
+
+    catalog, _ = warehouse
+    counts = {}
+    jobs = jobs_of(spark, lambda: counts.update(
+        export_repo_data(catalog, "acme", "proj", str(tmp_path / "out"))))
+    assert len(counts) == 3  # Repo, Issue, IssueLabel
+    assert jobs <= 2 * len(counts), jobs
 
 
 def test_default_exports_join_columns_are_declared():
