@@ -132,6 +132,11 @@ def collection_refresh(
        (left join + IS NULL == anti-join, :63-80 / J2)
     4. union + DISTINCT (:82-91)
 
+    Step 3 replaces an origin's members whatever the age of today's
+    page, as the reference does (J2, SURVEY.md 2.3 and 2.9 C): unlike
+    pattern B's children, a late page is not compared with the stored
+    membership.
+
     ``pages_df`` columns: ``origin_col``, ``resources_col`` (array of
     member urns), the ``page_order`` ordering columns, and ``extra_cols``
     passthroughs. Returns distinct (origin, member, *extra) rows.

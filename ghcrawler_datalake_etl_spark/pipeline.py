@@ -147,7 +147,22 @@ def build_table(
             spec, entity_day, *_ENVELOPE_SQL, *_typed("data", spec.fields),
             f"{array} AS _array",
         )
-        parents = latest_by(parents, key, [_touched(), F.col("FetchedAt")])
+        version = [_touched(), F.col("FetchedAt")]
+        parents = latest_by(parents, key, version)
+        if previous is not None:
+            # Latest parent version wins, wholesale (SURVEY.md 2.9 B: UNION
+            # ALL previous, then W1): a day version at least as new as the
+            # stored one replaces all of the parent's children, a tie going
+            # to the day so a re-run is idempotent; an older one (a late
+            # re-crawl) loses with its children. A struct compares field by
+            # field with NULLs lowest, ``latest_by``'s order. Only the day's
+            # parents are broadcast; the previous snapshot is never shuffled.
+            day = parents.select(*key, F.struct(*version).alias("_day"))
+            stored = previous.join(F.broadcast(day), key, "left")
+            newer = F.struct(*version) > F.col("_day")
+            carryover = stored.filter(F.col("_day").isNull() | newer).drop("_day")
+            stale = stored.filter(newer).select(*key)
+            parents = parents.join(F.broadcast(stale), key, "left_anti")
         # With no child_id the position stays internal: the reference's
         # final projection overwrites the explode ordinal with an element
         # field of the same role (EventPayloadReleaseAssetId = the asset's
@@ -158,9 +173,9 @@ def build_table(
         new_df = exploded.selectExpr(
             *map(_q, parent_cols + child_id), *_typed("element", spec.element_fields)
         )
-        # Replace-by-parent: a re-crawled parent's children are replaced
-        # wholesale (handles shrinking arrays). The literal reference
-        # dedups child rows by EtlSourceId ALONE (e.g. CommitFile,
+        # Replace-by-parent: the latest parent version's children replace
+        # the stored ones wholesale (handles shrinking arrays). The literal
+        # reference dedups child rows by EtlSourceId ALONE (e.g. CommitFile,
         # /root/reference/USQL/ProcessDaily.usql:329-331), which would
         # collapse every child of a document to one arbitrary row - a
         # latent bug in the Q1/Q3 family; we implement the intended
@@ -168,8 +183,6 @@ def build_table(
         # refresh on re-crawl) and pin it by test.
         if previous is None:
             return new_df
-        refreshed = parents.select(*key).distinct()
-        carryover = previous.join(F.broadcast(refreshed), key, "left_anti")
         return new_df.unionByName(carryover, allowMissingColumns=True)
 
     if spec.pattern == "C":

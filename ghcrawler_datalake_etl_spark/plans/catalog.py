@@ -10,6 +10,15 @@ load-bearing columns per entity (keys, link urns, timestamps, counters,
 PII fields); the machinery is column-count-agnostic, so widening a spec
 is data entry, not code.
 
+The reference types each GitHub API object out again in every script
+that embeds it. Here each is declared once, as a module-level tuple of
+``Field``s that carries its reference citation: the user (``USER``),
+the repository (``REPOSITORY``), a pull request's base or head branch
+(``BRANCH``), the milestone (``MILESTONE``) and the commit (``COMMIT``).
+A table composes its columns from them with ``embed``, which prefixes
+each column name and path, in the reference's column order; RepoLog
+reuses Repo's tuple (``REPO_FIELDS``). Widening an object is one edit.
+
 Path convention: ``fields`` paths are dotted struct paths inside the
 staging ``data`` column (native nesting replaces the reference's
 flattened path->bytes map, SURVEY.md 1.1). Envelope columns
@@ -89,6 +98,153 @@ UNIQUE_PATH = "_metadata.links.unique.href"
 RESOURCES_PATH = "_metadata.links.resources.hrefs"
 
 
+def embed(name: str, path: str, group: tuple[Field, ...]) -> tuple[Field, ...]:
+    """``group`` as an object embedded at ``path``: every column name
+    gains the prefix ``name`` and every path the prefix ``path``."""
+    return tuple(Field(name + f.name, f"{path}.{f.path}", f.type) for f in group)
+
+
+# -- The shared GitHub API objects, each declared once (module docstring).
+
+# The user summary: Commit's Author*/Committer* (reference
+# USQL/ProcessDaily.usql:98-129) and every other user a table embeds.
+USER = (
+    Field('Id', 'id', 'long'),
+    Field('Login', 'login'),
+    Field('SiteAdmin', 'site_admin', 'boolean'),
+    Field('Type', 'type'),
+)
+
+# The repository summary: Repo's Parent*/Source* (reference
+# USQL/ProcessDaily.usql:2506-2745) and the repo of a pull request branch.
+REPOSITORY = (
+    Field('CreatedAt', 'created_at', 'timestamp'),
+    Field('DefaultBranch', 'default_branch'),
+    Field('Description', 'description'),
+    Field('Fork', 'fork', 'boolean'),
+    Field('Forks', 'forks', 'long'),
+    Field('ForksCount', 'forks_count', 'long'),
+    Field('FullName', 'full_name'),
+    Field('HasDownloads', 'has_downloads', 'boolean'),
+    Field('HasIssues', 'has_issues', 'boolean'),
+    Field('HasPages', 'has_pages', 'boolean'),
+    Field('HasWiki', 'has_wiki', 'boolean'),
+    Field('Homepage', 'homepage'),
+    Field('Id', 'id', 'long'),
+    Field('Language', 'language'),
+    Field('Name', 'name'),
+    Field('OpenIssues', 'open_issues', 'long'),
+    Field('OpenIssuesCount', 'open_issues_count', 'long'),
+    *embed('Owner', 'owner', USER),
+    Field('Private', 'private', 'boolean'),
+    Field('PushedAt', 'pushed_at', 'timestamp'),
+    Field('Size', 'size', 'long'),
+    Field('StargazersCount', 'stargazers_count', 'long'),
+    Field('UpdatedAt', 'updated_at', 'timestamp'),
+    Field('Watchers', 'watchers', 'long'),
+    Field('WatchersCount', 'watchers_count', 'long'),
+)
+
+# A pull request's base or head branch: PullRequest's Base*/Head*
+# (reference USQL/ProcessDaily.usql:1963-2266).
+BRANCH = (
+    Field('Label', 'label'),
+    Field('Ref', 'ref'),
+    *embed('Repo', 'repo', REPOSITORY),
+    Field('Sha', 'sha'),
+    *embed('User', 'user', USER),
+)
+
+# An issue's or pull request's milestone: Issue's Milestone* (reference
+# USQL/ProcessDaily.usql:1455-1570).
+MILESTONE = (
+    Field('ClosedAt', 'closed_at', 'timestamp'),
+    Field('ClosedIssues', 'closed_issues', 'long'),
+    Field('CreatedAt', 'created_at', 'timestamp'),
+    *embed('Creator', 'creator', USER),
+    Field('Description', 'description'),
+    Field('DueOn', 'due_on', 'timestamp'),
+    Field('Id', 'id', 'long'),
+    Field('Number', 'number', 'long'),
+    Field('OpenIssues', 'open_issues', 'long'),
+    Field('State', 'state'),
+    Field('Title', 'title'),
+    Field('UpdatedAt', 'updated_at', 'timestamp'),
+)
+
+# A commit as Commit and PullRequestCommit both read it (reference
+# USQL/ProcessDaily.usql:98-129 and :2271-2356).
+COMMIT = (
+    Field('CommitSha', 'sha'),
+    Field('Url', 'url'),
+    *embed('Author', 'author', USER),
+    Field('CommitAuthorDate', 'commit.author.date', 'timestamp'),
+    Field('CommitAuthorEmail', 'commit.author.email', 'pii'),
+    Field('CommitAuthorName', 'commit.author.name', 'pii'),
+    Field('CommitCommentCount', 'commit.comment_count', 'long'),
+    Field('CommitCommitterDate', 'commit.committer.date', 'timestamp'),
+    Field('CommitCommitterEmail', 'commit.committer.email', 'pii'),
+    Field('CommitCommitterName', 'commit.committer.name', 'pii'),
+    Field('CommitMessage', 'commit.message'),
+    Field('CommitTreeSha', 'commit.tree.sha'),
+    *embed('Committer', 'committer', USER),
+    Field('StatsAdditions', 'stats.additions', 'long'),
+    Field('StatsDeletions', 'stats.deletions', 'long'),
+    Field('StatsTotal', 'stats.total', 'long'),
+)
+
+
+# The Repo table's columns (reference USQL/ProcessDaily.usql:2506-2745);
+# RepoLog keeps every version of the same projection (:2747-2859).
+REPO_FIELDS = (
+    Field('OwnerUrn', '_metadata.links.owner.href'),
+    Field('SiblingsUrn', '_metadata.links.siblings.href'),
+    Field('Name', 'name'),
+    Field('RepoId', 'id', 'long'),
+    Field('OwnerLogin', 'owner.login'),
+    Field('CreatedAt', 'created_at', 'timestamp'),
+    Field('DefaultBranch', 'default_branch'),
+    Field('Description', 'description'),
+    Field('Fork', 'fork', 'boolean'),
+    Field('Forks', 'forks', 'long'),
+    Field('ForksCount', 'forks_count', 'long'),
+    Field('FullName', 'full_name'),
+    Field('HasDownloads', 'has_downloads', 'boolean'),
+    Field('HasIssues', 'has_issues', 'boolean'),
+    Field('HasPages', 'has_pages', 'boolean'),
+    Field('HasWiki', 'has_wiki', 'boolean'),
+    Field('Homepage', 'homepage'),
+    Field('Language', 'language'),
+    Field('NetworkCount', 'network_count', 'long'),
+    Field('OpenIssues', 'open_issues', 'long'),
+    Field('OpenIssuesCount', 'open_issues_count', 'long'),
+    *embed('Organization', 'organization', USER),
+    Field('OwnerId', 'owner.id', 'long'),
+    Field('OwnerSiteAdmin', 'owner.site_admin', 'boolean'),
+    Field('OwnerType', 'owner.type'),
+    *embed('Parent', 'parent', REPOSITORY),
+    Field('PermissionsAdmin', 'permissions.admin', 'boolean'),
+    Field('PermissionsPull', 'permissions.pull', 'boolean'),
+    Field('PermissionsPush', 'permissions.push', 'boolean'),
+    Field('IsPrivate', 'private', 'boolean'),
+    Field('PushedAt', 'pushed_at', 'timestamp'),
+    Field('Size', 'size', 'long'),
+    *embed('Source', 'source', REPOSITORY),
+    Field('StargazersCount', 'stargazers_count', 'long'),
+    Field('SubscribersCount', 'subscribers_count', 'long'),
+    Field('UpdatedAt', 'updated_at', 'timestamp'),
+    Field('Watchers', 'watchers', 'long'),
+    Field('WatchersCount', 'watchers_count', 'long'),
+    Field('TeamsPageUrn', '_metadata.links.teams.href'),
+    Field('CollaboratorsPageUrn', '_metadata.links.collaborators.href'),
+    Field('ContributorsPageUrn', '_metadata.links.contributors.href'),
+    Field('SubscribersPageUrn', '_metadata.links.subscribers.href'),
+    Field('IssuesUrn', '_metadata.links.issues.href'),
+    Field('CommitsUrn', '_metadata.links.commits.href'),
+    Field('SchemaVersion', '_metadata.version', 'long'),
+)
+
+
 CATALOG: tuple[EntitySpec, ...] = (
     # -- Pattern A: scalar entity snapshots (full reference-name column
     #    lists, mechanically reconciled against the CTAS select lists in
@@ -101,28 +257,7 @@ CATALOG: tuple[EntitySpec, ...] = (
         fields=(
             Field('RepoUrn', '_metadata.links.repo.href'),
             Field('SiblingsUrn', '_metadata.links.siblings.href'),
-            Field('CommitSha', 'sha'),
-            Field('Url', 'url'),
-            Field('AuthorId', 'author.id', 'long'),
-            Field('AuthorLogin', 'author.login'),
-            Field('AuthorSiteAdmin', 'author.site_admin', 'boolean'),
-            Field('AuthorType', 'author.type'),
-            Field('CommitAuthorDate', 'commit.author.date', 'timestamp'),
-            Field('CommitAuthorEmail', 'commit.author.email', 'pii'),
-            Field('CommitAuthorName', 'commit.author.name', 'pii'),
-            Field('CommitCommentCount', 'commit.comment_count', 'long'),
-            Field('CommitCommitterDate', 'commit.committer.date', 'timestamp'),
-            Field('CommitCommitterEmail', 'commit.committer.email', 'pii'),
-            Field('CommitCommitterName', 'commit.committer.name', 'pii'),
-            Field('CommitMessage', 'commit.message'),
-            Field('CommitTreeSha', 'commit.tree.sha'),
-            Field('CommitterId', 'committer.id', 'long'),
-            Field('CommitterLogin', 'committer.login'),
-            Field('CommitterSiteAdmin', 'committer.site_admin', 'boolean'),
-            Field('CommitterType', 'committer.type'),
-            Field('StatsAdditions', 'stats.additions', 'long'),
-            Field('StatsDeletions', 'stats.deletions', 'long'),
-            Field('StatsTotal', 'stats.total', 'long'),
+            *COMMIT,
             Field('SchemaVersion', '_metadata.version', 'long'),
         ),
     ),
@@ -142,10 +277,7 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('Path', 'path'),
             Field('Position', 'position', 'long'),
             Field('UpdatedAt', 'updated_at', 'timestamp'),
-            Field('UserId', 'user.id', 'long'),
-            Field('UserLogin', 'user.login'),
-            Field('UserSiteAdmin', 'user.site_admin', 'boolean'),
-            Field('UserType', 'user.type'),
+            *embed('User', 'user', USER),
             Field('UserUrn', '_metadata.links.user.href'),
             Field('SchemaVersion', '_metadata.version', 'long'),
         ),
@@ -160,42 +292,19 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('SiblingsUrn', '_metadata.links.siblings.href'),
             Field('Number', 'number', 'long'),
             Field('IssueId', 'id', 'long'),
-            Field('AssigneeId', 'assignee.id', 'long'),
-            Field('AssigneeLogin', 'assignee.login'),
-            Field('AssigneeSiteAdmin', 'assignee.site_admin', 'boolean'),
-            Field('AssigneeType', 'assignee.type'),
+            *embed('Assignee', 'assignee', USER),
             Field('Body', 'body'),
             Field('ClosedAt', 'closed_at', 'timestamp'),
-            Field('ClosedById', 'closed_by.id', 'long'),
-            Field('ClosedByLogin', 'closed_by.login'),
-            Field('ClosedBySiteAdmin', 'closed_by.site_admin', 'boolean'),
-            Field('ClosedByType', 'closed_by.type'),
+            *embed('ClosedBy', 'closed_by', USER),
             Field('Comments', 'comments', 'long'),
             Field('CreatedAt', 'created_at', 'timestamp'),
             Field('Locked', 'locked', 'boolean'),
-            Field('MilestoneClosedAt', 'milestone.closed_at', 'timestamp'),
-            Field('MilestoneClosedIssues', 'milestone.closed_issues', 'long'),
-            Field('MilestoneCreatedAt', 'milestone.created_at', 'timestamp'),
-            Field('MilestoneCreatorId', 'milestone.creator.id', 'long'),
-            Field('MilestoneCreatorLogin', 'milestone.creator.login'),
-            Field('MilestoneCreatorSiteAdmin', 'milestone.creator.site_admin', 'boolean'),
-            Field('MilestoneCreatorType', 'milestone.creator.type'),
-            Field('MilestoneDescription', 'milestone.description'),
-            Field('MilestoneDueOn', 'milestone.due_on', 'timestamp'),
-            Field('MilestoneId', 'milestone.id', 'long'),
-            Field('MilestoneNumber', 'milestone.number', 'long'),
-            Field('MilestoneOpenIssues', 'milestone.open_issues', 'long'),
-            Field('MilestoneState', 'milestone.state'),
-            Field('MilestoneTitle', 'milestone.title'),
-            Field('MilestoneUpdatedAt', 'milestone.updated_at', 'timestamp'),
+            *embed('Milestone', 'milestone', MILESTONE),
             Field('PullRequestUrl', 'pull_request.url'),
             Field('State', 'state'),
             Field('Title', 'title'),
             Field('UpdatedAt', 'updated_at', 'timestamp'),
-            Field('UserId', 'user.id', 'long'),
-            Field('UserLogin', 'user.login'),
-            Field('UserSiteAdmin', 'user.site_admin', 'boolean'),
-            Field('UserType', 'user.type'),
+            *embed('User', 'user', USER),
             Field('UserUrn', '_metadata.links.user.href'),
             Field('ClosedByUrn', '_metadata.links.closed_by.href'),
             Field('SchemaVersion', '_metadata.version', 'long'),
@@ -213,10 +322,7 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('Body', 'body'),
             Field('CreatedAt', 'created_at', 'timestamp'),
             Field('UpdatedAt', 'updated_at', 'timestamp'),
-            Field('UserId', 'user.id', 'long'),
-            Field('UserLogin', 'user.login'),
-            Field('UserSiteAdmin', 'user.site_admin', 'boolean'),
-            Field('UserType', 'user.type'),
+            *embed('User', 'user', USER),
             Field('UserUrn', '_metadata.links.user.href'),
             Field('SchemaVersion', '_metadata.version', 'long'),
         ),
@@ -279,45 +385,8 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('LinksSelfHref', '_links.self.href'),
             Field('LinksStatusesHref', '_links.statuses.href'),
             Field('Additions', 'additions', 'long'),
-            Field('AssigneeId', 'assignee.id', 'long'),
-            Field('AssigneeLogin', 'assignee.login'),
-            Field('AssigneeSiteAdmin', 'assignee.site_admin', 'boolean'),
-            Field('AssigneeType', 'assignee.type'),
-            Field('BaseLabel', 'base.label'),
-            Field('BaseRef', 'base.ref'),
-            Field('BaseRepoCreatedAt', 'base.repo.created_at', 'timestamp'),
-            Field('BaseRepoDefaultBranch', 'base.repo.default_branch'),
-            Field('BaseRepoDescription', 'base.repo.description'),
-            Field('BaseRepoFork', 'base.repo.fork', 'boolean'),
-            Field('BaseRepoForks', 'base.repo.forks', 'long'),
-            Field('BaseRepoForksCount', 'base.repo.forks_count', 'long'),
-            Field('BaseRepoFullName', 'base.repo.full_name'),
-            Field('BaseRepoHasDownloads', 'base.repo.has_downloads', 'boolean'),
-            Field('BaseRepoHasIssues', 'base.repo.has_issues', 'boolean'),
-            Field('BaseRepoHasPages', 'base.repo.has_pages', 'boolean'),
-            Field('BaseRepoHasWiki', 'base.repo.has_wiki', 'boolean'),
-            Field('BaseRepoHomepage', 'base.repo.homepage'),
-            Field('BaseRepoId', 'base.repo.id', 'long'),
-            Field('BaseRepoLanguage', 'base.repo.language'),
-            Field('BaseRepoName', 'base.repo.name'),
-            Field('BaseRepoOpenIssues', 'base.repo.open_issues', 'long'),
-            Field('BaseRepoOpenIssuesCount', 'base.repo.open_issues_count', 'long'),
-            Field('BaseRepoOwnerId', 'base.repo.owner.id', 'long'),
-            Field('BaseRepoOwnerLogin', 'base.repo.owner.login'),
-            Field('BaseRepoOwnerSiteAdmin', 'base.repo.owner.site_admin', 'boolean'),
-            Field('BaseRepoOwnerType', 'base.repo.owner.type'),
-            Field('BaseRepoPrivate', 'base.repo.private', 'boolean'),
-            Field('BaseRepoPushedAt', 'base.repo.pushed_at', 'timestamp'),
-            Field('BaseRepoSize', 'base.repo.size', 'long'),
-            Field('BaseRepoStargazersCount', 'base.repo.stargazers_count', 'long'),
-            Field('BaseRepoUpdatedAt', 'base.repo.updated_at', 'timestamp'),
-            Field('BaseRepoWatchers', 'base.repo.watchers', 'long'),
-            Field('BaseRepoWatchersCount', 'base.repo.watchers_count', 'long'),
-            Field('BaseSha', 'base.sha'),
-            Field('BaseUserId', 'base.user.id', 'long'),
-            Field('BaseUserLogin', 'base.user.login'),
-            Field('BaseUserSiteAdmin', 'base.user.site_admin', 'boolean'),
-            Field('BaseUserType', 'base.user.type'),
+            *embed('Assignee', 'assignee', USER),
+            *embed('Base', 'base', BRANCH),
             Field('Body', 'body'),
             Field('ChangedFiles', 'changed_files', 'long'),
             Field('ClosedAt', 'closed_at', 'timestamp'),
@@ -325,74 +394,20 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('Commits', 'commits', 'long'),
             Field('CreatedAt', 'created_at', 'timestamp'),
             Field('Deletions', 'deletions', 'long'),
-            Field('HeadLabel', 'head.label'),
-            Field('HeadRef', 'head.ref'),
-            Field('HeadRepoCreatedAt', 'head.repo.created_at', 'timestamp'),
-            Field('HeadRepoDefaultBranch', 'head.repo.default_branch'),
-            Field('HeadRepoDescription', 'head.repo.description'),
-            Field('HeadRepoFork', 'head.repo.fork', 'boolean'),
-            Field('HeadRepoForks', 'head.repo.forks', 'long'),
-            Field('HeadRepoForksCount', 'head.repo.forks_count', 'long'),
-            Field('HeadRepoFullName', 'head.repo.full_name'),
-            Field('HeadRepoHasDownloads', 'head.repo.has_downloads', 'boolean'),
-            Field('HeadRepoHasIssues', 'head.repo.has_issues', 'boolean'),
-            Field('HeadRepoHasPages', 'head.repo.has_pages', 'boolean'),
-            Field('HeadRepoHasWiki', 'head.repo.has_wiki', 'boolean'),
-            Field('HeadRepoHomepage', 'head.repo.homepage'),
-            Field('HeadRepoId', 'head.repo.id', 'long'),
-            Field('HeadRepoLanguage', 'head.repo.language'),
-            Field('HeadRepoName', 'head.repo.name'),
-            Field('HeadRepoOpenIssues', 'head.repo.open_issues', 'long'),
-            Field('HeadRepoOpenIssuesCount', 'head.repo.open_issues_count', 'long'),
-            Field('HeadRepoOwnerId', 'head.repo.owner.id', 'long'),
-            Field('HeadRepoOwnerLogin', 'head.repo.owner.login'),
-            Field('HeadRepoOwnerSiteAdmin', 'head.repo.owner.site_admin', 'boolean'),
-            Field('HeadRepoOwnerType', 'head.repo.owner.type'),
-            Field('HeadRepoPrivate', 'head.repo.private', 'boolean'),
-            Field('HeadRepoPushedAt', 'head.repo.pushed_at', 'timestamp'),
-            Field('HeadRepoSize', 'head.repo.size', 'long'),
-            Field('HeadRepoStargazersCount', 'head.repo.stargazers_count', 'long'),
-            Field('HeadRepoUpdatedAt', 'head.repo.updated_at', 'timestamp'),
-            Field('HeadRepoWatchers', 'head.repo.watchers', 'long'),
-            Field('HeadRepoWatchersCount', 'head.repo.watchers_count', 'long'),
-            Field('HeadSha', 'head.sha'),
-            Field('HeadUserId', 'head.user.id', 'long'),
-            Field('HeadUserLogin', 'head.user.login'),
-            Field('HeadUserSiteAdmin', 'head.user.site_admin', 'boolean'),
-            Field('HeadUserType', 'head.user.type'),
+            *embed('Head', 'head', BRANCH),
             Field('Locked', 'locked', 'boolean'),
             Field('MergeCommitSha', 'merge_commit_sha'),
             Field('Mergeable', 'mergeable', 'boolean'),
             Field('MergeableState', 'mergeable_state'),
             Field('Merged', 'merged', 'boolean'),
             Field('MergedAt', 'merged_at', 'timestamp'),
-            Field('MergedById', 'merged_by.id', 'long'),
-            Field('MergedByLogin', 'merged_by.login'),
-            Field('MergedBySiteAdmin', 'merged_by.site_admin', 'boolean'),
-            Field('MergedByType', 'merged_by.type'),
-            Field('MilestoneClosedAt', 'milestone.closed_at', 'timestamp'),
-            Field('MilestoneClosedIssues', 'milestone.closed_issues', 'long'),
-            Field('MilestoneCreatedAt', 'milestone.created_at', 'timestamp'),
-            Field('MilestoneCreatorId', 'milestone.creator.id', 'long'),
-            Field('MilestoneCreatorLogin', 'milestone.creator.login'),
-            Field('MilestoneCreatorSiteAdmin', 'milestone.creator.site_admin', 'boolean'),
-            Field('MilestoneCreatorType', 'milestone.creator.type'),
-            Field('MilestoneDescription', 'milestone.description'),
-            Field('MilestoneDueOn', 'milestone.due_on', 'timestamp'),
-            Field('MilestoneId', 'milestone.id', 'long'),
-            Field('MilestoneNumber', 'milestone.number', 'long'),
-            Field('MilestoneOpenIssues', 'milestone.open_issues', 'long'),
-            Field('MilestoneState', 'milestone.state'),
-            Field('MilestoneTitle', 'milestone.title'),
-            Field('MilestoneUpdatedAt', 'milestone.updated_at', 'timestamp'),
+            *embed('MergedBy', 'merged_by', USER),
+            *embed('Milestone', 'milestone', MILESTONE),
             Field('ReviewComments', 'review_comments', 'long'),
             Field('State', 'state'),
             Field('Title', 'title'),
             Field('UpdatedAt', 'updated_at', 'timestamp'),
-            Field('UserId', 'user.id', 'long'),
-            Field('UserLogin', 'user.login'),
-            Field('UserSiteAdmin', 'user.site_admin', 'boolean'),
-            Field('UserType', 'user.type'),
+            *embed('User', 'user', USER),
             Field('UserUrn', '_metadata.links.user.href'),
             Field('MergedByUrn', '_metadata.links.merged_by.href'),
             Field('AssigneeUrn', '_metadata.links.assignee.href'),
@@ -413,28 +428,7 @@ CATALOG: tuple[EntitySpec, ...] = (
         fields=(
             Field('RepoUrn', '_metadata.links.repo.href'),
             Field('PullRequestUrn', '_metadata.links.pull_request.href'),
-            Field('CommitSha', 'sha'),
-            Field('Url', 'url'),
-            Field('AuthorId', 'author.id', 'long'),
-            Field('AuthorLogin', 'author.login'),
-            Field('AuthorSiteAdmin', 'author.site_admin', 'boolean'),
-            Field('AuthorType', 'author.type'),
-            Field('CommitAuthorDate', 'commit.author.date', 'timestamp'),
-            Field('CommitAuthorEmail', 'commit.author.email', 'pii'),
-            Field('CommitAuthorName', 'commit.author.name', 'pii'),
-            Field('CommitCommentCount', 'commit.comment_count', 'long'),
-            Field('CommitCommitterDate', 'commit.committer.date', 'timestamp'),
-            Field('CommitCommitterEmail', 'commit.committer.email', 'pii'),
-            Field('CommitCommitterName', 'commit.committer.name', 'pii'),
-            Field('CommitMessage', 'commit.message'),
-            Field('CommitTreeSha', 'commit.tree.sha'),
-            Field('CommitterId', 'committer.id', 'long'),
-            Field('CommitterLogin', 'committer.login'),
-            Field('CommitterSiteAdmin', 'committer.site_admin', 'boolean'),
-            Field('CommitterType', 'committer.type'),
-            Field('StatsAdditions', 'stats.additions', 'long'),
-            Field('StatsDeletions', 'stats.deletions', 'long'),
-            Field('StatsTotal', 'stats.total', 'long'),
+            *COMMIT,
             Field('CommitCommentsUrn', '_metadata.links.pull_request_commit_comments.href'),
             Field('AuthorUrn', '_metadata.links.author.href'),
             Field('CommitterUrn', '_metadata.links.committer.href'),
@@ -457,10 +451,7 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('Path', 'path'),
             Field('Position', 'position', 'long'),
             Field('UpdatedAt', 'updated_at', 'timestamp'),
-            Field('UserId', 'user.id', 'long'),
-            Field('UserLogin', 'user.login'),
-            Field('UserSiteAdmin', 'user.site_admin', 'boolean'),
-            Field('UserType', 'user.type'),
+            *embed('User', 'user', USER),
             Field('UserUrn', '_metadata.links.user.href'),
             Field('SchemaVersion', '_metadata.version', 'long'),
         ),
@@ -485,10 +476,7 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('Path', 'path'),
             Field('Position', 'position', 'long'),
             Field('UpdatedAt', 'updated_at', 'timestamp'),
-            Field('UserId', 'user.id', 'long'),
-            Field('UserLogin', 'user.login'),
-            Field('UserSiteAdmin', 'user.site_admin', 'boolean'),
-            Field('UserType', 'user.type'),
+            *embed('User', 'user', USER),
             Field('PullRequestUrn', '_metadata.links.pull_request.href'),
             Field('UserUrn', '_metadata.links.user.href'),
             Field('SchemaVersion', '_metadata.version', 'long'),
@@ -499,110 +487,7 @@ CATALOG: tuple[EntitySpec, ...] = (
         pattern='A',
         entity_filter="entity_name = 'repo'",
         ref="/root/reference/USQL/ProcessDaily.usql:2506-2745",
-        fields=(
-            Field('OwnerUrn', '_metadata.links.owner.href'),
-            Field('SiblingsUrn', '_metadata.links.siblings.href'),
-            Field('Name', 'name'),
-            Field('RepoId', 'id', 'long'),
-            Field('OwnerLogin', 'owner.login'),
-            Field('CreatedAt', 'created_at', 'timestamp'),
-            Field('DefaultBranch', 'default_branch'),
-            Field('Description', 'description'),
-            Field('Fork', 'fork', 'boolean'),
-            Field('Forks', 'forks', 'long'),
-            Field('ForksCount', 'forks_count', 'long'),
-            Field('FullName', 'full_name'),
-            Field('HasDownloads', 'has_downloads', 'boolean'),
-            Field('HasIssues', 'has_issues', 'boolean'),
-            Field('HasPages', 'has_pages', 'boolean'),
-            Field('HasWiki', 'has_wiki', 'boolean'),
-            Field('Homepage', 'homepage'),
-            Field('Language', 'language'),
-            Field('NetworkCount', 'network_count', 'long'),
-            Field('OpenIssues', 'open_issues', 'long'),
-            Field('OpenIssuesCount', 'open_issues_count', 'long'),
-            Field('OrganizationId', 'organization.id', 'long'),
-            Field('OrganizationLogin', 'organization.login'),
-            Field('OrganizationSiteAdmin', 'organization.site_admin', 'boolean'),
-            Field('OrganizationType', 'organization.type'),
-            Field('OwnerId', 'owner.id', 'long'),
-            Field('OwnerSiteAdmin', 'owner.site_admin', 'boolean'),
-            Field('OwnerType', 'owner.type'),
-            Field('ParentCreatedAt', 'parent.created_at', 'timestamp'),
-            Field('ParentDefaultBranch', 'parent.default_branch'),
-            Field('ParentDescription', 'parent.description'),
-            Field('ParentFork', 'parent.fork', 'boolean'),
-            Field('ParentForks', 'parent.forks', 'long'),
-            Field('ParentForksCount', 'parent.forks_count', 'long'),
-            Field('ParentFullName', 'parent.full_name'),
-            Field('ParentHasDownloads', 'parent.has_downloads', 'boolean'),
-            Field('ParentHasIssues', 'parent.has_issues', 'boolean'),
-            Field('ParentHasPages', 'parent.has_pages', 'boolean'),
-            Field('ParentHasWiki', 'parent.has_wiki', 'boolean'),
-            Field('ParentHomepage', 'parent.homepage'),
-            Field('ParentId', 'parent.id', 'long'),
-            Field('ParentLanguage', 'parent.language'),
-            Field('ParentName', 'parent.name'),
-            Field('ParentOpenIssues', 'parent.open_issues', 'long'),
-            Field('ParentOpenIssuesCount', 'parent.open_issues_count', 'long'),
-            Field('ParentOwnerId', 'parent.owner.id', 'long'),
-            Field('ParentOwnerLogin', 'parent.owner.login'),
-            Field('ParentOwnerSiteAdmin', 'parent.owner.site_admin', 'boolean'),
-            Field('ParentOwnerType', 'parent.owner.type'),
-            Field('ParentPrivate', 'parent.private', 'boolean'),
-            Field('ParentPushedAt', 'parent.pushed_at', 'timestamp'),
-            Field('ParentSize', 'parent.size', 'long'),
-            Field('ParentStargazersCount', 'parent.stargazers_count', 'long'),
-            Field('ParentUpdatedAt', 'parent.updated_at', 'timestamp'),
-            Field('ParentWatchers', 'parent.watchers', 'long'),
-            Field('ParentWatchersCount', 'parent.watchers_count', 'long'),
-            Field('PermissionsAdmin', 'permissions.admin', 'boolean'),
-            Field('PermissionsPull', 'permissions.pull', 'boolean'),
-            Field('PermissionsPush', 'permissions.push', 'boolean'),
-            Field('IsPrivate', 'private', 'boolean'),
-            Field('PushedAt', 'pushed_at', 'timestamp'),
-            Field('Size', 'size', 'long'),
-            Field('SourceCreatedAt', 'source.created_at', 'timestamp'),
-            Field('SourceDefaultBranch', 'source.default_branch'),
-            Field('SourceDescription', 'source.description'),
-            Field('SourceFork', 'source.fork', 'boolean'),
-            Field('SourceForks', 'source.forks', 'long'),
-            Field('SourceForksCount', 'source.forks_count', 'long'),
-            Field('SourceFullName', 'source.full_name'),
-            Field('SourceHasDownloads', 'source.has_downloads', 'boolean'),
-            Field('SourceHasIssues', 'source.has_issues', 'boolean'),
-            Field('SourceHasPages', 'source.has_pages', 'boolean'),
-            Field('SourceHasWiki', 'source.has_wiki', 'boolean'),
-            Field('SourceHomepage', 'source.homepage'),
-            Field('SourceId', 'source.id', 'long'),
-            Field('SourceLanguage', 'source.language'),
-            Field('SourceName', 'source.name'),
-            Field('SourceOpenIssues', 'source.open_issues', 'long'),
-            Field('SourceOpenIssuesCount', 'source.open_issues_count', 'long'),
-            Field('SourceOwnerId', 'source.owner.id', 'long'),
-            Field('SourceOwnerLogin', 'source.owner.login'),
-            Field('SourceOwnerSiteAdmin', 'source.owner.site_admin', 'boolean'),
-            Field('SourceOwnerType', 'source.owner.type'),
-            Field('SourcePrivate', 'source.private', 'boolean'),
-            Field('SourcePushedAt', 'source.pushed_at', 'timestamp'),
-            Field('SourceSize', 'source.size', 'long'),
-            Field('SourceStargazersCount', 'source.stargazers_count', 'long'),
-            Field('SourceUpdatedAt', 'source.updated_at', 'timestamp'),
-            Field('SourceWatchers', 'source.watchers', 'long'),
-            Field('SourceWatchersCount', 'source.watchers_count', 'long'),
-            Field('StargazersCount', 'stargazers_count', 'long'),
-            Field('SubscribersCount', 'subscribers_count', 'long'),
-            Field('UpdatedAt', 'updated_at', 'timestamp'),
-            Field('Watchers', 'watchers', 'long'),
-            Field('WatchersCount', 'watchers_count', 'long'),
-            Field('TeamsPageUrn', '_metadata.links.teams.href'),
-            Field('CollaboratorsPageUrn', '_metadata.links.collaborators.href'),
-            Field('ContributorsPageUrn', '_metadata.links.contributors.href'),
-            Field('SubscribersPageUrn', '_metadata.links.subscribers.href'),
-            Field('IssuesUrn', '_metadata.links.issues.href'),
-            Field('CommitsUrn', '_metadata.links.commits.href'),
-            Field('SchemaVersion', '_metadata.version', 'long'),
-        ),
+        fields=REPO_FIELDS,
     ),
     EntitySpec(
         table='Team',
@@ -684,10 +569,7 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('PayloadCommentPath', 'payload.comment.path'),
             Field('PayloadCommentPosition', 'payload.comment.position', 'long'),
             Field('PayloadCommentUpdatedAt', 'payload.comment.updated_at', 'timestamp'),
-            Field('PayloadCommentUserId', 'payload.comment.user.id', 'long'),
-            Field('PayloadCommentUserLogin', 'payload.comment.user.login'),
-            Field('PayloadCommentUserSiteAdmin', 'payload.comment.user.site_admin', 'boolean'),
-            Field('PayloadCommentUserType', 'payload.comment.user.type'),
+            *embed('PayloadCommentUser', 'payload.comment.user', USER),
             Field('PayloadDescription', 'payload.description'),
             Field('PayloadDistinctSize', 'payload.distinct_size', 'long'),
             Field('PayloadForkeeCreatedAt', 'payload.forkee.created_at', 'timestamp'),
@@ -707,10 +589,7 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('PayloadForkeeName', 'payload.forkee.name'),
             Field('PayloadForkeeOpenIssues', 'payload.forkee.open_issues', 'long'),
             Field('PayloadForkeeOpenIssuesCount', 'payload.forkee.open_issues_count', 'long'),
-            Field('PayloadForkeeOwnerId', 'payload.forkee.owner.id', 'long'),
-            Field('PayloadForkeeOwnerLogin', 'payload.forkee.owner.login'),
-            Field('PayloadForkeeOwnerSiteAdmin', 'payload.forkee.owner.site_admin', 'boolean'),
-            Field('PayloadForkeeOwnerType', 'payload.forkee.owner.type'),
+            *embed('PayloadForkeeOwner', 'payload.forkee.owner', USER),
             Field('PayloadForkeePrivate', 'payload.forkee.private', 'boolean'),
             Field('PayloadForkeePublic', 'payload.forkee.public', 'boolean'),
             Field('PayloadForkeePushedAt', 'payload.forkee.pushed_at', 'timestamp'),
@@ -720,53 +599,27 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('PayloadForkeeWatchers', 'payload.forkee.watchers', 'long'),
             Field('PayloadForkeeWatchersCount', 'payload.forkee.watchers_count', 'long'),
             Field('PayloadHead', 'payload.head'),
-            Field('PayloadIssueAssigneeId', 'payload.issue.assignee.id', 'long'),
-            Field('PayloadIssueAssigneeLogin', 'payload.issue.assignee.login'),
-            Field('PayloadIssueAssigneeSiteAdmin', 'payload.issue.assignee.site_admin', 'boolean'),
-            Field('PayloadIssueAssigneeType', 'payload.issue.assignee.type'),
+            *embed('PayloadIssueAssignee', 'payload.issue.assignee', USER),
             Field('PayloadIssueBody', 'payload.issue.body'),
             Field('PayloadIssueClosedAt', 'payload.issue.closed_at', 'timestamp'),
             Field('PayloadIssueComments', 'payload.issue.comments', 'long'),
             Field('PayloadIssueCreatedAt', 'payload.issue.created_at', 'timestamp'),
             Field('PayloadIssueId', 'payload.issue.id', 'long'),
             Field('PayloadIssueLocked', 'payload.issue.locked', 'boolean'),
-            Field('PayloadIssueMilestoneClosedAt', 'payload.issue.milestone.closed_at', 'timestamp'),
-            Field('PayloadIssueMilestoneClosedIssues', 'payload.issue.milestone.closed_issues', 'long'),
-            Field('PayloadIssueMilestoneCreatedAt', 'payload.issue.milestone.created_at', 'timestamp'),
-            Field('PayloadIssueMilestoneCreatorId', 'payload.issue.milestone.creator.id', 'long'),
-            Field('PayloadIssueMilestoneCreatorLogin', 'payload.issue.milestone.creator.login'),
-            Field('PayloadIssueMilestoneCreatorSiteAdmin', 'payload.issue.milestone.creator.site_admin', 'boolean'),
-            Field('PayloadIssueMilestoneCreatorType', 'payload.issue.milestone.creator.type'),
-            Field('PayloadIssueMilestoneDescription', 'payload.issue.milestone.description'),
-            Field('PayloadIssueMilestoneDueOn', 'payload.issue.milestone.due_on', 'timestamp'),
-            Field('PayloadIssueMilestoneId', 'payload.issue.milestone.id', 'long'),
-            Field('PayloadIssueMilestoneNumber', 'payload.issue.milestone.number', 'long'),
-            Field('PayloadIssueMilestoneOpenIssues', 'payload.issue.milestone.open_issues', 'long'),
-            Field('PayloadIssueMilestoneState', 'payload.issue.milestone.state'),
-            Field('PayloadIssueMilestoneTitle', 'payload.issue.milestone.title'),
-            Field('PayloadIssueMilestoneUpdatedAt', 'payload.issue.milestone.updated_at', 'timestamp'),
+            *embed('PayloadIssueMilestone', 'payload.issue.milestone', MILESTONE),
             Field('PayloadIssueNumber', 'payload.issue.number', 'long'),
             Field('PayloadIssueState', 'payload.issue.state'),
             Field('PayloadIssueTitle', 'payload.issue.title'),
             Field('PayloadIssueUpdatedAt', 'payload.issue.updated_at', 'timestamp'),
-            Field('PayloadIssueUserId', 'payload.issue.user.id', 'long'),
-            Field('PayloadIssueUserLogin', 'payload.issue.user.login'),
-            Field('PayloadIssueUserSiteAdmin', 'payload.issue.user.site_admin', 'boolean'),
-            Field('PayloadIssueUserType', 'payload.issue.user.type'),
+            *embed('PayloadIssueUser', 'payload.issue.user', USER),
             Field('PayloadMasterBranch', 'payload.master_branch'),
-            Field('PayloadMemberId', 'payload.member.id', 'long'),
-            Field('PayloadMemberLogin', 'payload.member.login'),
-            Field('PayloadMemberSiteAdmin', 'payload.member.site_admin', 'boolean'),
-            Field('PayloadMemberType', 'payload.member.type'),
+            *embed('PayloadMember', 'payload.member', USER),
             Field('PayloadNumber', 'payload.number', 'long'),
             Field('PayloadPushId', 'payload.push_id', 'long'),
             Field('PayloadPusherType', 'payload.pusher_type'),
             Field('PayloadRef', 'payload.ref'),
             Field('PayloadRefType', 'payload.ref_type'),
-            Field('PayloadReleaseAuthorId', 'payload.release.author.id', 'long'),
-            Field('PayloadReleaseAuthorLogin', 'payload.release.author.login'),
-            Field('PayloadReleaseAuthorSiteAdmin', 'payload.release.author.site_admin', 'boolean'),
-            Field('PayloadReleaseAuthorType', 'payload.release.author.type'),
+            *embed('PayloadReleaseAuthor', 'payload.release.author', USER),
             Field('PayloadReleaseBody', 'payload.release.body'),
             Field('PayloadReleaseCreatedAt', 'payload.release.created_at', 'timestamp'),
             Field('PayloadReleaseDraft', 'payload.release.draft', 'boolean'),
@@ -799,45 +652,8 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('EventUrn', '_metadata.links.self.href'),
             Field('EventPayloadPullRequestId', 'payload.pull_request.id', 'long'),
             Field('Additions', 'payload.pull_request.additions', 'long'),
-            Field('AssigneeId', 'payload.pull_request.assignee.id', 'long'),
-            Field('AssigneeLogin', 'payload.pull_request.assignee.login'),
-            Field('AssigneeSiteAdmin', 'payload.pull_request.assignee.site_admin', 'boolean'),
-            Field('AssigneeType', 'payload.pull_request.assignee.type'),
-            Field('BaseLabel', 'payload.pull_request.base.label'),
-            Field('BaseRef', 'payload.pull_request.base.ref'),
-            Field('BaseRepoCreatedAt', 'payload.pull_request.base.repo.created_at', 'timestamp'),
-            Field('BaseRepoDefaultBranch', 'payload.pull_request.base.repo.default_branch'),
-            Field('BaseRepoDescription', 'payload.pull_request.base.repo.description'),
-            Field('BaseRepoFork', 'payload.pull_request.base.repo.fork', 'boolean'),
-            Field('BaseRepoForks', 'payload.pull_request.base.repo.forks', 'long'),
-            Field('BaseRepoForksCount', 'payload.pull_request.base.repo.forks_count', 'long'),
-            Field('BaseRepoFullName', 'payload.pull_request.base.repo.full_name'),
-            Field('BaseRepoHasDownloads', 'payload.pull_request.base.repo.has_downloads', 'boolean'),
-            Field('BaseRepoHasIssues', 'payload.pull_request.base.repo.has_issues', 'boolean'),
-            Field('BaseRepoHasPages', 'payload.pull_request.base.repo.has_pages', 'boolean'),
-            Field('BaseRepoHasWiki', 'payload.pull_request.base.repo.has_wiki', 'boolean'),
-            Field('BaseRepoHomepage', 'payload.pull_request.base.repo.homepage'),
-            Field('BaseRepoId', 'payload.pull_request.base.repo.id', 'long'),
-            Field('BaseRepoLanguage', 'payload.pull_request.base.repo.language'),
-            Field('BaseRepoName', 'payload.pull_request.base.repo.name'),
-            Field('BaseRepoOpenIssues', 'payload.pull_request.base.repo.open_issues', 'long'),
-            Field('BaseRepoOpenIssuesCount', 'payload.pull_request.base.repo.open_issues_count', 'long'),
-            Field('BaseRepoOwnerId', 'payload.pull_request.base.repo.owner.id', 'long'),
-            Field('BaseRepoOwnerLogin', 'payload.pull_request.base.repo.owner.login'),
-            Field('BaseRepoOwnerSiteAdmin', 'payload.pull_request.base.repo.owner.site_admin', 'boolean'),
-            Field('BaseRepoOwnerType', 'payload.pull_request.base.repo.owner.type'),
-            Field('BaseRepoPrivate', 'payload.pull_request.base.repo.private', 'boolean'),
-            Field('BaseRepoPushedAt', 'payload.pull_request.base.repo.pushed_at', 'timestamp'),
-            Field('BaseRepoSize', 'payload.pull_request.base.repo.size', 'long'),
-            Field('BaseRepoStargazersCount', 'payload.pull_request.base.repo.stargazers_count', 'long'),
-            Field('BaseRepoUpdatedAt', 'payload.pull_request.base.repo.updated_at', 'timestamp'),
-            Field('BaseRepoWatchers', 'payload.pull_request.base.repo.watchers', 'long'),
-            Field('BaseRepoWatchersCount', 'payload.pull_request.base.repo.watchers_count', 'long'),
-            Field('BaseSha', 'payload.pull_request.base.sha'),
-            Field('BaseUserId', 'payload.pull_request.base.user.id', 'long'),
-            Field('BaseUserLogin', 'payload.pull_request.base.user.login'),
-            Field('BaseUserSiteAdmin', 'payload.pull_request.base.user.site_admin', 'boolean'),
-            Field('BaseUserType', 'payload.pull_request.base.user.type'),
+            *embed('Assignee', 'payload.pull_request.assignee', USER),
+            *embed('Base', 'payload.pull_request.base', BRANCH),
             Field('Body', 'payload.pull_request.body'),
             Field('ChangedFiles', 'payload.pull_request.changed_files', 'long'),
             Field('ClosedAt', 'payload.pull_request.closed_at', 'timestamp'),
@@ -845,75 +661,21 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('Commits', 'payload.pull_request.commits', 'long'),
             Field('CreatedAt', 'payload.pull_request.created_at', 'timestamp'),
             Field('Deletions', 'payload.pull_request.deletions', 'long'),
-            Field('HeadLabel', 'payload.pull_request.head.label'),
-            Field('HeadRef', 'payload.pull_request.head.ref'),
-            Field('HeadRepoCreatedAt', 'payload.pull_request.head.repo.created_at', 'timestamp'),
-            Field('HeadRepoDefaultBranch', 'payload.pull_request.head.repo.default_branch'),
-            Field('HeadRepoDescription', 'payload.pull_request.head.repo.description'),
-            Field('HeadRepoFork', 'payload.pull_request.head.repo.fork', 'boolean'),
-            Field('HeadRepoForks', 'payload.pull_request.head.repo.forks', 'long'),
-            Field('HeadRepoForksCount', 'payload.pull_request.head.repo.forks_count', 'long'),
-            Field('HeadRepoFullName', 'payload.pull_request.head.repo.full_name'),
-            Field('HeadRepoHasDownloads', 'payload.pull_request.head.repo.has_downloads', 'boolean'),
-            Field('HeadRepoHasIssues', 'payload.pull_request.head.repo.has_issues', 'boolean'),
-            Field('HeadRepoHasPages', 'payload.pull_request.head.repo.has_pages', 'boolean'),
-            Field('HeadRepoHasWiki', 'payload.pull_request.head.repo.has_wiki', 'boolean'),
-            Field('HeadRepoHomepage', 'payload.pull_request.head.repo.homepage'),
-            Field('HeadRepoId', 'payload.pull_request.head.repo.id', 'long'),
-            Field('HeadRepoLanguage', 'payload.pull_request.head.repo.language'),
-            Field('HeadRepoName', 'payload.pull_request.head.repo.name'),
-            Field('HeadRepoOpenIssues', 'payload.pull_request.head.repo.open_issues', 'long'),
-            Field('HeadRepoOpenIssuesCount', 'payload.pull_request.head.repo.open_issues_count', 'long'),
-            Field('HeadRepoOwnerId', 'payload.pull_request.head.repo.owner.id', 'long'),
-            Field('HeadRepoOwnerLogin', 'payload.pull_request.head.repo.owner.login'),
-            Field('HeadRepoOwnerSiteAdmin', 'payload.pull_request.head.repo.owner.site_admin', 'boolean'),
-            Field('HeadRepoOwnerType', 'payload.pull_request.head.repo.owner.type'),
-            Field('HeadRepoPrivate', 'payload.pull_request.head.repo.private', 'boolean'),
-            Field('HeadRepoPushedAt', 'payload.pull_request.head.repo.pushed_at', 'timestamp'),
-            Field('HeadRepoSize', 'payload.pull_request.head.repo.size', 'long'),
-            Field('HeadRepoStargazersCount', 'payload.pull_request.head.repo.stargazers_count', 'long'),
-            Field('HeadRepoUpdatedAt', 'payload.pull_request.head.repo.updated_at', 'timestamp'),
-            Field('HeadRepoWatchers', 'payload.pull_request.head.repo.watchers', 'long'),
-            Field('HeadRepoWatchersCount', 'payload.pull_request.head.repo.watchers_count', 'long'),
-            Field('HeadSha', 'payload.pull_request.head.sha'),
-            Field('HeadUserId', 'payload.pull_request.head.user.id', 'long'),
-            Field('HeadUserLogin', 'payload.pull_request.head.user.login'),
-            Field('HeadUserSiteAdmin', 'payload.pull_request.head.user.site_admin', 'boolean'),
-            Field('HeadUserType', 'payload.pull_request.head.user.type'),
+            *embed('Head', 'payload.pull_request.head', BRANCH),
             Field('Locked', 'payload.pull_request.locked', 'boolean'),
             Field('MergeCommitSha', 'payload.pull_request.merge_commit_sha'),
             Field('Mergeable', 'payload.pull_request.mergeable', 'boolean'),
             Field('MergeableState', 'payload.pull_request.mergeable_state'),
             Field('Merged', 'payload.pull_request.merged', 'boolean'),
             Field('MergedAt', 'payload.pull_request.merged_at', 'timestamp'),
-            Field('MergedById', 'payload.pull_request.merged_by.id', 'long'),
-            Field('MergedByLogin', 'payload.pull_request.merged_by.login'),
-            Field('MergedBySiteAdmin', 'payload.pull_request.merged_by.site_admin', 'boolean'),
-            Field('MergedByType', 'payload.pull_request.merged_by.type'),
-            Field('MilestoneClosedAt', 'payload.pull_request.milestone.closed_at', 'timestamp'),
-            Field('MilestoneClosedIssues', 'payload.pull_request.milestone.closed_issues', 'long'),
-            Field('MilestoneCreatedAt', 'payload.pull_request.milestone.created_at', 'timestamp'),
-            Field('MilestoneCreatorId', 'payload.pull_request.milestone.creator.id', 'long'),
-            Field('MilestoneCreatorLogin', 'payload.pull_request.milestone.creator.login'),
-            Field('MilestoneCreatorSiteAdmin', 'payload.pull_request.milestone.creator.site_admin', 'boolean'),
-            Field('MilestoneCreatorType', 'payload.pull_request.milestone.creator.type'),
-            Field('MilestoneDescription', 'payload.pull_request.milestone.description'),
-            Field('MilestoneDueOn', 'payload.pull_request.milestone.due_on', 'timestamp'),
-            Field('MilestoneId', 'payload.pull_request.milestone.id', 'long'),
-            Field('MilestoneNumber', 'payload.pull_request.milestone.number', 'long'),
-            Field('MilestoneOpenIssues', 'payload.pull_request.milestone.open_issues', 'long'),
-            Field('MilestoneState', 'payload.pull_request.milestone.state'),
-            Field('MilestoneTitle', 'payload.pull_request.milestone.title'),
-            Field('MilestoneUpdatedAt', 'payload.pull_request.milestone.updated_at', 'timestamp'),
+            *embed('MergedBy', 'payload.pull_request.merged_by', USER),
+            *embed('Milestone', 'payload.pull_request.milestone', MILESTONE),
             Field('Number', 'payload.pull_request.number', 'long'),
             Field('ReviewComments', 'payload.pull_request.review_comments', 'long'),
             Field('State', 'payload.pull_request.state'),
             Field('Title', 'payload.pull_request.title'),
             Field('UpdatedAt', 'payload.pull_request.updated_at', 'timestamp'),
-            Field('UserId', 'payload.pull_request.user.id', 'long'),
-            Field('UserLogin', 'payload.pull_request.user.login'),
-            Field('UserSiteAdmin', 'payload.pull_request.user.site_admin', 'boolean'),
-            Field('UserType', 'payload.pull_request.user.type'),
+            *embed('User', 'payload.pull_request.user', USER),
             Field('SchemaVersion', '_metadata.version', 'long'),
         ),
     ),
@@ -1033,10 +795,7 @@ CATALOG: tuple[EntitySpec, ...] = (
             Field('Size', 'size', 'long'),
             Field('State', 'state'),
             Field('UpdatedAt', 'updated_at', 'timestamp'),
-            Field('UploaderId', 'uploader.id', 'long'),
-            Field('UploaderLogin', 'uploader.login'),
-            Field('UploaderSiteAdmin', 'uploader.site_admin', 'boolean'),
-            Field('UploaderType', 'uploader.type'),
+            *embed('Uploader', 'uploader', USER),
         ),
     ),
     EntitySpec(
@@ -1227,110 +986,7 @@ CATALOG: tuple[EntitySpec, ...] = (
         entity_filter="entity_name = 'repo'",
         key=('EtlSourceId', 'UpdatedAt'),
         ref="/root/reference/USQL/ProcessDaily.usql:2747-2859",
-        fields=(
-            Field('OwnerUrn', '_metadata.links.owner.href'),
-            Field('SiblingsUrn', '_metadata.links.siblings.href'),
-            Field('Name', 'name'),
-            Field('RepoId', 'id', 'long'),
-            Field('OwnerLogin', 'owner.login'),
-            Field('CreatedAt', 'created_at', 'timestamp'),
-            Field('DefaultBranch', 'default_branch'),
-            Field('Description', 'description'),
-            Field('Fork', 'fork', 'boolean'),
-            Field('Forks', 'forks', 'long'),
-            Field('ForksCount', 'forks_count', 'long'),
-            Field('FullName', 'full_name'),
-            Field('HasDownloads', 'has_downloads', 'boolean'),
-            Field('HasIssues', 'has_issues', 'boolean'),
-            Field('HasPages', 'has_pages', 'boolean'),
-            Field('HasWiki', 'has_wiki', 'boolean'),
-            Field('Homepage', 'homepage'),
-            Field('Language', 'language'),
-            Field('NetworkCount', 'network_count', 'long'),
-            Field('OpenIssues', 'open_issues', 'long'),
-            Field('OpenIssuesCount', 'open_issues_count', 'long'),
-            Field('OrganizationId', 'organization.id', 'long'),
-            Field('OrganizationLogin', 'organization.login'),
-            Field('OrganizationSiteAdmin', 'organization.site_admin', 'boolean'),
-            Field('OrganizationType', 'organization.type'),
-            Field('OwnerId', 'owner.id', 'long'),
-            Field('OwnerSiteAdmin', 'owner.site_admin', 'boolean'),
-            Field('OwnerType', 'owner.type'),
-            Field('ParentCreatedAt', 'parent.created_at', 'timestamp'),
-            Field('ParentDefaultBranch', 'parent.default_branch'),
-            Field('ParentDescription', 'parent.description'),
-            Field('ParentFork', 'parent.fork', 'boolean'),
-            Field('ParentForks', 'parent.forks', 'long'),
-            Field('ParentForksCount', 'parent.forks_count', 'long'),
-            Field('ParentFullName', 'parent.full_name'),
-            Field('ParentHasDownloads', 'parent.has_downloads', 'boolean'),
-            Field('ParentHasIssues', 'parent.has_issues', 'boolean'),
-            Field('ParentHasPages', 'parent.has_pages', 'boolean'),
-            Field('ParentHasWiki', 'parent.has_wiki', 'boolean'),
-            Field('ParentHomepage', 'parent.homepage'),
-            Field('ParentId', 'parent.id', 'long'),
-            Field('ParentLanguage', 'parent.language'),
-            Field('ParentName', 'parent.name'),
-            Field('ParentOpenIssues', 'parent.open_issues', 'long'),
-            Field('ParentOpenIssuesCount', 'parent.open_issues_count', 'long'),
-            Field('ParentOwnerId', 'parent.owner.id', 'long'),
-            Field('ParentOwnerLogin', 'parent.owner.login'),
-            Field('ParentOwnerSiteAdmin', 'parent.owner.site_admin', 'boolean'),
-            Field('ParentOwnerType', 'parent.owner.type'),
-            Field('ParentPrivate', 'parent.private', 'boolean'),
-            Field('ParentPushedAt', 'parent.pushed_at', 'timestamp'),
-            Field('ParentSize', 'parent.size', 'long'),
-            Field('ParentStargazersCount', 'parent.stargazers_count', 'long'),
-            Field('ParentUpdatedAt', 'parent.updated_at', 'timestamp'),
-            Field('ParentWatchers', 'parent.watchers', 'long'),
-            Field('ParentWatchersCount', 'parent.watchers_count', 'long'),
-            Field('PermissionsAdmin', 'permissions.admin', 'boolean'),
-            Field('PermissionsPull', 'permissions.pull', 'boolean'),
-            Field('PermissionsPush', 'permissions.push', 'boolean'),
-            Field('IsPrivate', 'private', 'boolean'),
-            Field('PushedAt', 'pushed_at', 'timestamp'),
-            Field('Size', 'size', 'long'),
-            Field('SourceCreatedAt', 'source.created_at', 'timestamp'),
-            Field('SourceDefaultBranch', 'source.default_branch'),
-            Field('SourceDescription', 'source.description'),
-            Field('SourceFork', 'source.fork', 'boolean'),
-            Field('SourceForks', 'source.forks', 'long'),
-            Field('SourceForksCount', 'source.forks_count', 'long'),
-            Field('SourceFullName', 'source.full_name'),
-            Field('SourceHasDownloads', 'source.has_downloads', 'boolean'),
-            Field('SourceHasIssues', 'source.has_issues', 'boolean'),
-            Field('SourceHasPages', 'source.has_pages', 'boolean'),
-            Field('SourceHasWiki', 'source.has_wiki', 'boolean'),
-            Field('SourceHomepage', 'source.homepage'),
-            Field('SourceId', 'source.id', 'long'),
-            Field('SourceLanguage', 'source.language'),
-            Field('SourceName', 'source.name'),
-            Field('SourceOpenIssues', 'source.open_issues', 'long'),
-            Field('SourceOpenIssuesCount', 'source.open_issues_count', 'long'),
-            Field('SourceOwnerId', 'source.owner.id', 'long'),
-            Field('SourceOwnerLogin', 'source.owner.login'),
-            Field('SourceOwnerSiteAdmin', 'source.owner.site_admin', 'boolean'),
-            Field('SourceOwnerType', 'source.owner.type'),
-            Field('SourcePrivate', 'source.private', 'boolean'),
-            Field('SourcePushedAt', 'source.pushed_at', 'timestamp'),
-            Field('SourceSize', 'source.size', 'long'),
-            Field('SourceStargazersCount', 'source.stargazers_count', 'long'),
-            Field('SourceUpdatedAt', 'source.updated_at', 'timestamp'),
-            Field('SourceWatchers', 'source.watchers', 'long'),
-            Field('SourceWatchersCount', 'source.watchers_count', 'long'),
-            Field('StargazersCount', 'stargazers_count', 'long'),
-            Field('SubscribersCount', 'subscribers_count', 'long'),
-            Field('UpdatedAt', 'updated_at', 'timestamp'),
-            Field('Watchers', 'watchers', 'long'),
-            Field('WatchersCount', 'watchers_count', 'long'),
-            Field('TeamsPageUrn', '_metadata.links.teams.href'),
-            Field('CollaboratorsPageUrn', '_metadata.links.collaborators.href'),
-            Field('ContributorsPageUrn', '_metadata.links.contributors.href'),
-            Field('SubscribersPageUrn', '_metadata.links.subscribers.href'),
-            Field('IssuesUrn', '_metadata.links.issues.href'),
-            Field('CommitsUrn', '_metadata.links.commits.href'),
-            Field('SchemaVersion', '_metadata.version', 'long'),
-        ),
+        fields=REPO_FIELDS,
     ),
 )
 

@@ -7,10 +7,12 @@ Architecture: staging stores the RAW document string plus a typed
 envelope, exactly mirroring the reference's design where staging keeps
 raw bytes (the path->bytes map, /root/reference/USQL/CreateGitHubDataTable.usql:22)
 and typed extraction happens later in ProcessDaily. Keeping `data_raw`
-opaque makes the staging schema FIXED - seven scalar columns - so the
+opaque makes the staging schema FIXED - eight scalar columns - so the
 table is readable across arbitrarily many crawl days regardless of how
 document shapes drift (storing an inferred struct instead breaks the
-table the first time two days disagree on a field's type).
+table the first time two days disagree on a field's type). That schema
+is declared once, as ``STAGING_SCHEMA``; ``read_staging`` reads with it,
+so a day's read costs no Spark job to infer it from the parquet footers.
 
 - Envelope extraction is ONE ``from_json`` against a minimal metadata
   schema (JSON parsers skip unknown fields) - JVM-side, no Python.
@@ -39,20 +41,24 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql import types as T
 
 # Fixed staging schema (SURVEY.md 1.1 / FIXTURES.md section 1), mirroring
 # Staging.GHCrawler.GitHubData (/root/reference/USQL/CreateGitHubDataTable.usql:15-27).
-STAGING_ENVELOPE = [
-    "entity_name",  # _metadata.type            (EntityName)
-    "ingest_date",  # partition key             (IngestDate)
-    "fetched_at",  # _metadata.fetchedAt        (FetchedAt)
-    "processed_at",  # _metadata.processedAt    (ProcessedAt)
-    "deleted_at",  # _metadata.deletedAt        (DeletedAt)
-    "urn",  # _metadata.links.self.href         (Urn)
-    "source_file",  # extract virtual column    (FileName)
-    "data_raw",  # the raw document              (Data, kept opaque)
-]
+# ``ingest_date`` is the partition column: a date, as partition inference
+# types it, and last, where a partitioned read puts it. A streaming sink's
+# output reads in the declared order, so both reads return one order.
+STAGING_SCHEMA = T.StructType([
+    T.StructField("entity_name", T.StringType()),  # _metadata.type (EntityName)
+    T.StructField("fetched_at", T.TimestampType()),  # _metadata.fetchedAt (FetchedAt)
+    T.StructField("processed_at", T.TimestampType()),  # _metadata.processedAt (ProcessedAt)
+    T.StructField("deleted_at", T.TimestampType()),  # _metadata.deletedAt (DeletedAt)
+    T.StructField("urn", T.StringType()),  # _metadata.links.self.href (Urn)
+    T.StructField("source_file", T.StringType()),  # extract virtual column (FileName)
+    T.StructField("data_raw", T.StringType()),  # the raw document (Data, kept opaque)
+    T.StructField("ingest_date", T.DateType()),  # partition key (IngestDate)
+])
+STAGING_ENVELOPE = STAGING_SCHEMA.fieldNames()
 
 _ENVELOPE_SCHEMA = (
     "struct<_metadata: struct<type: string, fetchedAt: string,"
@@ -112,15 +118,16 @@ def stage_json(
 def read_staging(
     spark: SparkSession, staging_path: str, ingest_date: str | None = None
 ) -> DataFrame:
-    """Scan staging, optionally pruned to one date partition (S3,
-    /root/reference/USQL/ProcessDaily.usql:33-35)."""
-    df = spark.read.parquet(staging_path)
+    """Scan staging with its declared schema (``STAGING_SCHEMA``, so no
+    Spark job reads the footers), optionally pruned to one date partition
+    (S3, /root/reference/USQL/ProcessDaily.usql:33-35)."""
+    df = spark.read.schema(STAGING_SCHEMA).parquet(staging_path)
     if ingest_date is not None:
         df = df.filter(F.col("ingest_date") == ingest_date)
     return df
 
 
-def parse_entity(filtered: DataFrame, schema: StructType) -> DataFrame:
+def parse_entity(filtered: DataFrame, schema: T.StructType) -> DataFrame:
     """Typed parse of one entity family's raw documents: replaces
     ``data_raw`` with a ``data`` struct.
 

@@ -25,7 +25,11 @@ from ghcrawler_datalake_etl_spark.plans.catalog import (
     spec_for,
 )
 from ghcrawler_datalake_etl_spark.sources.sinks import ParquetCatalog
-from ghcrawler_datalake_etl_spark.sources.staging import parse_entity, stage_json
+from ghcrawler_datalake_etl_spark.sources.staging import (
+    STAGING_SCHEMA,
+    parse_entity,
+    stage_json,
+)
 from tests.conftest import meta, write_docs
 from tests.test_patterns import DAY1, T1
 
@@ -70,12 +74,25 @@ def test_pattern_b_key_is_a_parent_column(spec):
     assert spec.child_id not in spec.key
 
 
-#: the staged columns ``run_daily`` parses (``sources.staging``)
-STAGED = (
-    "entity_name string, ingest_date date, fetched_at timestamp, "
-    "processed_at timestamp, deleted_at timestamp, urn string, "
-    "source_file string, data_raw string"
-)
+@pytest.mark.parametrize("spec", CATALOG, ids=lambda s: s.table)
+def test_every_spec_names_each_column_once(spec):
+    """A field group embedded in the wrong place repeats a column name:
+    plan analysis accepts duplicate output columns, and only the write
+    rejects them."""
+    names = [
+        "Urn", *_ENVELOPE, *(f.name for f in spec.fields + spec.element_fields)
+    ] + ([spec.child_id] if spec.child_id else [])
+    assert len(names) == len(set(names)), sorted(n for n in names if names.count(n) > 1)
+
+
+@pytest.mark.parametrize("table,width", [("Repo", 108), ("Event", 132), ("PullRequest", 143)])
+def test_reference_parity_widths(spark, table, width):
+    """The widths of the README's parity row, envelope included: the
+    shared field groups expand to the reference's full column lists."""
+    spec = spec_for(table)
+    staged = spark.createDataFrame([], STAGING_SCHEMA).filter(spec.entity_filter)
+    day = parse_entity(staged, ENTITY_SCHEMAS[spec.entity_filter])
+    assert len(build_table(spec, day, None).columns) == width
 
 
 @pytest.mark.parametrize("spec", CATALOG, ids=lambda s: s.table)
@@ -90,7 +107,7 @@ def test_every_spec_plan_analyzes(spark, spec):
     saved = spark.conf.get(conf)
     spark.conf.set(conf, "true")
     try:
-        staged = spark.createDataFrame([], STAGED).filter(spec.entity_filter)
+        staged = spark.createDataFrame([], STAGING_SCHEMA).filter(spec.entity_filter)
         day = parse_entity(staged, ENTITY_SCHEMAS[spec.entity_filter])
         built = build_table(spec, day, None)
         assert set(spec.key) <= set(built.columns)
